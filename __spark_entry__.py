@@ -113,12 +113,11 @@ def _bm25_head(terms: list[str], k: int, mode: str = "or"):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         qe = _engine_for(spark, sf_dir)
         # freshness alone isn't enough: a tier someone built at a SMALLER
-        # head_size over the same postings snapshots would pass
-        # _heads_fresh and serve truncated heads — check the pinned size
-        pinned = (
-            qe.store.manifest().get("stages", {}).get("heads", {})
-        ).get("head_size")
-        if not qe._heads_fresh() or pinned != FULL_COVERAGE:
+        # head_size over the same postings snapshots would be fresh and
+        # serve truncated heads — check the pinned size too
+        st = qe.pin()
+        pinned = st.snap.stages.get("heads", {}).get("head_size")
+        if not st.heads_fresh or pinned != FULL_COVERAGE:
             from excelastic_spark.heads import build_heads
 
             build_heads(spark, qe.store, head_size=FULL_COVERAGE)

@@ -64,7 +64,7 @@ from excelastic_spark.tokenizer import tokenize_triples
 
 # bumped whenever a table layout/semantic changes: stale warehouses then
 # fingerprint-mismatch and rebuild instead of resuming onto the old layout
-LAYOUT_VERSION = 2
+LAYOUT_VERSION = 3
 
 POSTINGS_SCHEMA = StructType(
     [
@@ -74,8 +74,6 @@ POSTINGS_SCHEMA = StructType(
         StructField("doc_ids", BinaryType(), False),
         StructField("tfs", BinaryType(), False),
         StructField("doclens", BinaryType(), False),
-        StructField("block_last", BinaryType(), False),
-        StructField("block_max", BinaryType(), False),
     ]
 )
 
@@ -161,21 +159,18 @@ _PA_POSTINGS_FIELDS = [
     ("doc_ids", "binary"),
     ("tfs", "binary"),
     ("doclens", "binary"),
-    ("block_last", "binary"),
-    ("block_max", "binary"),
 ]
 
 
-def _encode_runs(terms, salts, ids, tfs, dls, gstarts, gends, B, avgdl, k1, b):
+def _encode_runs(terms, salts, ids, tfs, dls, gstarts, gends):
     """Vectorized encode of CONTIGUOUS (term, salt) runs: one varint call
-    per column over the whole span, sliced per group by byte offsets;
-    block-max metadata via reduceat. ``terms`` is a per-group sequence
-    (len == len(gstarts)); the numeric arrays cover exactly the span
-    [gstarts[0], gends[-1]) re-indexed from 0."""
+    per column over the whole span, sliced per group by byte offsets.
+    ``terms`` is a per-group sequence (len == len(gstarts)); the numeric
+    arrays cover exactly the span [gstarts[0], gends[-1]) re-indexed from
+    0. No block metadata is stored: queries derive block bounds from the
+    decoded postings with query-time stats (query.py sorted_postings)."""
     n = ids.size
-    ngroups = gstarts.size
     glens = gends - gstarts
-    gid = np.repeat(np.arange(ngroups), glens)
 
     # delta encode doc_ids with a reset at each group start
     deltas = ids.copy()
@@ -192,22 +187,6 @@ def _encode_runs(terms, salts, ids, tfs, dls, gstarts, gends, B, avgdl, k1, b):
     loff = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(llen, out=loff[1:])
 
-    # block-max metadata: blocks are B-runs within each group (the
-    # within-group index resets at group starts, so blocks never span
-    # groups)
-    within = np.arange(n, dtype=np.int64) - gstarts[gid]
-    bstart_rows = np.flatnonzero(within % B == 0)
-    bend_rows = np.append(bstart_rows[1:], n) - 1
-    impacts = codec.bm25_impact(tfs, dls, avgdl, k1, b)
-    bmax = np.maximum.reduceat(impacts, bstart_rows)
-    blast = ids[bend_rows]
-    bgid = gid[bstart_rows]
-    bcounts = np.bincount(bgid, minlength=ngroups)
-    bo = np.zeros(ngroups + 1, dtype=np.int64)
-    np.cumsum(bcounts, out=bo[1:])
-    blast_le = np.ascontiguousarray(blast, dtype="<u8")
-    bmax_le = np.ascontiguousarray(bmax, dtype="<f8")
-
     s0, s1 = gstarts, gends
     return {
         "term": list(terms),
@@ -216,12 +195,6 @@ def _encode_runs(terms, salts, ids, tfs, dls, gstarts, gends, B, avgdl, k1, b):
         "doc_ids": [dbuf[doff[a]:doff[z]] for a, z in zip(s0, s1)],
         "tfs": [tbuf[toff[a]:toff[z]] for a, z in zip(s0, s1)],
         "doclens": [lbuf[loff[a]:loff[z]] for a, z in zip(s0, s1)],
-        "block_last": [
-            blast_le[bo[g]:bo[g + 1]].tobytes() for g in range(ngroups)
-        ],
-        "block_max": [
-            bmax_le[bo[g]:bo[g + 1]].tobytes() for g in range(ngroups)
-        ],
     }
 
 
@@ -274,7 +247,7 @@ def _coalesce_batches(batches, target_rows: int):
         yield from flush(buf)
 
 
-def _encode_sorted_stream(cfg: EngineConfig, avgdl: float):
+def _encode_sorted_stream(cfg: EngineConfig):
     """mapInArrow kernel over a hash(term, salt) shuffle partition already
     SORTED by (term, salt, doc_id) — the Tungsten sort in the exchange
     replaces the old in-Python lexsort/factorize/gather, and the kernel
@@ -288,8 +261,6 @@ def _encode_sorted_stream(cfg: EngineConfig, avgdl: float):
     partition) — a 100 TB build can size shuffle partitions to the JVM's
     comfort without a Python materialization cliff, and the JVM sort
     spills gracefully where a pandas concat would OOM."""
-    k1, b, B = cfg.k1, cfg.b, cfg.block_size
-
     def flush_carry(carry):
         term, salt, parts = carry
         ids = np.concatenate([p[0] for p in parts])
@@ -297,7 +268,7 @@ def _encode_sorted_stream(cfg: EngineConfig, avgdl: float):
         dls = np.concatenate([p[2] for p in parts])
         return _encode_runs(
             [term], np.array([salt]), ids, tfs, dls,
-            np.array([0]), np.array([ids.size]), B, avgdl, k1, b,
+            np.array([0]), np.array([ids.size]),
         )
 
     coalesce_rows = cfg.encode_coalesce_rows
@@ -365,7 +336,6 @@ def _encode_sorted_stream(cfg: EngineConfig, avgdl: float):
                             ids[mid_lo:last], tfs[mid_lo:last],
                             dls[mid_lo:last],
                             gstarts - mid_lo, gends - mid_lo,
-                            B, avgdl, k1, b,
                         )
                     )
                 carry = (
@@ -381,7 +351,7 @@ def _encode_sorted_stream(cfg: EngineConfig, avgdl: float):
 
 
 def encode_postings(
-    triples: DataFrame, terms: DataFrame, cfg: EngineConfig, avgdl: float
+    triples: DataFrame, terms: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """Shared postings pipeline: salt hot terms (broadcast ONLY the salted
     subset of the terms table), ONE (term, salt) shuffle whose reduce side
@@ -423,7 +393,7 @@ def encode_postings(
     return (
         salted.repartition(cfg.shuffle_partitions, "term", "salt")
         .sortWithinPartitions("term", "salt", "doc_id")
-        .mapInArrow(_encode_sorted_stream(cfg, avgdl), schema=POSTINGS_SCHEMA)
+        .mapInArrow(_encode_sorted_stream(cfg), schema=POSTINGS_SCHEMA)
         .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
         .repartition(cfg.n_buckets, "bucket")
     )
@@ -668,7 +638,6 @@ class IndexBuilder:
         # ---- stage: stats (assembled from observations; falls back to
         # cheap metadata counts when resuming past a stage; must NOT read
         # the docs table — it may still be building on the other thread) ----
-        avgdl = None
         if not (store.stage_done("stats", fp) and store.has_table("stats")):
             st = store.manifest()["stages"]
             n_docs = counts.get("n_docs") or st.get("ingest", {}).get("n_docs") \
@@ -703,14 +672,11 @@ class IndexBuilder:
             )
             store.commit_stage("stats", fp)
 
-        if avgdl is None:  # resuming past stats: read it back
-            avgdl = store.read_table(spark, "stats").collect()[0]["avgdl"]
-
         # ---- stage: postings ----
         if not (store.stage_done("postings", fp) and store.has_table("postings")):
             self._emit("postings", 80.0)
             t0 = time.time()
-            postings = encode_postings(triples, terms, cfg, avgdl)
+            postings = encode_postings(triples, terms, cfg)
             got = self._write_observed(
                 postings,
                 "postings",
@@ -721,8 +687,6 @@ class IndexBuilder:
                         F.length("doc_ids")
                         + F.length("tfs")
                         + F.length("doclens")
-                        + F.length("block_last")
-                        + F.length("block_max")
                     ),
                 },
                 partition_by=["bucket"],

@@ -29,6 +29,7 @@ import os
 import threading
 import time
 import uuid
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +38,41 @@ try:
     import fcntl
 except ImportError:  # non-POSIX fallback: thread lock only
     fcntl = None
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One committed index version: the manifest parsed once. A reader
+    that resolves every table through one Snapshot reads one version end
+    to end, whatever commits land meanwhile — the dirs it names stay on
+    disk for ``vacuum``'s grace window after the commit that replaced
+    them (the Iceberg snapshot-read analog).
+
+    ``version`` is the ``(mtime_ns, size)`` of the manifest file this was
+    parsed from (None when no manifest exists): a reader compares it with
+    one ``os.stat`` to decide whether a newer version is out."""
+
+    root: str
+    version: tuple[int, int] | None
+    tables: dict[str, list[str]]
+    stages: dict[str, dict[str, Any]]
+    config: dict[str, Any] | None
+
+    def paths(self, table: str) -> list[str]:
+        loc = self.tables.get(table)
+        if loc is None:
+            raise KeyError(f"table {table!r} not committed in {self.root}")
+        return loc
+
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        paths = self.paths(table)
+        # one read per snapshot dir, unioned: each dir does its own hive
+        # partition discovery (a single multi-root read conflicts);
+        # partition pruning pushes into every branch of the union
+        df = spark.read.parquet(paths[0])
+        for p in paths[1:]:
+            df = df.unionByName(spark.read.parquet(p))
+        return df
 
 
 class IndexStore:
@@ -105,6 +141,28 @@ class IndexStore:
         with open(self.manifest_path) as f:
             return json.load(f)
 
+    def snapshot(self) -> Snapshot:
+        """The current committed version, parsed once. The version stamp is
+        taken from the opened file itself, so it always names the manifest
+        the tables came from (the swap replaces the file, never edits it)."""
+        try:
+            with open(self.manifest_path) as f:
+                st = os.fstat(f.fileno())
+                m = json.load(f)
+            version = (st.st_mtime_ns, st.st_size)
+        except FileNotFoundError:
+            m, version = {}, None
+        return Snapshot(
+            root=self.root,
+            version=version,
+            tables={
+                t: loc if isinstance(loc, list) else [loc]
+                for t, loc in m.get("tables", {}).items()
+            },
+            stages=m.get("stages", {}),
+            config=m.get("config"),
+        )
+
     def _commit_manifest(self, m: dict[str, Any]) -> None:
         tmp = self.manifest_path + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
@@ -113,14 +171,11 @@ class IndexStore:
 
     # -------------------------------------------------------------- tables
 
-    def table_path(self, table: str) -> str:
-        loc = self.manifest()["tables"].get(table)
-        if loc is None:
-            raise KeyError(f"table {table!r} not committed in {self.root}")
-        return loc
+    def table_path(self, table: str) -> list[str]:
+        return self.snapshot().paths(table)
 
     def has_table(self, table: str) -> bool:
-        return table in self.manifest()["tables"]
+        return table in self.snapshot().tables
 
     def stage_table(
         self,
@@ -194,23 +249,26 @@ class IndexStore:
         return path
 
     def vacuum(self, grace_sec: float = 3600.0) -> list[str]:
-        """Remove snapshot dirs not referenced by the manifest (orphans from
-        crashed multi-table transactions). Returns the removed paths.
+        """Remove snapshot dirs not referenced by the manifest. Returns the
+        removed paths.
 
-        ``grace_sec``: unreferenced dirs whose mtime is younger than this
-        are skipped — staging is unregistered (only the manifest swap is
-        locked), so a concurrent append in another thread/process may have
-        dirs staged-but-not-yet-published; deleting those would leave the
-        append's freshly committed manifest pointing at missing paths. An
-        in-flight stage is minutes old at most; a crash orphan survives one
-        grace window and is reclaimed by the next vacuum. Pass 0 only when
-        no concurrent writers can exist (tests, offline maintenance)."""
+        ``grace_sec`` is a time-bounded read lease, with no registry: a dir
+        that a commit replaced (merge, overwrite) is kept until ``grace_sec``
+        after THAT commit, as recorded in the manifest's ``snapshots`` log,
+        so a reader that pinned the older version — a lazily executing
+        distributed plan, an in-flight lookup — can still read it. A plan
+        that outlives its lease fails with a file-not-found error, never a
+        wrong answer. A dir no commit ever published (a crash orphan, or a
+        concurrent writer's in-flight staging) is kept until ``grace_sec``
+        after its mtime. Pass 0 only when no concurrent readers or writers
+        can exist (tests, offline maintenance)."""
         import shutil
 
         m = self.manifest()
         live: set[str] = set()
         for loc in m["tables"].values():
             live.update(loc if isinstance(loc, list) else [loc])
+        replaced = _replaced_at(m["snapshots"])
         now = time.time()
         removed = []
         for table in os.listdir(self.root):
@@ -222,25 +280,17 @@ class IndexStore:
                 if not snap.startswith("snap-") or p in live:
                     continue
                 try:
-                    age = now - os.path.getmtime(p)
+                    since = replaced.get(p) or os.path.getmtime(p)
                 except OSError:
                     continue  # already gone (concurrent vacuum)
-                if age < grace_sec:
-                    continue  # possibly an in-flight stage — keep
+                if now - since < grace_sec:
+                    continue  # leased to a reader, or an in-flight stage
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(p)
         return removed
 
     def read_table(self, spark: SparkSession, table: str) -> DataFrame:
-        loc = self.table_path(table)
-        paths = loc if isinstance(loc, list) else [loc]
-        # one read per snapshot, unioned: each snapshot root does its own
-        # hive partition discovery (a single multi-root read conflicts);
-        # partition pruning pushes into every branch of the union
-        df = spark.read.parquet(paths[0])
-        for p in paths[1:]:
-            df = df.unionByName(spark.read.parquet(p))
-        return df
+        return self.snapshot().read(spark, table)
 
     def drop(self) -> None:
         """DELETE <index> analog (reference: ElasticWriter.java:186-194,
@@ -292,3 +342,20 @@ class IndexStore:
         with open(self.metrics_path, "a") as f:
             f.write(json.dumps(rec, sort_keys=True) + "\n")
         return rec
+
+
+def _replaced_at(log: list[dict[str, Any]]) -> dict[str, float]:
+    """path -> ts of the commit that took it out of the manifest, replayed
+    from the commit log in order (an overwrite replaces every live path of
+    its table; an append adds one)."""
+    live: dict[str, list[str]] = {}
+    out: dict[str, float] = {}
+    for rec in log:
+        table, path = rec["table"], rec["path"]
+        if rec.get("mode") == "append":
+            live.setdefault(table, []).append(path)
+            continue
+        for old in live.get(table, []):
+            out.setdefault(old, rec["ts"])
+        live[table] = [path]
+    return out

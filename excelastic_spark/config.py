@@ -149,17 +149,19 @@ class EngineConfig:
             f"{f}={getattr(self, f)}" for f in self._LAYOUT_FIELDS
         )
 
+    def with_layout(self, saved: dict | None) -> "EngineConfig":
+        """This config overridden by an index's persisted layout params."""
+        if not saved:
+            return self
+        return self.with_overrides(
+            **{k: v for k, v in saved.items() if k in self._LAYOUT_FIELDS}
+        )
+
     @classmethod
     def from_store(cls, store, base: "EngineConfig | None" = None) -> "EngineConfig":
         """Config for an EXISTING index: process defaults (or ``base``)
         overridden by the layout parameters saved at build time."""
-        cfg = base or cls()
-        saved = store.load_config()
-        if saved:
-            cfg = cfg.with_overrides(
-                **{k: v for k, v in saved.items() if k in cls._LAYOUT_FIELDS}
-            )
-        return cfg
+        return (base or cls()).with_layout(store.load_config())
 
     def tiny(self) -> "EngineConfig":
         """Shrunk thresholds: force the at-scale code paths at toy scale

@@ -162,11 +162,6 @@ def _derive_segment_heads(
     )
 
 
-def _postings_paths(store: IndexStore) -> list[str]:
-    loc = store.table_path("postings")
-    return loc if isinstance(loc, list) else [loc]
-
-
 def _commit_heads(
     store: IndexStore,
     postings_paths: list[str],
@@ -219,7 +214,7 @@ def build_heads(
     st = store.read_table(spark, "stats").collect()[0]
     avgdl = float(avgdl_ref) if avgdl_ref is not None else float(st["avgdl"])
     k1, b = float(st["k1"]), float(st["b"])
-    seg_paths = _postings_paths(store)
+    seg_paths = store.table_path("postings")
     heads_paths: list[str] = []
     for p in seg_paths:
         heads = _derive_segment_heads(spark, p, head_size, avgdl, k1, b)
@@ -248,7 +243,7 @@ def refresh_heads(spark: SparkSession, store: IndexStore) -> list[str]:
     head_size = int(meta["head_size"])
     avgdl, k1, b = float(meta["avgdl_ref"]), float(meta["k1"]), float(meta["b"])
     segments = dict(meta["segments"])
-    cur = _postings_paths(store)
+    cur = store.table_path("postings")
     if list(meta.get("postings", [])) == cur:
         return []
     desired: list[str] = []

@@ -49,7 +49,7 @@ from pyspark.sql.types import (
 )
 
 from excelastic_spark import codec
-from excelastic_spark.catalog import IndexStore
+from excelastic_spark.catalog import IndexStore, Snapshot
 from excelastic_spark.config import EngineConfig
 from excelastic_spark.wand import (
     TermPostings,
@@ -81,8 +81,6 @@ WAND_DOMINANT_FRACTION = 0.05
 DENSE_MAX_SPAN = 64_000_000  # 512 MB float64 accumulator ceiling
 DENSE_MIN_FILL = 8  # use dense when total postings >= span/8
 
-_UNSET = object()  # initial manifest-version sentinel (never == a stat value)
-
 
 def _wand_promising(
     ns: list[int], ubs: list[float], k: int, total: int
@@ -109,7 +107,7 @@ def _fused_decode(
     parts: list[dict],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, bool]:
     """Decode one term's salted rows into (doc_ids, tfs, doclens,
-    presorted) in THREE vectorized varint passes (see _lookup_raw)."""
+    presorted) in THREE vectorized varint passes (see lookup_raw)."""
     parts = sorted(parts, key=lambda r: r["salt"])
     ns = np.array([int(r["n"]) for r in parts], dtype=np.int64)
     deltas = codec.decode_varint(b"".join(bytes(r["doc_ids"]) for r in parts))
@@ -147,13 +145,12 @@ class RawPostings:
     presorted: bool  # True when a single salted row (already ascending)
     # memoized salt-merged form: a hot cached term must not pay the
     # O(df log df) argsort on EVERY sorted-path query (WAND / galloping
-    # AND / exhaustive union). Written exactly once by _sorted_postings
-    # under the engine's cache lock (losers of the build race return the
-    # winner's value and charge nothing to the LRU budget); lock-free
-    # readers see None (take the slow path) or the complete TermPostings,
-    # never a torn (ids, weights) pair; safe under the manifest-version-
-    # keyed cache because impacts/idf (and thus block bounds) are fixed
-    # for the lifetime of a cache generation.
+    # AND / exhaustive union). Written exactly once by
+    # SnapshotState.sorted_postings under the state's lock (losers of the
+    # build race return the winner's value and charge nothing to the LRU
+    # budget); lock-free readers see None (take the slow path) or the
+    # complete TermPostings, never a torn (ids, weights) pair. Impacts/idf
+    # (and thus block bounds) are fixed for the lifetime of the state.
     sorted_tp: "TermPostings | None" = None
 
     @property
@@ -183,139 +180,115 @@ class QueryResult:
         )
 
 
-class QueryEngine:
+class SnapshotState:
+    """Everything a query reads, for ONE committed index version: the
+    parsed manifest (table paths, stage entries, layout config), its stats
+    row, pyarrow datasets over its dirs, and its decoded-postings LRU.
+
+    A query pins one state at entry (:meth:`QueryEngine.pin`) and reads
+    only through it, so it sees one version end to end by construction —
+    no re-stat, no retry. A commit makes the next ``pin`` build a new state
+    and swap it in; queries still running on the old one finish on it
+    (``IndexStore.vacuum`` keeps its dirs for the grace window after the
+    commit that replaced them), and the old caches go with it."""
+
+    # what the decode needs: the hive partition column stays out of the rows
+    POSTING_COLUMNS = ["term", "salt", "n", "doc_ids", "tfs", "doclens"]
+
     def __init__(
         self,
         spark: SparkSession,
-        store: IndexStore,
-        cfg: EngineConfig | None = None,
-        cache_mb: float = 256.0,
+        snap: Snapshot,
+        cfg: EngineConfig,
+        cache_cap: int,
     ):
         self.spark = spark
-        self.store = store
-        # layout params (buckets, block size, salting) come from the config
-        # persisted at build time; caller cfg supplies execution knobs
-        self.cfg = EngineConfig.from_store(store, cfg)
-        self._bucket_cache: dict[str, int] = {}
+        self.snap = snap
+        # layout params (buckets, block size, salting) from THIS version's
+        # persisted config; the caller's cfg supplies execution knobs. A
+        # rebuild under another layout is a new state with its own buckets.
+        self.cfg = cfg.with_layout(snap.config)
+        st = self._stats_row()
+        self.n_docs = int(st["n_docs"])
+        self.avgdl = float(st["avgdl"])
+        self.k1 = float(st["k1"])
+        self.b = float(st["b"])
+        self._buckets: dict[str, int] = {}
+        self._datasets: dict[str, Any] = {}
         # decoded-postings LRU (a head node's hot terms re-read + re-decode
         # the same parquet rows on every query otherwise): term ->
-        # (RawPostings, decoded bytes), capped by total decoded bytes.
+        # (RawPostings, charged bytes), capped by total charged bytes.
         # RawPostings are treated as immutable everywhere (scorers build
         # derived arrays, never write in place), so entries are shared
         # safely across QueryExecutor worker threads.
-        self._cache_lock = threading.Lock()
-        self._cache_cap = int(cache_mb * (1 << 20))
-        self._raw_cache: OrderedDict[str, tuple[RawPostings, int]] = (
+        self.lock = threading.Lock()
+        self.cache_cap = cache_cap
+        self.raw_cache: OrderedDict[str, tuple[RawPostings, int]] = (
             OrderedDict()
         )
-        self._cache_bytes = 0
-        # distinct unset sentinel: _current_manifest_version() returns None
-        # for a MISSING manifest, and None == None would skip the initial
-        # stats load (leaving n_docs/avgdl unset -> AttributeError later
-        # instead of the clear "table 'stats' not committed" error)
-        self._manifest_version: Any = _UNSET
-        self._check_version()  # loads stats + pins the snapshot version
+        self.cache_bytes = 0
 
-    # -------------------------------------------------- snapshot version ----
-
-    def _current_manifest_version(self) -> tuple[int, int] | None:
-        try:
-            st = os.stat(self.store.manifest_path)
-            return (st.st_mtime_ns, st.st_size)
-        except OSError:
-            return None
-
-    def _check_version(self) -> None:
-        """Cheap (one stat()) snapshot-consistency gate on every query
-        entry point: when the manifest changed (append/merge/rebuild in
-        this or another process), drop every manifest-derived cache —
-        pyarrow datasets, decoded postings — and reload collection stats,
-        so a long-lived engine serves post-append results instead of the
-        snapshot it was constructed against. Stats can't change without
-        the manifest changing (every append/build commits stats through
-        the same atomic swap), so version-keying the caches on the
-        manifest file is sufficient for bit-correct scores."""
-        v = self._current_manifest_version()
-        with self._cache_lock:
-            if v == self._manifest_version:
-                return
-            self._ads_cache = {}
-            self._raw_cache.clear()
-            self._cache_bytes = 0
-            st = self._read_stats_row()
-            self.n_docs = int(st["n_docs"])
-            self.avgdl = float(st["avgdl"])
-            self.k1 = float(st["k1"])
-            self.b = float(st["b"])
-            self._manifest_version = v
-
-    def _stats_snapshot(self) -> tuple[int, float, float, float]:
-        """(n_docs, avgdl, k1, b) read atomically — callers must not read
-        the four fields one-by-one outside the lock, or a concurrent
-        _check_version swap can hand them a torn mix of two snapshots."""
-        with self._cache_lock:
-            return self.n_docs, self.avgdl, self.k1, self.b
-
-    def _read_stats_row(self) -> dict:
+    def _stats_row(self) -> dict:
         """The single stats row, via a local pyarrow read when possible
         (no Spark job on engine construction / snapshot refresh)."""
+        paths = self.snap.paths("stats")  # KeyError on an unbuilt index
         try:
             import pyarrow.dataset as pads
 
-            loc = self.store.table_path("stats")
-            paths = loc if isinstance(loc, list) else [loc]
             return pads.dataset(
                 paths, format="parquet"
             ).to_table().to_pylist()[0]
-        except KeyError:
-            raise
         except Exception:
-            return self.store.read_table(self.spark, "stats").collect()[
-                0
-            ].asDict()
+            return self.snap.read(self.spark, "stats").collect()[0].asDict()
+
+    @property
+    def heads_fresh(self) -> bool:
+        """The head tier is bound to the postings snapshots it was derived
+        from; any append/merge changes that list and invalidates it."""
+        meta = self.snap.stages.get("heads")
+        if not meta or "heads" not in self.snap.tables:
+            return False
+        postings = self.snap.tables.get("postings")
+        return list(meta.get("postings", [])) == postings
 
     # ---------------------------------------------------------- lookup ----
 
-    def _buckets_for(self, terms: list[str]) -> list[int]:
+    def buckets_for(self, terms: list[str]) -> list[int]:
         # driver-side XXH64 twin of build.bucket_expr (tests/test_xxh.py
         # proves bit-equality with the Spark expression) — no JVM
         # round-trip on the cold-query path
         for t in terms:
-            if t not in self._bucket_cache:
-                self._bucket_cache[t] = term_bucket(t, self.cfg.n_buckets)
-        return sorted({self._bucket_cache[t] for t in terms})
+            if t not in self._buckets:
+                self._buckets[t] = term_bucket(t, self.cfg.n_buckets)
+        return sorted({self._buckets[t] for t in terms})
 
-    def _dataset(self, table: str):
-        """pyarrow dataset over a table's snapshots (hive bucket dirs) —
-        the low-latency search-head path: term lookups become local parquet
-        reads with dictionary/bucket filters, no Spark job on the hot path.
-        Returns None for non-local storage (falls back to the Spark scan)."""
-        cache = getattr(self, "_ads_cache", None)
-        if cache is None:
-            cache = self._ads_cache = {}
-        if table in cache:
-            return cache[table]
-        try:
-            import pyarrow.dataset as pads
+    def dataset(self, table: str):
+        """pyarrow dataset over a table's snapshot dirs (hive bucket dirs)
+        — the low-latency search-head path: term lookups become local
+        parquet reads with dictionary/bucket filters, no Spark job on the
+        hot path. None for non-local storage (falls back to a Spark scan)."""
+        if table not in self._datasets:
+            try:
+                import pyarrow.dataset as pads
 
-            loc = self.store.table_path(table)
-            paths = loc if isinstance(loc, list) else [loc]
-            parts = [
-                pads.dataset(p, format="parquet", partitioning="hive")
-                for p in paths
-            ]
-            cache[table] = parts[0] if len(parts) == 1 else pads.dataset(parts)
-        except Exception:
-            cache[table] = None
-        return cache[table]
+                parts = [
+                    pads.dataset(p, format="parquet", partitioning="hive")
+                    for p in self.snap.paths(table)
+                ]
+                self._datasets[table] = (
+                    parts[0] if len(parts) == 1 else pads.dataset(parts)
+                )
+            except Exception:
+                self._datasets[table] = None
+        return self._datasets[table]
 
-    def _fetch_rows(
+    def fetch_rows(
         self, table: str, terms: list[str], columns: list[str] | None = None
     ) -> list[dict]:
         """Rows for the query terms via pyarrow (local) or Spark scan, from
         any bucket-partitioned term-keyed table (postings, heads, terms)."""
-        buckets = self._buckets_for(terms)
-        dset = self._dataset(table)
+        buckets = self.buckets_for(terms)
+        dset = self.dataset(table)
         if dset is not None:
             import pyarrow.dataset as pads
 
@@ -333,32 +306,22 @@ class QueryEngine:
                 filter=flt, columns=columns, use_threads=False
             ).to_table()
             return tbl.to_pylist()
-        df = self.store.read_table(self.spark, table).filter(
+        df = self.snap.read(self.spark, table).filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
         if columns:
             df = df.select(*columns)
         return [r.asDict() for r in df.collect()]
 
-    # the query path recomputes block bounds from decoded impacts (see
-    # _sorted_postings), so the stored block_last/block_max bytes are dead
-    # weight at lookup time — projecting them out saves ~3-6% of lookup I/O
-    # per term (measured: tools/profile_lookup.py)
-    POSTING_COLUMNS = ["term", "salt", "n", "doc_ids", "tfs", "doclens"]
-
-    def _fetch_posting_rows(self, terms: list[str]) -> list[dict]:
-        return self._fetch_rows("postings", terms, columns=self.POSTING_COLUMNS)
-
-    def _postings_scan(self, terms: list[str]) -> DataFrame:
+    def postings_scan(self, terms: list[str]) -> DataFrame:
         """Pruned scan: partition pruning on bucket + predicate pushdown on
         term. Reads only the query terms' rows from the index."""
-        pf = self.store.read_table(self.spark, "postings")
-        buckets = self._buckets_for(terms)
-        return pf.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        return self.snap.read(self.spark, "postings").filter(
+            F.col("bucket").isin(self.buckets_for(terms))
+            & F.col("term").isin(terms)
         )
 
-    def _lookup_raw(self, uniq: list[str]) -> dict[str, RawPostings]:
+    def lookup_raw(self, uniq: list[str]) -> dict[str, RawPostings]:
         """Fetch + decode postings for the (deduped, sorted) query terms —
         NO sorting pass: the dense scorer never needs the salt-merge.
 
@@ -372,117 +335,79 @@ class QueryEngine:
         row lengths are stored in "n".
 
         Decoded-postings LRU: hot terms skip fetch AND decode entirely on
-        repeat lookups; the cache is dropped wholesale whenever the
-        manifest changes (_check_version), which covers both new postings
-        segments and the stats (avgdl/n_docs) the cached impacts/idf were
-        computed with.
-
-        Snapshot consistency: a manifest commit landing between the fetch
-        and the seed is detected by a post-fetch re-stat and the lookup
-        RETRIES against the new version (bounded — commits are rare:
-        appends/merges, never per-query). On retry exhaustion (a writer
-        committing faster than a lookup completes, i.e. a pathological
-        churn) the final attempt's result is returned WITHOUT seeding the
-        cache: each attempt re-reads stats, so that result mixes
-        generations only if yet another commit landed inside the final
-        attempt's own fetch window."""
-        for _attempt in range(8):
-            self._check_version()
-            out: dict[str, RawPostings] = {}
-            missing: list[str] = []
-            with self._cache_lock:
-                # snapshot version AND stats together: reading self.n_docs
-                # etc. outside the lock could mix one version's cached
-                # postings with another version's stats mid-swap (torn read
-                # across the four one-by-one field assignments in
-                # _check_version)
-                ver = self._manifest_version
-                n_docs, avgdl = self.n_docs, self.avgdl
-                k1, b = self.k1, self.b
-                for t in uniq:
-                    hit = self._raw_cache.get(t)
-                    if hit is not None:
-                        self._raw_cache.move_to_end(t)
-                        out[t] = hit[0]
-                    else:
-                        missing.append(t)
-            if not missing:
-                return out
-            rows = self._fetch_posting_rows(missing)
-            fresh: dict[str, RawPostings] = {}
-            for term, parts in _group_by_term(rows).items():
-                ids, tfs, dls, presorted = _fused_decode(parts)
-                idf = float(codec.bm25_idf(n_docs, int(ids.size)))
-                impacts = codec.bm25_impact(tfs, dls, avgdl, k1, b)
-                fresh[term] = RawPostings(
-                    term=term,
-                    doc_ids=ids,
-                    impacts=impacts,
-                    idf=idf,
-                    presorted=presorted,
-                )
-            out.update(fresh)
-            # re-stat the manifest (not just the engine's cached version —
-            # a single-threaded engine never observes a mid-lookup commit
-            # otherwise): one ~1us stat per COLD lookup buys detection of
-            # the torn window in every thread, not only under concurrency
-            cur = self._current_manifest_version()
-            with self._cache_lock:
-                if self._manifest_version == ver and cur == ver:
-                    self._seed_cache(fresh)
-                    return out
-        return out  # retry budget exhausted (see docstring) — don't seed
-
-    def _seed_cache(self, fresh: dict[str, RawPostings]) -> None:
-        """Insert freshly decoded terms into the LRU (cache lock held)."""
-        for t, raw in fresh.items():
-            nbytes = int(raw.doc_ids.nbytes + raw.impacts.nbytes)
-            old = self._raw_cache.pop(t, None)
-            if old is not None:
-                self._cache_bytes -= old[1]
-            self._raw_cache[t] = (raw, nbytes)
-            self._cache_bytes += nbytes
-        self._evict_over_cap()
+        repeat lookups. The cache belongs to this state, so its impacts
+        and idf always match this state's stats and postings."""
+        out: dict[str, RawPostings] = {}
+        missing: list[str] = []
+        with self.lock:
+            for t in uniq:
+                hit = self.raw_cache.get(t)
+                if hit is not None:
+                    self.raw_cache.move_to_end(t)
+                    out[t] = hit[0]
+                else:
+                    missing.append(t)
+        if not missing:
+            return out
+        rows = self.fetch_rows("postings", missing, self.POSTING_COLUMNS)
+        fresh: dict[str, RawPostings] = {}
+        for term, parts in _group_by_term(rows).items():
+            ids, tfs, dls, presorted = _fused_decode(parts)
+            fresh[term] = RawPostings(
+                term=term,
+                doc_ids=ids,
+                impacts=codec.bm25_impact(
+                    tfs, dls, self.avgdl, self.k1, self.b
+                ),
+                idf=float(codec.bm25_idf(self.n_docs, int(ids.size))),
+                presorted=presorted,
+            )
+        with self.lock:
+            for t, raw in fresh.items():
+                nbytes = int(raw.doc_ids.nbytes + raw.impacts.nbytes)
+                old = self.raw_cache.pop(t, None)
+                if old is not None:
+                    self.cache_bytes -= old[1]
+                self.raw_cache[t] = (raw, nbytes)
+                self.cache_bytes += nbytes
+            self._evict_over_cap()
+        out.update(fresh)
+        return out
 
     def _evict_over_cap(self) -> None:
-        """LRU eviction to the byte cap (cache lock held) — ONE policy
-        shared by the seed path and the sorted-memo charge."""
-        while self._cache_bytes > self._cache_cap and self._raw_cache:
-            _, (_, nb) = self._raw_cache.popitem(last=False)
-            self._cache_bytes -= nb
+        """LRU eviction to the byte cap (lock held) — ONE policy shared by
+        the seed path and the sorted-memo charge."""
+        while self.cache_bytes > self.cache_cap and self.raw_cache:
+            _, (_, nb) = self.raw_cache.popitem(last=False)
+            self.cache_bytes -= nb
 
-    def _sorted_postings(self, raw: RawPostings) -> TermPostings:
+    def sorted_postings(self, raw: RawPostings) -> TermPostings:
         """Salt-merge (concat + stable sort) + block metadata: the
         TermPostings shape the sorted scorers (WAND, galloping AND,
         exhaustive union) consume. Memoized on the RawPostings (see its
-        docstring): LRU-hot terms pay the argsort once per cache
-        generation, not once per query."""
+        docstring): LRU-hot terms pay the argsort once per state, not once
+        per query."""
         if raw.sorted_tp is not None:
             return raw.sorted_tp
         ids, impacts = raw.doc_ids, raw.impacts
         if not raw.presorted:
             order = np.argsort(ids, kind="stable")
             ids, impacts = ids[order], impacts[order]
-        weights = raw.idf * impacts
-        # Block bounds are recomputed from the decoded impacts (one
-        # reduceat — negligible next to the decode) rather than read
-        # from storage: stored bounds were computed with BUILD-time
-        # stats, and after segment appends shift avgdl they could
-        # UNDER-estimate, making WAND pruning unsafe. Nothing on the
-        # query path reads the stored block_last/block_max — lookups
-        # project them out (POSTING_COLUMNS); they remain in the table
-        # for offline tooling and future pre-decode segment pruning.
+        # Block bounds come from the decoded impacts (one reduceat —
+        # negligible next to the decode), computed with QUERY-time stats:
+        # bounds computed at build time could UNDER-estimate after appends
+        # shift avgdl, making WAND pruning unsafe.
         blk_last, blk_imp = codec.block_metadata(
             ids, impacts, self.cfg.block_size
         )
         tp = TermPostings(
             term=raw.term,
             doc_ids=ids,
-            weights=weights,
+            weights=raw.idf * impacts,
             block_last=blk_last,
             block_ub=blk_imp * raw.idf,
         )
-        with self._cache_lock:
+        with self.lock:
             if raw.sorted_tp is not None:
                 # lost the memo race to a concurrent worker: return its
                 # (identical) TermPostings and charge NOTHING — charging
@@ -490,7 +415,7 @@ class QueryEngine:
                 # size and shrink effective cache capacity
                 return raw.sorted_tp
             raw.sorted_tp = tp  # single assignment: complete or absent
-            ent = self._raw_cache.get(raw.term)
+            ent = self.raw_cache.get(raw.term)
             if ent is not None and ent[0] is raw:
                 # the memo roughly doubles this entry's footprint — charge
                 # it to the LRU budget so cache_mb stays the real ceiling
@@ -498,16 +423,60 @@ class QueryEngine:
                     tp.doc_ids.nbytes + tp.weights.nbytes
                     + tp.block_last.nbytes + tp.block_ub.nbytes
                 )
-                self._raw_cache[raw.term] = (raw, ent[1] + extra)
-                self._cache_bytes += extra
+                self.raw_cache[raw.term] = (raw, ent[1] + extra)
+                self.cache_bytes += extra
                 self._evict_over_cap()
         return tp
+
+
+class QueryEngine:
+    def __init__(
+        self,
+        spark: SparkSession,
+        store: IndexStore,
+        cfg: EngineConfig | None = None,
+        cache_mb: float = 256.0,
+    ):
+        self.spark = spark
+        self.store = store
+        # execution knobs; each pinned state overlays its own layout params
+        self.cfg = cfg or EngineConfig()
+        self._cache_cap = int(cache_mb * (1 << 20))
+        self._state: SnapshotState | None = None
+        self._swap_lock = threading.Lock()
+        self.pin()  # an unbuilt index fails here: stats not committed
+
+    def pin(self) -> SnapshotState:
+        """The state of the current committed version — the ONE place this
+        module looks at the manifest (tests/test_hot_path_audit.py). One
+        ``os.stat`` per call decides freshness: when the manifest's
+        ``(mtime_ns, size)`` differs from the current state's, the manifest
+        is parsed once into a new state, swapped in with one assignment
+        (the lock only stops racing callers from each building one)."""
+        try:
+            st = os.stat(self.store.manifest_path)
+            version = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            version = None
+        state = self._state
+        if state is not None and state.snap.version == version:
+            return state
+        with self._swap_lock:
+            state = self._state
+            if state is None or state.snap.version != version:
+                state = SnapshotState(
+                    self.spark, self.store.snapshot(), self.cfg,
+                    self._cache_cap,
+                )
+                self._state = state
+        return state
 
     def lookup(self, terms: list[str]) -> dict[str, TermPostings]:
         """Fetch + decode + salt-merge postings for the query terms.
         Salted sub-lists cover disjoint docs; merge = concat + stable sort."""
-        raws = self._lookup_raw(sorted(set(terms)))
-        return {t: self._sorted_postings(r) for t, r in raws.items()}
+        st = self.pin()
+        raws = st.lookup_raw(sorted(set(terms)))
+        return {t: st.sorted_postings(r) for t, r in raws.items()}
 
     # ---------------------------------------------------------- search ----
 
@@ -523,8 +492,9 @@ class QueryEngine:
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
         t0 = time.time()
+        st = self.pin()
         uniq = sorted(set(terms))
-        raws = self._lookup_raw(uniq)
+        raws = st.lookup_raw(uniq)
         t1 = time.time()
         present = [raws[t] for t in uniq if t in raws]
         if not present or (mode == "and" and len(present) < len(uniq)):
@@ -545,7 +515,7 @@ class QueryEngine:
                 ids, scores = _dense_topk(present, k, conjunctive=True)
             else:
                 ids, scores = _and_score(
-                    [self._sorted_postings(r) for r in present], k
+                    [st.sorted_postings(r) for r in present], k
                 )
             return QueryResult(
                 ids, scores, lookup_sec=t1 - t0, score_sec=time.time() - t1
@@ -558,13 +528,13 @@ class QueryEngine:
         wstats = None
         if use_wand:
             ids, scores, wstats = wand_topk(
-                [self._sorted_postings(r) for r in present], k
+                [st.sorted_postings(r) for r in present], k
             )
         elif algo == "dense" or (algo == "auto" and dense_ok):
             ids, scores = _dense_topk(present, k, conjunctive=False)
         else:
             ids, scores = exhaustive_or(
-                [self._sorted_postings(r) for r in present], k
+                [st.sorted_postings(r) for r in present], k
             )
         return QueryResult(
             ids,
@@ -575,16 +545,6 @@ class QueryEngine:
         )
 
     # ----------------------------------------------------- head tier ----
-
-    def _heads_fresh(self) -> bool:
-        """The head tier is bound to the postings snapshots it was derived
-        from; any append/merge changes that list and invalidates it."""
-        meta = self.store.manifest().get("stages", {}).get("heads")
-        if not meta or not self.store.has_table("heads"):
-            return False
-        loc = self.store.table_path("postings")
-        cur = loc if isinstance(loc, list) else [loc]
-        return list(meta.get("postings", [])) == list(cur)
 
     def search_head(
         self, terms: list[str], k: int = 10, mode: str = "or"
@@ -624,40 +584,18 @@ class QueryEngine:
         refresh_heads after append)."""
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
-        if k <= 0:  # mirror search(): empty result, never scores[-1] on []
-            return QueryResult(
-                np.empty(0, np.uint64), np.empty(0, np.float64),
-                approximate=True, caps={}, set_exact=False,
-                score_gap=np.empty(0, np.float64),
-            )
-        uniq = sorted(set(terms))
-        if not uniq:  # mirror search([]): exact result is empty, certified
+        if k <= 0 or not terms:
+            # the exact top-0 set and search([]) are both empty: certified
             return QueryResult(
                 np.empty(0, np.uint64), np.empty(0, np.float64),
                 approximate=True, caps={}, set_exact=True,
                 score_gap=np.empty(0, np.float64),
             )
-        # bounded retry on mid-query manifest commits — same torn-window
-        # protection as _lookup_raw: stats, heads rows, and terms df must
-        # all come from ONE snapshot or the certificate could certify
-        # scores that match neither version. Each attempt pins the version
-        # at entry and re-stats after its fetches.
-        res = None
-        for _attempt in range(8):
-            res = self._search_head_once(uniq, k, mode)
-            if res is not None:
-                return res
-        raise RuntimeError(
-            "search_head: manifest kept changing mid-query (8 attempts) — "
-            "a writer is committing faster than the head lookup completes"
-        )
-
-    def _search_head_once(
-        self, uniq: list[str], k: int, mode: str
-    ) -> QueryResult | None:
-        """One pinned-snapshot attempt of search_head (None = torn, retry)."""
-        self._check_version()
-        if not self._heads_fresh():
+        uniq = sorted(set(terms))
+        # stats, heads rows and terms df all come from ONE pinned version,
+        # so the certificate never certifies scores mixing two versions
+        st = self.pin()
+        if not st.heads_fresh:
             raise ValueError(
                 "head tier missing or stale for this index — run "
                 "`index.py heads` (build_heads) after a build, or "
@@ -665,22 +603,14 @@ class QueryEngine:
                 "after appends"
             )
         t0 = time.time()
-        with self._cache_lock:
-            ver = self._manifest_version
-            n_docs, avgdl, k1, b = self.n_docs, self.avgdl, self.k1, self.b
-        rows = self._fetch_rows("heads", uniq)
+        rows = st.fetch_rows("heads", uniq)
         # true df per term (the terms table, NOT the truncated head length)
         # so idf — and therefore every returned score bit — matches search()
         dfs = {
             r["term"]: int(r["df"])
-            for r in self._fetch_rows("terms", uniq, columns=["term", "df"])
+            for r in st.fetch_rows("terms", uniq, columns=["term", "df"])
         }
-        # torn-window re-stat: a commit between the pin above and here
-        # means rows/dfs may mix snapshot generations with the pinned stats
-        with self._cache_lock:
-            torn = self._manifest_version != ver
-        if torn or self._current_manifest_version() != ver:
-            return None
+        n_docs, avgdl, k1, b = st.n_docs, st.avgdl, st.k1, st.b
         raws: list[RawPostings] = []
         caps: dict[str, float] = {}
         for term, parts in _group_by_term(rows).items():
@@ -710,7 +640,7 @@ class QueryEngine:
                     score_gap=np.empty(0, np.float64),
                 )
             ids, scores = _and_score(
-                [self._sorted_postings(r) for r in raws], k
+                [st.sorted_postings(r) for r in raws], k
             )
             pos_caps = {t: c for t, c in caps.items() if c > 0.0}
             if not pos_caps:
@@ -756,7 +686,7 @@ class QueryEngine:
         # head unions are <= n_terms * head_size — the sorted exhaustive
         # scorer is plenty; fetch k+1 so the certificate can bound the
         # best non-returned candidate
-        tps = [self._sorted_postings(r) for r in raws]
+        tps = [st.sorted_postings(r) for r in raws]
         ids, scores = exhaustive_or(tps, k + 1)
         extra = ids.size > k
         nxt = float(scores[k]) if extra else 0.0
@@ -830,31 +760,19 @@ class QueryEngine:
         independently in its executor; no driver collect of postings.
 
         Snapshot consistency: stats and BOTH table scans (postings, terms)
-        resolve their snapshot paths eagerly at plan-build under a pinned
-        manifest version with a bounded retry — same torn-window guard as
-        _lookup_raw/search_head. (A commit AFTER this returns only affects
-        the lazy execution if a later merge+vacuum removes the pinned
-        snapshot dirs; execute promptly or re-plan after compactions.)"""
+        resolve through one pinned version, so the plan reads that version
+        whenever it executes — as long as it runs within ``vacuum``'s grace
+        window after a compaction replaces those dirs; later it fails with
+        a file-not-found error, never a wrong answer."""
         uniq = sorted(set(terms))
-        for _attempt in range(8):
-            self._check_version()
-            with self._cache_lock:
-                ver = self._manifest_version
-                n_docs, avgdl = self.n_docs, self.avgdl
-                k1, b = self.k1, self.b
-            scan = self._postings_scan(uniq)
-            terms_scan = (
-                self.store.read_table(self.spark, "terms")
-                .filter(F.col("term").isin(uniq))
-                .select("term", "df")
-            )
-            if self._current_manifest_version() == ver:
-                break
-        else:
-            raise RuntimeError(
-                "search_distributed: manifest kept changing mid-plan "
-                "(8 attempts)"
-            )
+        st = self.pin()
+        n_docs, avgdl, k1, b = st.n_docs, st.avgdl, st.k1, st.b
+        scan = st.postings_scan(uniq)
+        terms_scan = (
+            st.snap.read(self.spark, "terms")
+            .filter(F.col("term").isin(uniq))
+            .select("term", "df")
+        )
 
         decode_schema = StructType(
             [
@@ -886,8 +804,8 @@ class QueryEngine:
                 if outs:
                     yield pd.concat(outs).rename(columns={"impact": "weight"})
 
-        # df per term must be the SALT-MERGED df; computed from the terms
-        # table scan built under the pinned version above
+        # df per term must be the SALT-MERGED df; computed from the pinned
+        # version's terms table
         decoded = scan.mapInPandas(decode, schema=decode_schema).join(
             F.broadcast(terms_scan), "term"
         )

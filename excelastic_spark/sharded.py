@@ -212,12 +212,8 @@ def build_shard(
     agg = triples.agg(
         F.count(F.lit(1)).alias("n_triples"), F.sum("tf").alias("total_tf")
     ).collect()[0]
-    # avgdl for block-max metadata: the plan's global corpus is uniform
-    # across shards, so the shard estimate is unbiased; exact bounds are
-    # recomputed at query time anyway (query.py lookup()).
-    avgdl_est = float(agg["total_tf"] or 0) / max(n_docs_shard, 1)
 
-    postings = encode_postings(triples, shard_terms, shard_cfg, avgdl_est)
+    postings = encode_postings(triples, shard_terms, shard_cfg)
     writes.append((
         "postings",
         store.stage_table(postings, "postings", partition_by=["bucket"]),

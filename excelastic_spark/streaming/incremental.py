@@ -306,7 +306,7 @@ class IncrementalIndexer:
 
         # ---- postings segment: same shared kernel; salting plan from the
         # MERGED terms (a term that just went hot salts its new segment)
-        seg_postings = encode_postings(seg_triples, merged, cfg, avgdl)
+        seg_postings = encode_postings(seg_triples, merged, cfg)
         writes.append((
             "postings",
             store.stage_table(seg_postings, "postings", partition_by=["bucket"]),
@@ -378,7 +378,6 @@ class IncrementalIndexer:
         spark, store, cfg = self.spark, self.store, self.cfg
         t0 = time.time()
         with store.writer_lock():
-            stats = store.read_table(spark, "stats").collect()[0]
             terms = store.read_table(spark, "terms")
             postings = store.read_table(spark, "postings").select(
                 "term", "doc_ids", "tfs", "doclens"
@@ -386,7 +385,7 @@ class IncrementalIndexer:
             decoded = postings.mapInPandas(
                 _decode_rows_to_triples, schema=TRIPLES_SCHEMA
             )
-            merged = encode_postings(decoded, terms, cfg, float(stats["avgdl"]))
+            merged = encode_postings(decoded, terms, cfg)
             store.write_table(merged, "postings", partition_by=["bucket"])
         rec = store.log_metrics("merge", sec=round(time.time() - t0, 3))
         return rec

@@ -3,7 +3,7 @@
 The engine buckets terms with ``pmod(xxhash64(term), n_buckets)`` (build.py
 bucket_expr) — evaluated JVM-side in executors at build time. The QUERY
 side, however, was launching a one-row Spark job per first-seen term just
-to learn its bucket (QueryEngine._buckets_for), putting a multi-ms JVM
+to learn its bucket (SnapshotState.buckets_for), putting a multi-ms JVM
 round-trip on the cold-query path of an otherwise Spark-free head-node
 lookup. This module computes the identical hash driver-side.
 

@@ -15,7 +15,6 @@ from excelastic_spark.config import EngineConfig
 # encode_coalesce_rows=1 passes each upstream batch straight through, so
 # the chopping parametrization really exercises the carry/straddle paths
 CFG = EngineConfig(block_size=4, encode_coalesce_rows=1)
-AVGDL = 37.0
 
 
 def _sorted_rows(groups):
@@ -54,17 +53,17 @@ def _batches(rows, sizes):
 
 
 def _run(rows, sizes, cfg=CFG):
-    fn = _encode_sorted_stream(cfg, AVGDL)
+    fn = _encode_sorted_stream(cfg)
     got = list(fn(iter(_batches(rows, sizes))))
     tbl = pa.Table.from_batches(got).to_pydict()
     out = {}
-    for term, salt, n, d, t, l, bl, bm in zip(
+    for term, salt, n, d, t, l in zip(
         tbl["term"], tbl["salt"], tbl["n"], tbl["doc_ids"], tbl["tfs"],
-        tbl["doclens"], tbl["block_last"], tbl["block_max"],
+        tbl["doclens"],
     ):
         key = (term, salt)
         assert key not in out, f"duplicate output row for {key}"
-        out[key] = (n, bytes(d), bytes(t), bytes(l), bytes(bl), bytes(bm))
+        out[key] = (n, bytes(d), bytes(t), bytes(l))
     return out
 
 
@@ -105,7 +104,7 @@ def test_empty_batches_skipped():
     rows_with_holes = ROWS
     # _batches can't make empty slices mid-stream with sum check; build
     # manually: interleave genuinely empty record batches
-    fn = _encode_sorted_stream(CFG, AVGDL)
+    fn = _encode_sorted_stream(CFG)
     batches = _batches(rows_with_holes, [3, 1, 13, 2])
     empty = batches[0].slice(0, 0)
     stream = [batches[0], empty, batches[1], empty, batches[2], batches[3]]
@@ -123,3 +122,12 @@ def test_coalesce_invariance(coalesce):
     cfg = EngineConfig(block_size=4, encode_coalesce_rows=coalesce)
     for sizes in ([1] * N, [3, 1, 13, 2], [5, 5, 5, 4]):
         assert _run(ROWS, sizes, cfg) == _run(ROWS, [N])
+
+
+def test_rows_carry_no_block_metadata():
+    """Block bounds are derived at query time from query-time stats, so
+    the encoder writes only the posting streams (layout v3)."""
+    got = list(_encode_sorted_stream(CFG)(iter(_batches(ROWS, [N]))))
+    assert got[0].schema.names == [
+        "term", "salt", "n", "doc_ids", "tfs", "doclens",
+    ]

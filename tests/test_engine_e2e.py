@@ -50,8 +50,9 @@ def built(spark, tmp_path_factory):
 
 def test_stats_match_oracle(built):
     _, _, qe, oracle, _ = built
-    assert qe.n_docs == oracle.n_docs
-    assert qe.avgdl == oracle.avgdl  # exact float equality
+    st = qe.pin()
+    assert st.n_docs == oracle.n_docs
+    assert st.avgdl == oracle.avgdl  # exact float equality
 
 
 @pytest.mark.parametrize("q", QUERY_SET, ids=lambda q: f"q{q['qid']}")

@@ -108,7 +108,8 @@ def test_append_invalidates_then_rebuild(built):
 
 def test_search_head_k_zero_returns_empty(built):
     """k<=0 mirrors search(): an empty result, never an IndexError from
-    scores[-1] on an empty array (truncated-tier branch)."""
+    scores[-1] on an empty array (truncated-tier branch). The exact top-0
+    set is empty too, so the result is certified, like empty terms."""
     spark, store, cfg = built
     build_heads(spark, store, head_size=4)  # truncated -> total_cap > 0
     qe = QueryEngine(spark, store, cfg)
@@ -116,6 +117,7 @@ def test_search_head_k_zero_returns_empty(built):
         res = qe.search_head(["import", "return"], k=k)
         assert res.doc_ids.size == 0 and res.scores.size == 0
         assert res.approximate is True
+        assert res.set_exact is True
 
 
 def test_search_head_empty_terms_returns_empty(built):

@@ -36,8 +36,9 @@ def _oracle_for(spark, store):
 def _assert_matches_oracle(spark, store):
     qe = QueryEngine(spark, store, CFG)
     oracle = _oracle_for(spark, store)
-    assert qe.n_docs == oracle.n_docs
-    assert qe.avgdl == oracle.avgdl
+    st = qe.pin()
+    assert st.n_docs == oracle.n_docs
+    assert st.avgdl == oracle.avgdl
     for terms, mode, k in QS:
         got = qe.search(terms, mode, k).to_pandas()
         exp = oracle.search(terms, mode, k)

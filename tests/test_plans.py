@@ -33,7 +33,7 @@ def small_index(spark, tmp_path_factory):
 def test_term_lookup_pushdown_and_pruning(spark, small_index):
     store, cfg = small_index
     qe = QueryEngine(spark, store, cfg)
-    scan = qe._postings_scan(["import", "return"])
+    scan = qe.pin().postings_scan(["import", "return"])
     # term IN (...) pushed into the parquet row groups
     assert_pushed_filters(scan, "In(term")
     # bucket filter prunes partitions (directory-level)

@@ -1,6 +1,6 @@
 """Pure-Python XXH64 vs Spark's xxhash64 expression: bit-equality.
 
-query._buckets_for prunes parquet bucket directories with a driver-side
+SnapshotState.buckets_for prunes parquet bucket directories with a driver-side
 hash; if it EVER disagreed with build.bucket_expr (the JVM XXH64 used to
 place postings at build time), term lookups would silently scan the wrong
 directory and return empty postings — so this test is the load-bearing

@@ -57,10 +57,11 @@ def main() -> None:
 
     import pyarrow.dataset as pads
 
-    dset = qe._dataset("postings")
+    st = qe.pin()
+    dset = st.dataset("postings")
     out = {}
     for term in terms:
-        buckets = qe._buckets_for([term])
+        buckets = st.buckets_for([term])
         t0 = time.time()
         flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(
             [term]
@@ -99,8 +100,8 @@ def main() -> None:
             ids, tfs, dls = ids[order], tfs[order], dls[order]
         t_sort = time.time() - t0
         t0 = time.time()
-        impacts = codec.bm25_impact(tfs, dls, qe.avgdl, qe.k1, qe.b)
-        blk_last, blk_imp = codec.block_metadata(ids, impacts, qe.cfg.block_size)
+        impacts = codec.bm25_impact(tfs, dls, st.avgdl, st.k1, st.b)
+        blk_last, blk_imp = codec.block_metadata(ids, impacts, st.cfg.block_size)
         t_meta = time.time() - t0
         out[term] = {
             "df": int(ids.size),
