@@ -7,19 +7,22 @@ BM25/WAND semantics.
 
 Two execution paths:
 
-* ``search`` (driver path): term lookups hit the postings table with
-  ``bucket IN (...) AND term IN (...)`` — bucket is a parquet partition
-  column (Iceberg bucket-transform analog) so the scan prunes to the query
-  terms' directories, and the term predicate pushes into the parquet row
-  groups. Salted sub-lists are merged (they partition docs disjointly).
-  Scoring: numpy AND-intersection / block-max WAND. This is how a search
-  head node serves low-latency queries off a 10^12-doc index: it reads only
-  the query terms' postings, never the corpus.
+* ``search`` (head-node path): term lookups read the postings table's
+  parquet files directly — bucket is a parquet partition column (Iceberg
+  bucket-transform analog), so a lookup opens only the query terms'
+  bucket directories. Their footers are parsed once per pinned snapshot
+  (``SnapshotState.fetch``); the fetched rows come back as one Arrow
+  table and decode in three vectorized varint passes per query, read
+  straight from the Arrow buffers (``decode_postings``). Salted
+  sub-lists are merged (they partition docs disjointly). Scoring: numpy
+  AND-intersection / block-max WAND. This is how a search head node
+  serves low-latency queries off a 10^12-doc index: it reads only the
+  query terms' postings, never the corpus.
 * ``search_distributed`` (cluster path): for analytics-style queries whose
   candidate sets are too big for one node — decodes postings in executors
-  via mapInPandas, pivots per-term weight columns (fixed fold order -> IEEE
-  deterministic scores), global top-k via ORDER BY ... LIMIT k (Spark
-  TakeOrdered — no full sort).
+  via mapInArrow (the same batch decoder), pivots per-term weight columns
+  (fixed fold order -> IEEE deterministic scores), global top-k via ORDER
+  BY ... LIMIT k (Spark TakeOrdered — no full sort).
 
 Determinism contract: scores are float64, accumulated in ascending
 lexicographic term order; output ordered by (score DESC, doc_id ASC) —
@@ -34,10 +37,13 @@ import time
 from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass
-from typing import Any
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -96,35 +102,94 @@ def _wand_promising(
         and k <= ns[top]
     )
 
-def _group_by_term(rows: list[dict]) -> dict[str, list]:
-    by_term: dict[str, list] = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
-    return by_term
+
+class TermRun(NamedTuple):
+    """One term's rows of a :func:`decode_postings` table, decoded: its
+    salted rows are ``rows`` of the sorted table, and its postings are
+    those rows' doc_ids, tfs and doclens, concatenated in salt order."""
+
+    rows: slice
+    doc_ids: np.ndarray  # uint64, ascending within each salted row
+    tfs: np.ndarray
+    doclens: np.ndarray
+
+    @property
+    def presorted(self) -> bool:
+        """One salted row: its doc_ids are already ascending."""
+        return self.rows.stop - self.rows.start == 1
 
 
-def _fused_decode(
-    parts: list[dict],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, bool]:
-    """Decode one term's salted rows into (doc_ids, tfs, doclens,
-    presorted) in THREE vectorized varint passes (see lookup_raw)."""
-    parts = sorted(parts, key=lambda r: r["salt"])
-    ns = np.array([int(r["n"]) for r in parts], dtype=np.int64)
-    deltas = codec.decode_varint(b"".join(bytes(r["doc_ids"]) for r in parts))
-    csum = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.cumsum(ns)[:-1]  # first value index of rows 1..
-    offsets = np.zeros(len(parts), dtype=np.uint64)
-    offsets[1:] = csum[starts - 1]
-    ids = csum - np.repeat(offsets, ns)
-    tfs = codec.decode_varint(b"".join(bytes(r["tfs"]) for r in parts))
-    dls = codec.decode_varint(b"".join(bytes(r["doclens"]) for r in parts))
-    return ids, tfs, dls, len(parts) == 1
+def decode_postings(tbl: pa.Table) -> tuple[pa.Table, dict[str, TermRun]]:
+    """Fetched posting rows (postings or heads) -> the rows sorted by
+    (term, salt), and each term's decoded postings. The whole query
+    decodes in THREE varint passes (:func:`codec.decode_rows`) however
+    many terms and salted rows it fetched: a hot term at scale has
+    thousands of salted rows, and per-row decode calls dominated lookup
+    before (600 rows / 1.2M postings: 0.29 s decode against 0.06 s
+    fetch). Each term's doc_ids are its own array, so an LRU entry never
+    keeps another term's postings alive."""
+    if tbl.num_rows == 0:
+        return tbl, {}
+    tbl = tbl.sort_by([("term", "ascending"), ("salt", "ascending")])
+    ids, tfs, dls = codec.decode_rows(tbl)
+    terms = tbl.column("term")
+    nrows = tbl.num_rows
+    cut = np.flatnonzero(
+        pc.not_equal(terms.slice(1), terms.slice(0, nrows - 1)).to_numpy()
+    ) + 1
+    row_at = np.concatenate(([0], cut, [nrows]))
+    post_at = np.concatenate(([0], np.cumsum(tbl.column("n").to_numpy())))[
+        row_at
+    ]
+    names = pc.take(terms, pa.array(row_at[:-1])).to_pylist()
+    shared = len(names) > 1
+    runs = {}
+    for i, term in enumerate(names):
+        p0, p1 = int(post_at[i]), int(post_at[i + 1])
+        runs[term] = TermRun(
+            slice(int(row_at[i]), int(row_at[i + 1])),
+            ids[p0:p1].copy() if shared else ids,
+            tfs[p0:p1],
+            dls[p0:p1],
+        )
+    return tbl, runs
+
+
+class _ParquetPart:
+    """One parquet file of a pinned snapshot. Snapshot files are
+    immutable, so the footer is parsed once per state; the file itself is
+    open only for the length of a read, so a state holds no descriptor
+    between queries however many segments the index has."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.metadata = pq.read_metadata(path)
+
+    def read(self, wanted: pa.Array, columns: list[str]) -> pa.Table:
+        # use_threads=False: parallelism belongs ACROSS queries, one core
+        # per read — Q concurrent queries each spawning a CPU-wide pool
+        # oversubscribe the head node Q*cores ways (measured: 120 -> 24
+        # QPS at 32 threads with threaded scans; BENCH concurrency section)
+        with pq.ParquetFile(
+            self.path, metadata=self.metadata, pre_buffer=False
+        ) as f:
+            tbl = f.read(columns=columns, use_threads=False)
+        return tbl.filter(pc.is_in(tbl.column("term"), value_set=wanted))
 
 
 RESULT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
         StructField("score", DoubleType(), False),
+    ]
+)
+
+# search_distributed's executor decode: one row per posting
+DECODED_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("term", StringType(), False),
+        StructField("weight", DoubleType(), False),
     ]
 )
 
@@ -183,17 +248,19 @@ class QueryResult:
 class SnapshotState:
     """Everything a query reads, for ONE committed index version: the
     parsed manifest (table paths, stage entries, layout config), its stats
-    row, pyarrow datasets over its dirs, and its decoded-postings LRU.
+    row, parquet footers of its files, and its decoded-postings LRU.
 
     A query pins one state at entry (:meth:`QueryEngine.pin`) and reads
     only through it, so it sees one version end to end by construction —
     no re-stat, no retry. A commit makes the next ``pin`` build a new state
     and swap it in; queries still running on the old one finish on it
     (``IndexStore.vacuum`` keeps its dirs for the grace window after the
-    commit that replaced them), and the old caches go with it."""
+    commit that replaced them), and the old caches and footers go with
+    it."""
 
     # what the decode needs: the hive partition column stays out of the rows
     POSTING_COLUMNS = ["term", "salt", "n", "doc_ids", "tfs", "doclens"]
+    HEAD_COLUMNS = POSTING_COLUMNS + ["excl_max_tf", "excl_min_dl"]
 
     def __init__(
         self,
@@ -214,7 +281,9 @@ class SnapshotState:
         self.k1 = float(st["k1"])
         self.b = float(st["b"])
         self._buckets: dict[str, int] = {}
-        self._datasets: dict[str, Any] = {}
+        # (table, bucket) -> footers of that bucket dir's files in every
+        # snapshot dir of the table, parsed by the first query touching it
+        self._parts: dict[tuple[str, int], list[_ParquetPart]] = {}
         # decoded-postings LRU (a head node's hot terms re-read + re-decode
         # the same parquet rows on every query otherwise): term ->
         # (RawPostings, charged bytes), capped by total charged bytes.
@@ -262,56 +331,41 @@ class SnapshotState:
                 self._buckets[t] = term_bucket(t, self.cfg.n_buckets)
         return sorted({self._buckets[t] for t in terms})
 
-    def dataset(self, table: str):
-        """pyarrow dataset over a table's snapshot dirs (hive bucket dirs)
-        — the low-latency search-head path: term lookups become local
-        parquet reads with dictionary/bucket filters, no Spark job on the
-        hot path. None for non-local storage (falls back to a Spark scan)."""
-        if table not in self._datasets:
-            try:
-                import pyarrow.dataset as pads
+    def _bucket_parts(self, table: str, bucket: int) -> list[_ParquetPart]:
+        key = (table, bucket)
+        parts = self._parts.get(key)
+        if parts is None:
+            parts = []
+            for root in self.snap.paths(table):
+                # a segment none of whose terms hash here has no dir
+                d = os.path.join(root, f"bucket={bucket}")
+                if os.path.isdir(d):
+                    parts += [
+                        _ParquetPart(os.path.join(d, f))
+                        for f in sorted(os.listdir(d))
+                        if f.endswith(".parquet") and f[0] not in "._"
+                    ]
+            # racing first queries each parse the footers; one list is kept
+            parts = self._parts.setdefault(key, parts)
+        return parts
 
-                parts = [
-                    pads.dataset(p, format="parquet", partitioning="hive")
-                    for p in self.snap.paths(table)
-                ]
-                self._datasets[table] = (
-                    parts[0] if len(parts) == 1 else pads.dataset(parts)
-                )
-            except Exception:
-                self._datasets[table] = None
-        return self._datasets[table]
-
-    def fetch_rows(
-        self, table: str, terms: list[str], columns: list[str] | None = None
-    ) -> list[dict]:
-        """Rows for the query terms via pyarrow (local) or Spark scan, from
-        any bucket-partitioned term-keyed table (postings, heads, terms)."""
-        buckets = self.buckets_for(terms)
-        dset = self.dataset(table)
-        if dset is not None:
-            import pyarrow.dataset as pads
-
-            flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(
-                terms
-            )
-            # use_threads=False: the bucket-pruned read is a handful of row
-            # groups, so the intra-scan pool buys nothing single-stream —
-            # and under concurrent tenants, Q queries each spawning a
-            # CPU-wide scanner pool oversubscribes the head node Q*cores
-            # ways (measured: 120 -> 24 QPS collapse at 32 threads with
-            # threaded scans; see BENCH concurrency section). Parallelism
-            # belongs ACROSS queries, one core per scan.
-            tbl = dset.scanner(
-                filter=flt, columns=columns, use_threads=False
-            ).to_table()
-            return tbl.to_pylist()
-        df = self.snap.read(self.spark, table).filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        if columns:
-            df = df.select(*columns)
-        return [r.asDict() for r in df.collect()]
+    def fetch(
+        self, table: str, terms: list[str], columns: list[str]
+    ) -> pa.Table:
+        """The query terms' rows of a bucket-partitioned, term-keyed table
+        (postings, heads, terms) as one Arrow table of ``columns``: only
+        the files of the terms' bucket dirs, filtered by ``term``. No
+        Spark job on the hot path."""
+        wanted = pa.array(terms, pa.string())
+        tables = [
+            part.read(wanted, columns)
+            for b in self.buckets_for(terms)
+            for part in self._bucket_parts(table, b)
+        ]
+        if not tables:
+            return pa.table({c: [] for c in columns})
+        # segments written by different jobs may differ in nullability
+        return pa.concat_tables(tables, promote_options="permissive")
 
     def postings_scan(self, terms: list[str]) -> DataFrame:
         """Pruned scan: partition pruning on bucket + predicate pushdown on
@@ -323,16 +377,9 @@ class SnapshotState:
 
     def lookup_raw(self, uniq: list[str]) -> dict[str, RawPostings]:
         """Fetch + decode postings for the (deduped, sorted) query terms —
-        NO sorting pass: the dense scorer never needs the salt-merge.
-
-        FUSED decode across salted sub-lists: a hot term at scale has
-        thousands of salted rows of ~salt_target docs each, and per-row
-        numpy decode calls (3 per row) dominate lookup time (profiled:
-        600 rows/1.2M postings -> 0.29s decode vs 0.06s fetch). Varint
-        streams concatenate losslessly, so all rows decode in THREE
-        vectorized passes; the delta stream needs a per-row cumsum reset
-        = subtract each segment's starting offset (one np.repeat), since
-        row lengths are stored in "n".
+        NO sorting pass: the dense scorer never needs the salt-merge. All
+        missing terms are fetched in one :meth:`fetch` and decoded in one
+        :func:`decode_postings`.
 
         Decoded-postings LRU: hot terms skip fetch AND decode entirely on
         repeat lookups. The cache belongs to this state, so its impacts
@@ -349,19 +396,21 @@ class SnapshotState:
                     missing.append(t)
         if not missing:
             return out
-        rows = self.fetch_rows("postings", missing, self.POSTING_COLUMNS)
-        fresh: dict[str, RawPostings] = {}
-        for term, parts in _group_by_term(rows).items():
-            ids, tfs, dls, presorted = _fused_decode(parts)
-            fresh[term] = RawPostings(
+        _, runs = decode_postings(
+            self.fetch("postings", missing, self.POSTING_COLUMNS)
+        )
+        fresh = {
+            term: RawPostings(
                 term=term,
-                doc_ids=ids,
+                doc_ids=run.doc_ids,
                 impacts=codec.bm25_impact(
-                    tfs, dls, self.avgdl, self.k1, self.b
+                    run.tfs, run.doclens, self.avgdl, self.k1, self.b
                 ),
-                idf=float(codec.bm25_idf(self.n_docs, int(ids.size))),
-                presorted=presorted,
+                idf=float(codec.bm25_idf(self.n_docs, run.doc_ids.size)),
+                presorted=run.presorted,
             )
+            for term, run in runs.items()
+        }
         with self.lock:
             for t, raw in fresh.items():
                 nbytes = int(raw.doc_ids.nbytes + raw.impacts.nbytes)
@@ -603,26 +652,30 @@ class QueryEngine:
                 "after appends"
             )
         t0 = time.time()
-        rows = st.fetch_rows("heads", uniq)
+        rows, runs = decode_postings(
+            st.fetch("heads", uniq, st.HEAD_COLUMNS)
+        )
         # true df per term (the terms table, NOT the truncated head length)
         # so idf — and therefore every returned score bit — matches search()
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in st.fetch_rows("terms", uniq, columns=["term", "df"])
-        }
+        df_rows = st.fetch("terms", uniq, ["term", "df"])
+        dfs = dict(zip(df_rows.column("term").to_pylist(),
+                       df_rows.column("df").to_pylist()))
         n_docs, avgdl, k1, b = st.n_docs, st.avgdl, st.k1, st.b
         raws: list[RawPostings] = []
         caps: dict[str, float] = {}
-        for term, parts in _group_by_term(rows).items():
-            ids, tfs, dls, presorted = _fused_decode(parts)
-            idf = float(codec.bm25_idf(n_docs, dfs[term]))
-            impacts = codec.bm25_impact(tfs, dls, avgdl, k1, b)
-            raws.append(RawPostings(term, ids, impacts, idf, presorted))
-            etf = np.array([int(r["excl_max_tf"]) for r in parts], np.float64)
-            edl = np.array([int(r["excl_min_dl"]) for r in parts], np.float64)
+        if runs:
+            # each salted row's bound on the postings its head left out
+            etf = rows.column("excl_max_tf").to_numpy().astype(np.float64)
+            edl = rows.column("excl_min_dl").to_numpy().astype(np.float64)
             bounds = codec.bm25_impact(etf, edl, avgdl, k1, b)
             bounds[etf == 0] = 0.0
-            caps[term] = idf * float(bounds.max()) if len(parts) else 0.0
+        for term, run in runs.items():
+            idf = float(codec.bm25_idf(n_docs, int(dfs[term])))
+            impacts = codec.bm25_impact(run.tfs, run.doclens, avgdl, k1, b)
+            raws.append(
+                RawPostings(term, run.doc_ids, impacts, idf, run.presorted)
+            )
+            caps[term] = idf * float(bounds[run.rows].max())
         t1 = time.time()
         total_cap = float(sum(caps.values()))
         if mode == "and":
@@ -766,53 +819,40 @@ class QueryEngine:
         a file-not-found error, never a wrong answer."""
         uniq = sorted(set(terms))
         st = self.pin()
-        n_docs, avgdl, k1, b = st.n_docs, st.avgdl, st.k1, st.b
-        scan = st.postings_scan(uniq)
+        avgdl, k1, b = st.avgdl, st.k1, st.b
+        scan = st.postings_scan(uniq).select(
+            "term", "n", "doc_ids", "tfs", "doclens"
+        )
         terms_scan = (
             st.snap.read(self.spark, "terms")
             .filter(F.col("term").isin(uniq))
             .select("term", "df")
         )
 
-        decode_schema = StructType(
-            [
-                StructField("doc_id", LongType(), False),
-                StructField("term", StringType(), False),
-                StructField("weight", DoubleType(), False),
-            ]
-        )
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                # loop is over (term, salt) index ROWS (a handful per query),
-                # never over postings — decode itself is vectorized numpy
-                for _, row in pdf.iterrows():
-                    ids = codec.decode_delta_varint(bytes(row["doc_ids"]))
-                    tfs = codec.decode_varint(bytes(row["tfs"]))
-                    dls = codec.decode_varint(bytes(row["doclens"]))
-                    impacts = codec.bm25_impact(tfs, dls, avgdl, k1, b)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": ids.astype(np.int64),
-                                "term": row["term"],
-                                "impact": impacts,
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs).rename(columns={"impact": "weight"})
+        def decode(
+            batches: Iterator[pa.RecordBatch],
+        ) -> Iterator[pa.RecordBatch]:
+            # the same three-pass batch decode as decode_postings on
+            # the head node, per run of whole posting rows
+            for term, ids, tfs, dls in codec.decode_row_batches(batches):
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(ids.astype(np.int64)),
+                        term,
+                        pa.array(codec.bm25_impact(tfs, dls, avgdl, k1, b)),
+                    ],
+                    names=["doc_id", "term", "weight"],
+                )
 
         # df per term must be the SALT-MERGED df; computed from the pinned
         # version's terms table
-        decoded = scan.mapInPandas(decode, schema=decode_schema).join(
+        decoded = scan.mapInArrow(decode, schema=DECODED_SCHEMA).join(
             F.broadcast(terms_scan), "term"
         )
         decoded = decoded.withColumn(
             "weight",
             F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
+                (F.lit(float(st.n_docs)) - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5))
             )
             * F.col("weight"),
@@ -844,7 +884,7 @@ class QueryExecutor:
     tenants (VERDICT r3 #5's missing piece, found by measurement).
 
     The driver-side hot path interleaves GIL-bound Python (WAND block
-    skipping, row dict materialization) with short GIL-releasing numpy /
+    skipping, per-query bookkeeping) with short GIL-releasing numpy /
     pyarrow calls. Unbounded thread concurrency convoys on the GIL:
     measured on sf0.1, aggregate QPS peaks at 2 worker threads (~245 QPS)
     and COLLAPSES 5x by 8+ threads (~48 QPS) as lock handoffs and cold

@@ -41,7 +41,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType
@@ -58,51 +58,22 @@ from excelastic_spark.corpus import CORPUS_SCHEMA, assign_doc_ids
 from excelastic_spark.tokenizer import TRIPLES_SCHEMA, tokenize_triples
 
 
-# flush decoded triples to Spark at this many postings: an input Arrow
-# batch can hold thousands of posting ROWS and a hot salted row carries
-# ~salt_target postings, so materializing a whole input batch as one
-# pandas frame could be O(batch rows x salt_target) — the same executor-
-# memory cliff the build-side encoder was rewritten to avoid. Bounding
-# the output frame keeps merge memory O(budget + largest row).
-_DECODE_FLUSH_POSTINGS = 2_000_000
-
-
 def _decode_rows_to_triples(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Posting rows -> (doc_id, term, tf, doclen) rows. The loop is over
-    (term, salt, segment) index ROWS — a handful per term — while each
-    decode is one vectorized numpy pass over that row's postings (the same
-    allowlisted pattern as the query-side decode, query.py)."""
-
-    def frame(ids_all, terms_all, tfs_all, dls_all) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "doc_id": np.concatenate(ids_all),
-                "term": np.concatenate(terms_all),
-                "tf": np.concatenate(tfs_all),
-                "doclen": np.concatenate(dls_all),
-            }
+    batches: Iterator[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """Posting rows -> (doc_id, term, tf, doclen) rows: the same batch
+    decode as the query path (codec.decode_row_batches), three vectorized
+    passes per run of whole rows, with no Python object per row."""
+    for term, ids, tfs, dls in codec.decode_row_batches(batches):
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids.astype(np.int64)),
+                term,
+                pa.array(tfs.astype(np.int64)),
+                pa.array(dls.astype(np.int64)),
+            ],
+            names=["doc_id", "term", "tf", "doclen"],
         )
-
-    for pdf in batches:
-        ids_all, terms_all, tfs_all, dls_all = [], [], [], []
-        pending = 0
-        for _, row in pdf.iterrows():
-            ids = codec.decode_delta_varint(bytes(row["doc_ids"]))
-            tfs = codec.decode_varint(bytes(row["tfs"]))
-            dls = codec.decode_varint(bytes(row["doclens"]))
-            ids_all.append(ids.astype(np.int64))
-            tfs_all.append(tfs.astype(np.int64))
-            dls_all.append(dls.astype(np.int64))
-            terms_all.append(np.repeat(row["term"], ids.size))
-            pending += int(ids.size)
-            if pending >= _DECODE_FLUSH_POSTINGS:
-                yield frame(ids_all, terms_all, tfs_all, dls_all)
-                ids_all, terms_all, tfs_all, dls_all = [], [], [], []
-                pending = 0
-        if ids_all:
-            yield frame(ids_all, terms_all, tfs_all, dls_all)
 
 
 class IncrementalIndexer:
@@ -380,9 +351,9 @@ class IncrementalIndexer:
         with store.writer_lock():
             terms = store.read_table(spark, "terms")
             postings = store.read_table(spark, "postings").select(
-                "term", "doc_ids", "tfs", "doclens"
+                "term", "n", "doc_ids", "tfs", "doclens"
             )
-            decoded = postings.mapInPandas(
+            decoded = postings.mapInArrow(
                 _decode_rows_to_triples, schema=TRIPLES_SCHEMA
             )
             merged = encode_postings(decoded, terms, cfg)

@@ -201,16 +201,16 @@ def _commit_after_first_fetch(monkeypatch, commit) -> list:
     """Run ``commit`` right after the first table fetch of the next query:
     the window between a query's fetch and its scoring."""
     done: list = []
-    orig = SnapshotState.fetch_rows
+    orig = SnapshotState.fetch
 
-    def hooked(self, table, terms, columns=None):
+    def hooked(self, table, terms, columns):
         rows = orig(self, table, terms, columns)
         if not done:
             done.append(table)
             commit()
         return rows
 
-    monkeypatch.setattr(SnapshotState, "fetch_rows", hooked)
+    monkeypatch.setattr(SnapshotState, "fetch", hooked)
     return done
 
 

@@ -1,10 +1,12 @@
 """Profile the driver lookup path stage-by-stage on a big synthetic index.
 
-Times, per hot query term: pyarrow fetch (scanner.to_table), row
-materialization (to_pylist), the three varint decode passes, the salt-merge
-(cumsum/argsort), and scoring — so we know WHICH stage owns monster-df
-lookup latency before optimizing it (BENCH/bigcorpus run 2 measured ~10 s
-lookup at 5M docs).
+Times, per hot query term, the stages a cold lookup runs: the fetch
+(``SnapshotState.fetch``: the term's bucket files, cached footers,
+``term`` filter), the decode (``decode_postings``: three varint passes),
+the BM25 impacts, and the salt-merge with block bounds
+(``SnapshotState.sorted_postings``); then lookup and score time of whole
+searches — so we know WHICH stage owns monster-df lookup latency before
+optimizing it (BENCH/bigcorpus run 2 measured ~10 s lookup at 5M docs).
 
 Usage: python tools/profile_lookup.py [n_docs] [index_root]
 """
@@ -19,8 +21,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import numpy as np
-
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 ROOT = sys.argv[2] if len(sys.argv) > 2 else "/dev/shm/excelastic_prof"
 
@@ -31,7 +31,11 @@ def main() -> None:
     from excelastic_spark.catalog import IndexStore
     from excelastic_spark.config import EngineConfig
     from excelastic_spark.corpus import synthesize_corpus
-    from excelastic_spark.query import QueryEngine
+    from excelastic_spark.query import (
+        QueryEngine,
+        RawPostings,
+        decode_postings,
+    )
     from excelastic_spark.session import get_spark
 
     cfg = EngineConfig(
@@ -55,66 +59,35 @@ def main() -> None:
     terms = ["import", "return", "def", "class", "self"]
     qe.search(terms[:2], mode="or", k=10)  # warm
 
-    import pyarrow.dataset as pads
-
     st = qe.pin()
-    dset = st.dataset("postings")
     out = {}
     for term in terms:
-        buckets = st.buckets_for([term])
-        t0 = time.time()
-        flt = pads.field("bucket").isin(buckets) & pads.field("term").isin(
-            [term]
+        t0 = time.perf_counter()
+        tbl = st.fetch("postings", [term], st.POSTING_COLUMNS)
+        t_fetch = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        _, runs = decode_postings(tbl)
+        t_decode = time.perf_counter() - t0
+        run = runs[term]
+        t0 = time.perf_counter()
+        raw = RawPostings(
+            term, run.doc_ids,
+            codec.bm25_impact(run.tfs, run.doclens, st.avgdl, st.k1, st.b),
+            float(codec.bm25_idf(st.n_docs, run.doc_ids.size)),
+            run.presorted,
         )
-        tbl = dset.scanner(filter=flt, use_threads=False).to_table()
-        t_fetch = time.time() - t0
-        t0 = time.time()
-        rows = tbl.to_pylist()
-        t_pylist = time.time() - t0
-        nbytes = sum(
-            len(r["doc_ids"]) + len(r["tfs"]) + len(r["doclens"]) for r in rows
-        )
-        t0 = time.time()
-        parts = sorted(rows, key=lambda r: r["salt"])
-        ns = np.array([int(r["n"]) for r in parts], dtype=np.int64)
-        cat = b"".join(bytes(r["doc_ids"]) for r in parts)
-        t_cat = time.time() - t0
-        t0 = time.time()
-        deltas = codec.decode_varint(cat)
-        t_dec1 = time.time() - t0
-        t0 = time.time()
-        csum = np.cumsum(deltas, dtype=np.uint64)
-        starts = np.cumsum(ns)[:-1]
-        offsets = np.zeros(len(parts), dtype=np.uint64)
-        if len(parts) > 1:
-            offsets[1:] = csum[starts - 1]
-        ids = csum - np.repeat(offsets, ns)
-        t_reset = time.time() - t0
-        t0 = time.time()
-        tfs = codec.decode_varint(b"".join(bytes(r["tfs"]) for r in parts))
-        dls = codec.decode_varint(b"".join(bytes(r["doclens"]) for r in parts))
-        t_dec23 = time.time() - t0
-        t0 = time.time()
-        if len(parts) > 1:
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-        t_sort = time.time() - t0
-        t0 = time.time()
-        impacts = codec.bm25_impact(tfs, dls, st.avgdl, st.k1, st.b)
-        blk_last, blk_imp = codec.block_metadata(ids, impacts, st.cfg.block_size)
-        t_meta = time.time() - t0
+        t_impacts = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        st.sorted_postings(raw)
+        t_merge = time.perf_counter() - t0
         out[term] = {
-            "df": int(ids.size),
-            "rows": len(rows),
-            "posting_mb": round(nbytes / 1e6, 1),
+            "df": int(run.doc_ids.size),
+            "rows": tbl.num_rows,
+            "posting_mb": round(tbl.nbytes / 1e6, 1),
             "fetch_s": round(t_fetch, 3),
-            "to_pylist_s": round(t_pylist, 3),
-            "concat_s": round(t_cat, 3),
-            "decode_ids_s": round(t_dec1, 3),
-            "delta_reset_s": round(t_reset, 3),
-            "decode_tf_dl_s": round(t_dec23, 3),
-            "salt_sort_s": round(t_sort, 3),
-            "impacts_blocks_s": round(t_meta, 3),
+            "decode_s": round(t_decode, 3),
+            "impacts_s": round(t_impacts, 3),
+            "salt_merge_blocks_s": round(t_merge, 3),
         }
         print(json.dumps({term: out[term]}), file=sys.stderr)
 
