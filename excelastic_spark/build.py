@@ -12,12 +12,16 @@ rule's checkpoint/resume requirement):
             downstream input and a resume checkpoint)
   docs      skinny doc-metadata table (doc_id, key, lang, sha256, doclen)
   terms     df/cf per term + salting plan
-  postings  salt -> ONE shuffle on (term, salt) JVM-sorted by
-            (term, salt, doc_id) -> STREAMING vectorized Arrow encoder
-            (delta+varint + block-max in one linear pass; Python memory
-            O(batch + largest group), never O(partition)) -> one
-            lightweight exchange to bucket(term) alignment -> postings
-            table parquet-partitioned by bucket for lookup pruning
+  postings  salt -> Spark groups the triples by (term, salt)
+            (collect_list, map-side partial step) -> one stateless
+            vectorized Arrow pass per batch of whole groups (in-group
+            doc_id sort + delta+varint) -> one lightweight exchange to
+            bucket(term) alignment -> postings table parquet-partitioned
+            by bucket for lookup pruning. Python holds one Arrow batch at
+            a time: at most arrow_batch_size groups and
+            spark.sql.execution.arrow.maxBytesPerBatch bytes; a group
+            holds at most salt_threshold postings (about salt_target once
+            a hot term is salted)
   stats     collection stats assembled from the stages' Observation
             metrics (no extra jobs)
 
@@ -40,6 +44,7 @@ import time
 from typing import Any
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -149,218 +154,78 @@ def corpus_fingerprint(corpus: DataFrame) -> str:
 
 
 # ---------------------------------------------------------------------------
-# sorted-run vectorized posting encoder
+# per-batch vectorized posting encoder
 
 
-_PA_POSTINGS_FIELDS = [
-    ("term", "string"),
-    ("salt", "int32"),
-    ("n", "int64"),
-    ("doc_ids", "binary"),
-    ("tfs", "binary"),
-    ("doclens", "binary"),
-]
-
-
-def _encode_runs(terms, salts, ids, tfs, dls, gstarts, gends):
-    """Vectorized encode of CONTIGUOUS (term, salt) runs: one varint call
-    per column over the whole span, sliced per group by byte offsets.
-    ``terms`` is a per-group sequence (len == len(gstarts)); the numeric
-    arrays cover exactly the span [gstarts[0], gends[-1]) re-indexed from
-    0. No block metadata is stored: queries derive block bounds from the
-    decoded postings with query-time stats (query.py sorted_postings)."""
-    n = ids.size
-    glens = gends - gstarts
-
-    # delta encode doc_ids with a reset at each group start
+def _encode_runs(terms, salts, ids, tfs, dls, offsets) -> pa.RecordBatch:
+    """Encode contiguous (term, salt) groups, each in doc_id order: group
+    g is ``ids[offsets[g]:offsets[g + 1]]`` (``offsets`` starts at 0). One
+    varint call per column over the whole batch; the binary column's
+    offsets are the varint stream's byte offsets at group starts, so no
+    group is sliced in Python. No block metadata is stored: queries derive
+    block bounds from the decoded postings with query-time stats
+    (query.py sorted_postings)."""
+    starts = offsets[:-1]
     deltas = ids.copy()
-    deltas[1:] = ids[1:] - ids[:-1]
-    deltas[gstarts] = ids[gstarts]
+    deltas[1:] -= ids[:-1]
+    deltas[starts] = ids[starts]  # the doc_id delta restarts per group
 
-    dbuf, dlen = codec.encode_varint_with_lengths(deltas)
-    tbuf, tlen = codec.encode_varint_with_lengths(tfs)
-    lbuf, llen = codec.encode_varint_with_lengths(dls)
-    doff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(dlen, out=doff[1:])
-    toff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(tlen, out=toff[1:])
-    loff = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(llen, out=loff[1:])
-
-    s0, s1 = gstarts, gends
-    return {
-        "term": list(terms),
-        "salt": salts.astype(np.int32),
-        "n": glens.astype(np.int64),
-        "doc_ids": [dbuf[doff[a]:doff[z]] for a, z in zip(s0, s1)],
-        "tfs": [tbuf[toff[a]:toff[z]] for a, z in zip(s0, s1)],
-        "doclens": [lbuf[loff[a]:loff[z]] for a, z in zip(s0, s1)],
-    }
-
-
-def _runs_to_batch(outs: list[dict]):
-    import pyarrow as pa
-
-    cols = []
-    for name, typ in _PA_POSTINGS_FIELDS:
-        vals = [o[name] for o in outs]
-        if isinstance(vals[0], np.ndarray):
-            flat = np.concatenate(vals) if len(vals) > 1 else vals[0]
-        else:
-            flat = [x for v in vals for x in v]
-        cols.append(pa.array(flat, type=getattr(pa, typ)()))
-    return pa.RecordBatch.from_arrays(cols, [f[0] for f in _PA_POSTINGS_FIELDS])
-
-
-def _coalesce_batches(batches, target_rows: int):
-    """Concatenate upstream Arrow batches to ~target_rows before encoding.
-    Spark hands mapInArrow batches of arrow_batch_size (10k) rows; the
-    kernel pays fixed Python costs per batch (column conversions, carry
-    churn, one output RecordBatch per input batch), so coalescing amortizes
-    them ~25x while Python memory stays bounded at O(target_rows + largest
-    group) — the streaming claim is unchanged, the constant is just chosen
-    here instead of by the session's Arrow batch size."""
-    import pyarrow as pa
-
-    def flush(buf):
-        if len(buf) == 1:
-            yield buf[0]
-        else:
-            # combine_chunks may return MULTIPLE batches when a coalesced
-            # string/binary column would exceed the 2^31-byte offset limit;
-            # taking only [0] would silently drop the rest. The downstream
-            # encoder's carry logic handles groups split across yielded
-            # batches, so forwarding every batch is always safe.
-            yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
-
-    buf: list = []
-    rows = 0
-    for b in batches:
-        if b.num_rows == 0:
-            continue
-        buf.append(b)
-        rows += b.num_rows
-        if rows >= target_rows:
-            yield from flush(buf)
-            buf, rows = [], 0
-    if buf:
-        yield from flush(buf)
-
-
-def _encode_sorted_stream(cfg: EngineConfig):
-    """mapInArrow kernel over a hash(term, salt) shuffle partition already
-    SORTED by (term, salt, doc_id) — the Tungsten sort in the exchange
-    replaces the old in-Python lexsort/factorize/gather, and the kernel
-    becomes ONE linear streaming pass: group boundaries are found C-side
-    (Arrow not_equal on adjacent slices), complete groups within a batch
-    are encoded by the same whole-span vectorized routine, and the one
-    group straddling a batch edge is carried as numpy segments.
-
-    Scale property this buys (vs the previous whole-partition mapInPandas):
-    Python memory is O(arrow batch + largest single group), NOT O(shuffle
-    partition) — a 100 TB build can size shuffle partitions to the JVM's
-    comfort without a Python materialization cliff, and the JVM sort
-    spills gracefully where a pandas concat would OOM."""
-    def flush_carry(carry):
-        term, salt, parts = carry
-        ids = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        dls = np.concatenate([p[2] for p in parts])
-        return _encode_runs(
-            [term], np.array([salt]), ids, tfs, dls,
-            np.array([0]), np.array([ids.size]),
+    def varints(values):
+        buf, lens = codec.encode_varint_with_lengths(values)
+        ends = np.zeros(values.size + 1, dtype=np.int64)
+        np.cumsum(lens, out=ends[1:])
+        return pa.Array.from_buffers(
+            pa.binary(), starts.size,
+            [None, pa.py_buffer(ends[offsets].astype(np.int32)),
+             pa.py_buffer(buf)],
         )
 
-    coalesce_rows = cfg.encode_coalesce_rows
+    return pa.RecordBatch.from_arrays(
+        [terms, salts, pa.array(np.diff(offsets)),
+         varints(deltas), varints(tfs), varints(dls)],
+        names=POSTINGS_SCHEMA.names,
+    )
 
-    def fn(batches):
-        import pyarrow.compute as pc
 
-        carry = None  # (term, salt, [(ids, tfs, dls), ...]) open group
-        for batch in _coalesce_batches(batches, coalesce_rows):
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            t_arr = batch.column("term")
-            salts = batch.column("salt").to_numpy(zero_copy_only=False)
-            ids = batch.column("doc_id").to_numpy().astype(np.uint64)
-            tfs = batch.column("tf").to_numpy().astype(np.uint64)
-            dls = batch.column("doclen").to_numpy().astype(np.uint64)
-            if nb > 1:
-                neq = (
-                    pc.not_equal(t_arr.slice(1), t_arr.slice(0, nb - 1))
-                    .to_numpy(zero_copy_only=False)
-                    | (salts[1:] != salts[:-1])
-                )
-                starts = np.flatnonzero(neq) + 1  # group starts at i > 0
-            else:
-                starts = np.empty(0, dtype=np.int64)
-
-            first_term = t_arr[0].as_py()
-            first_salt = int(salts[0])
-            outs = []
-            if carry is not None and (
-                carry[0] != first_term or carry[1] != first_salt
-            ):
-                outs.append(flush_carry(carry))
-                carry = None
-
-            if starts.size == 0:
-                # the whole batch is one (possibly continuing) group
-                seg = (ids, tfs, dls)
-                if carry is None:
-                    carry = (first_term, first_salt, [seg])
-                else:
-                    carry[2].append(seg)
-            else:
-                p1 = int(starts[0])
-                if carry is not None:
-                    # batch prefix closes the open group
-                    carry[2].append((ids[:p1], tfs[:p1], dls[:p1]))
-                    outs.append(flush_carry(carry))
-                    carry = None
-                    mid_lo = p1
-                else:
-                    mid_lo = 0  # the prefix is itself a complete group
-                last = int(starts[-1])
-                if mid_lo < last:
-                    import pyarrow as pa
-
-                    gs = starts[:-1][starts[:-1] > mid_lo]
-                    gstarts = np.concatenate(([mid_lo], gs)).astype(np.int64)
-                    gends = np.append(gstarts[1:], last)
-                    gterms = t_arr.take(pa.array(gstarts)).to_pylist()
-                    outs.append(
-                        _encode_runs(
-                            gterms, salts[gstarts],
-                            ids[mid_lo:last], tfs[mid_lo:last],
-                            dls[mid_lo:last],
-                            gstarts - mid_lo, gends - mid_lo,
-                        )
-                    )
-                carry = (
-                    t_arr[last].as_py(), int(salts[last]),
-                    [(ids[last:], tfs[last:], dls[last:])],
-                )
-            if outs:
-                yield _runs_to_batch(outs)
-        if carry is not None:
-            yield _runs_to_batch([flush_carry(carry)])
-
-    return fn
+def _encode_groups(batches):
+    """Stateless ``mapInArrow`` kernel over (term, salt, postings) rows,
+    one row per group: the list offsets are the group boundaries, one
+    lexsort puts every group in doc_id order, one ``_encode_runs`` call
+    encodes the batch."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        lists = batch.column("postings")
+        offsets = lists.offsets.to_numpy().astype(np.int64)
+        offsets -= offsets[0]  # a sliced batch's offsets start past 0
+        rows = lists.flatten()
+        ids = rows.field("doc_id").to_numpy()
+        owner = np.repeat(np.arange(batch.num_rows), np.diff(offsets))
+        order = np.lexsort((ids, owner))
+        yield _encode_runs(
+            batch.column("term"), batch.column("salt"),
+            *(rows.field(c).to_numpy()[order].view(np.uint64)
+              for c in ("doc_id", "tf", "doclen")),
+            offsets,
+        )
 
 
 def encode_postings(
     triples: DataFrame, terms: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """Shared postings pipeline: salt hot terms (broadcast ONLY the salted
-    subset of the terms table), ONE (term, salt) shuffle whose reduce side
-    is JVM-sorted by (term, salt, doc_id) (Tungsten radix sort, spills to
-    disk at scale), then a STREAMING mapInArrow encoder (one linear pass,
-    O(batch + largest group) Python memory), then align rows with the
-    bucket partition dirs. Used by the full build, the shard builder, the
-    incremental appender and the segment merge — one tested kernel, four
-    call sites.
+    subset of the terms table), group the triples by (term, salt) with
+    Spark's own aggregation (``collect_list`` keeps its map-side partial
+    step), encode each Arrow batch of whole groups with one stateless
+    vectorized pass, then align rows with the bucket partition dirs. Used
+    by the full build, the shard builder, the incremental appender and the
+    segment merge — one tested kernel, four call sites.
+
+    Python memory per kernel call is one input batch: Spark caps it at
+    ``arrow_batch_size`` groups and at
+    ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MB by default),
+    and a group holds at most ``salt_threshold`` postings (a hotter term is
+    salted into groups of about ``salt_target``).
 
     The final bucket repartition is a second exchange, but of the COMPRESSED
     postings bytes (orders of magnitude smaller than the triples the first
@@ -387,34 +252,58 @@ def encode_postings(
             .otherwise(F.lit(0))
             .cast(IntegerType()),
         )
-        .drop("n_salts")
-        .select("term", "salt", "doc_id", "tf", "doclen")
     )
     return (
-        salted.repartition(cfg.shuffle_partitions, "term", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
-        .mapInArrow(_encode_sorted_stream(cfg), schema=POSTINGS_SCHEMA)
+        salted.groupBy("term", "salt")
+        .agg(F.collect_list(F.struct("doc_id", "tf", "doclen")).alias("postings"))
+        .mapInArrow(_encode_groups, schema=POSTINGS_SCHEMA)
         .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
         .repartition(cfg.n_buckets, "bucket")
     )
 
 
-def term_stats(triples: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """(term, df, cf, n_salts, bucket) from a triples set — the terms-table
-    shape. Salting plan: df > salt_threshold splits into ceil(df/salt_target)
+def plan_salts(term_counts: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """(term, df, cf) -> the terms-table shape (+ n_salts, bucket). The one
+    salting plan: df > salt_threshold splits into ceil(df/salt_target)
     sub-lists."""
-    return (
-        triples.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-        .withColumn(
-            "n_salts",
-            F.when(
-                F.col("df") > cfg.salt_threshold,
-                F.ceil(F.col("df") / cfg.salt_target).cast(IntegerType()),
-            ).otherwise(F.lit(1)),
-        )
-        .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
+    return term_counts.withColumn(
+        "n_salts",
+        F.when(
+            F.col("df") > cfg.salt_threshold,
+            F.ceil(F.col("df") / cfg.salt_target).cast(IntegerType()),
+        ).otherwise(F.lit(1)),
+    ).withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
+
+
+def term_stats(triples: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """(term, df, cf, n_salts, bucket) from a triples set."""
+    return plan_salts(
+        triples.groupBy("term").agg(
+            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
+        ),
+        cfg,
     )
+
+
+def docs_table(ingested: DataFrame, triples: DataFrame) -> DataFrame:
+    """The docs table: doc metadata plus doclen = sum(tf) over the doc's
+    triples (0 for a doc without tokens)."""
+    doclens = triples.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    return ingested.join(doclens, "doc_id", "left").select(
+        "doc_id", "repo", "path", "commit", "lang", "sha256",
+        F.coalesce("doclen", F.lit(0)).cast(LongType()).alias("doclen"),
+    )
+
+
+def stats_table(
+    spark: SparkSession, cfg: EngineConfig, n_docs: int, total_tf: int,
+    n_terms: int,
+) -> tuple[DataFrame, float]:
+    """(the one-row stats table, its avgdl): every writer commits the
+    same avgdl bits for the same totals."""
+    avgdl = float(total_tf) / n_docs if n_docs else 0.0
+    row = (n_docs, avgdl, n_terms, cfg.k1, cfg.b, cfg.block_size)
+    return spark.createDataFrame([row], schema=STATS_SCHEMA), avgdl
 
 
 class IndexBuilder:
@@ -544,17 +433,9 @@ class IndexBuilder:
         # ---- stage: docs (depends only on triples + ingested) ----
         def _docs_stage() -> None:
             t0 = time.time()
-            doclens = triples.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
-            docs_out = ingested.join(doclens, "doc_id", "left").select(
-                "doc_id",
-                "repo",
-                "path",
-                "commit",
-                "lang",
-                "sha256",
-                F.coalesce("doclen", F.lit(0)).cast(LongType()).alias("doclen"),
+            got = self._write_observed(
+                docs_table(ingested, triples), "docs", {"n": F.count(F.lit(1))}
             )
-            got = self._write_observed(docs_out, "docs", {"n": F.count(F.lit(1))})
             dt = time.time() - t0
             counts["n_docs"] = int(got["n"])
             metrics["docs"] = store.log_metrics(
@@ -652,11 +533,7 @@ class IndexBuilder:
                 )
             n_terms = counts.get("n_terms") or st.get("terms", {}).get("n_terms") \
                 or self._table_count("terms")
-            avgdl = float(total_tf) / n_docs if n_docs else 0.0
-            stats_df = spark.createDataFrame(
-                [(n_docs, avgdl, n_terms, cfg.k1, cfg.b, cfg.block_size)],
-                schema=STATS_SCHEMA,
-            )
+            stats_df, avgdl = stats_table(spark, cfg, n_docs, total_tf, n_terms)
             store.write_table(stats_df, "stats")
             metrics["stats"] = store.log_metrics(
                 "stats", n_docs=n_docs, avgdl=avgdl, n_terms=n_terms

@@ -33,7 +33,7 @@ _MASK7 = _U64(0x7F)
 def encode_varint_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     """LEB128-encode an array of non-negative integers; also return the
     per-value byte lengths so callers can slice the stream into sub-ranges
-    (the sorted-run posting builder encodes a whole partition in ONE call
+    (the posting builder encodes a whole Arrow batch in ONE call
     and splits per term by these offsets). Vectorized: loops over the
     (<=10) byte positions, not over values."""
     v = np.ascontiguousarray(values, dtype=_U64)

@@ -64,10 +64,6 @@ class EngineConfig:
     # --- execution ---
     shuffle_partitions: int = 32
     arrow_batch_size: int = 10_000
-    # the postings encoder coalesces incoming Arrow batches to this many
-    # rows before its linear pass: bounds Python memory at
-    # O(coalesce + largest group) while amortizing per-batch fixed costs
-    encode_coalesce_rows: int = 262_144
     # scan/shuffle partition sizing: Spark's 128MB/64MB defaults are right
     # at 100 TB; at bench scale (hundreds of MB) they collapse scans to a
     # couple of tasks and starve the cluster — size them so tasks ~ cores

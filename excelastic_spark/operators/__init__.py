@@ -10,7 +10,8 @@ maps the SURVEY.md §2 inventory to code for reviewers:
 
 2B (delegated to Elasticsearch, built from scratch here):
   B1      tokenizer.py
-  B2      codec.py + build._encode_sorted_stream
+  B2      codec.py + build.encode_postings (Spark groups by
+          (term, salt); build._encode_groups encodes per batch)
   B3      streaming/incremental.py (append + merge_segments)
   B4      build.py terms/stats stages
   B5      build.py salting plan (df-threshold -> salted sub-lists)

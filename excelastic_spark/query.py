@@ -177,6 +177,11 @@ class _ParquetPart:
         return tbl.filter(pc.is_in(tbl.column("term"), value_set=wanted))
 
 
+def _check_mode(mode: str) -> None:
+    if mode not in ("and", "or"):
+        raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
+
+
 RESULT_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
@@ -538,8 +543,7 @@ class QueryEngine:
         vectorized path otherwise; 'wand'/'exhaustive'/'dense' force a
         path. All paths produce bit-identical results
         (test_wand_equals_exhaustive, test_dense_equals_sorted)."""
-        if mode not in ("and", "or"):
-            raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
+        _check_mode(mode)
         t0 = time.time()
         st = self.pin()
         uniq = sorted(set(terms))
@@ -631,8 +635,7 @@ class QueryEngine:
 
         Raises if the tier is missing or stale (build_heads after build,
         refresh_heads after append)."""
-        if mode not in ("and", "or"):
-            raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
+        _check_mode(mode)
         if k <= 0 or not terms:
             # the exact top-0 set and search([]) are both empty: certified
             return QueryResult(
@@ -817,7 +820,10 @@ class QueryEngine:
         whenever it executes — as long as it runs within ``vacuum``'s grace
         window after a compaction replaces those dirs; later it fails with
         a file-not-found error, never a wrong answer."""
+        _check_mode(mode)
         uniq = sorted(set(terms))
+        if not uniq:
+            return self.spark.createDataFrame([], schema=RESULT_SCHEMA)
         st = self.pin()
         avgdl, k1, b = st.avgdl, st.k1, st.b
         scan = st.postings_scan(uniq).select(

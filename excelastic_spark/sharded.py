@@ -51,13 +51,14 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark.sql.types import IntegerType, LongType
+from pyspark.sql.types import LongType
 
 from excelastic_spark.build import (
-    LAYOUT_VERSION,
-    STATS_SCHEMA,
-    bucket_expr,
+    docs_table,
     encode_postings,
+    plan_salts,
+    stats_table,
+    term_stats,
     validate_and_fingerprint,
 )
 from excelastic_spark.catalog import IndexStore
@@ -185,17 +186,13 @@ def build_shard(
     triples = spark.read.parquet(tri_path)
 
     # shard-local docs segment (doclen from triples, as the plain build)
-    doclens = triples.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
-    docs_out = ingested.join(doclens, "doc_id", "left").select(
-        "doc_id", "repo", "path", "commit", "lang", "sha256",
-        F.coalesce("doclen", F.lit(0)).cast(LongType()).alias("doclen"),
-    )
-    writes.append(("docs", store.stage_table(docs_out, "docs"), "append"))
+    writes.append((
+        "docs", store.stage_table(docs_table(ingested, triples), "docs"),
+        "append",
+    ))
 
     # shard-local term stats; salting threshold scaled by shard count
     # because a term's postings split ~uniformly across doc-hash shards
-    from excelastic_spark.build import term_stats
-
     shard_cfg = cfg.with_overrides(
         salt_threshold=max(1, cfg.salt_threshold // n_shards),
         salt_target=max(1, cfg.salt_target // n_shards),
@@ -259,19 +256,12 @@ def finalize(
         raise RuntimeError(f"shards not built: {missing}")
 
     shard_terms = store.read_table(spark, "shard_terms")
-    terms = (
-        shard_terms.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn(
-            "n_salts",
-            F.when(
-                F.col("df") > cfg.salt_threshold,
-                F.ceil(F.col("df") / cfg.salt_target).cast(IntegerType()),
-            ).otherwise(F.lit(1)),
-        )
-        .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
-        .repartition(cfg.n_buckets, "bucket")
-    )
+    terms = plan_salts(
+        shard_terms.groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf")
+        ),
+        cfg,
+    ).repartition(cfg.n_buckets, "bucket")
     from pyspark.sql import Observation
 
     # n_terms observed inside the write job (build._write_observed
@@ -299,11 +289,7 @@ def finalize(
             f"doc count mismatch: docs table {actual_docs}, shard stages "
             f"{n_docs}, plan {plan['n_docs']} — duplicate or missing segments"
         )
-    avgdl = float(total_tf) / n_docs if n_docs else 0.0
-    stats_df = spark.createDataFrame(
-        [(n_docs, avgdl, n_terms, cfg.k1, cfg.b, cfg.block_size)],
-        schema=STATS_SCHEMA,
-    )
+    stats_df, avgdl = stats_table(spark, cfg, n_docs, total_tf, n_terms)
     store.write_table(stats_df, "stats")
     store.commit_stage("finalize", plan["fingerprint"], n_docs=n_docs)
     store.commit_stage(

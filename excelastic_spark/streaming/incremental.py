@@ -17,7 +17,7 @@ Cost model (the 100 TB requirement):
   are appended to but NEVER re-read.
 * ``merge_segments`` is **O(postings bytes)**, never O(corpus): appended
   posting rows are DECODED back to (doc_id, term, tf, doclen) rows in
-  executors and re-encoded through the shared sorted-run kernel (which also
+  executors and re-encoded through the shared postings encoder (which also
   re-applies the salting plan from the current terms table). No
   re-tokenization, no triples read — the Lucene merge model, where merge
   cost is proportional to the segments being merged.
@@ -44,12 +44,14 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType
+from pyspark.sql.types import LongType
 
 from excelastic_spark import codec
 from excelastic_spark.build import (
-    STATS_SCHEMA,
+    docs_table,
     encode_postings,
+    plan_salts,
+    stats_table,
     validate_and_fingerprint,
 )
 from excelastic_spark.catalog import IndexStore
@@ -218,11 +220,7 @@ class IncrementalIndexer:
 
         # segment agg: doc count / min id / total_tf in ONE pass over the
         # segment triples (plus segment docs without triples via the join)
-        doclens = seg_triples.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
-        docs_out = seg.join(doclens, "doc_id", "left").select(
-            "doc_id", "repo", "path", "commit", "lang", "sha256",
-            F.coalesce("doclen", F.lit(0)).cast(LongType()).alias("doclen"),
-        )
+        docs_out = docs_table(seg, seg_triples)
         writes.append(("docs", store.stage_table(docs_out, "docs"), "append"))
         seg_agg = seg.agg(
             F.count(F.lit(1)).alias("n"),
@@ -245,7 +243,7 @@ class IncrementalIndexer:
             )
         else:
             merged_raw = inc_terms
-        merged = self._plan_salts(merged_raw)
+        merged = plan_salts(merged_raw, cfg)
         # n_terms observed INSIDE the staging write (build._write_observed
         # pattern): a separate .count() would run the vocab-sized old-terms
         # union + groupBy twice per append
@@ -268,11 +266,7 @@ class IncrementalIndexer:
         # ---- stats from running totals (no index scan)
         n_docs = tot["n_docs"] + inc_docs
         total_tf = tot["total_tf"] + inc_tf
-        avgdl = float(total_tf) / n_docs if n_docs else 0.0
-        stats_df = spark.createDataFrame(
-            [(n_docs, avgdl, n_terms, cfg.k1, cfg.b, cfg.block_size)],
-            schema=STATS_SCHEMA,
-        )
+        stats_df, _ = stats_table(spark, cfg, n_docs, total_tf, n_terms)
         writes.append(("stats", store.stage_table(stats_df, "stats"), "overwrite"))
 
         # ---- postings segment: same shared kernel; salting plan from the
@@ -315,29 +309,13 @@ class IncrementalIndexer:
         )
         return rec
 
-    def _plan_salts(self, term_counts: DataFrame) -> DataFrame:
-        """(term, df, cf) -> full terms-table shape (n_salts, bucket)."""
-        from excelastic_spark.build import bucket_expr
-
-        cfg = self.cfg
-        return (
-            term_counts.withColumn(
-                "n_salts",
-                F.when(
-                    F.col("df") > cfg.salt_threshold,
-                    F.ceil(F.col("df") / cfg.salt_target).cast(IntegerType()),
-                ).otherwise(F.lit(1)),
-            )
-            .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
-        )
-
     # -------------------------------------------------------------- merge
 
     def merge_segments(self) -> dict[str, Any]:
         """Compact multi-segment postings WITHOUT touching the corpus or
         triples: decode the appended posting rows back to triples rows in
         executors (O(postings bytes) input), then re-encode through the
-        shared sorted-run kernel, re-applying the salting plan from the
+        shared postings encoder, re-applying the salting plan from the
         current terms table. Snapshot-swapped by the manifest, so readers
         never see a half-merged index.
 

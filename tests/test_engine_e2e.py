@@ -192,6 +192,20 @@ def test_distributed_path_parity(built):
         assert np.allclose(dist["score"], exp["score"], rtol=1e-12), q
 
 
+def test_distributed_empty_terms_and_bad_mode(built):
+    """No terms gives an empty (doc_id, score) frame, as search([]) gives
+    an empty result; an unknown mode is refused as search refuses it."""
+    from excelastic_spark.query import RESULT_SCHEMA
+
+    _, _, qe, _, _ = built
+    for mode in ("or", "and"):
+        df = qe.search_distributed([], mode, 10)
+        assert df.schema == RESULT_SCHEMA
+        assert df.collect() == []
+    with pytest.raises(ValueError, match="mode"):
+        qe.search_distributed(["import"], "xor", 10)
+
+
 def test_wand_prunes_on_real_corpus(built):
     _, _, qe, _, _ = built
     res = qe.search(["import", "return", "def"], "or", 5, algo="wand")
