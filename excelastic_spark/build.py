@@ -22,8 +22,9 @@ rule's checkpoint/resume requirement):
             spark.sql.execution.arrow.maxBytesPerBatch bytes; a group
             holds at most salt_threshold postings (about salt_target once
             a hot term is salted)
-  stats     collection stats assembled from the stages' Observation
-            metrics (no extra jobs)
+  stats     the one-row collection stats, assembled on the driver from
+            the stages' Observation metrics and written with pyarrow: no
+            Spark job
 
 Skew handling: terms with df > cfg.salt_threshold are split into
 ceil(df/salt_target) salts by pmod(xxhash64(doc_id), S); ONLY the hot subset
@@ -41,12 +42,13 @@ reference's progress events (ElasticWriter.java:147-156).
 from __future__ import annotations
 
 import time
-from typing import Any
+from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -61,6 +63,7 @@ from excelastic_spark import codec
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
 from excelastic_spark.corpus import (
+    ID_BUCKETS,
     ParserException,
     id_bucket_expr,
     ingest_corpus,
@@ -101,38 +104,51 @@ def bucket_expr(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast(IntegerType())
 
 
+class Validation(NamedTuple):
+    fingerprint: str
+    n: int
+    bucket_counts: dict[int, int]  # id bucket -> rows, for assign_doc_ids
+    min_doc_id: int | None  # pre_ingested input only
+
+
 def validate_and_fingerprint(
-    corpus: DataFrame, pre_ingested: bool
-) -> tuple[str, int, dict[int, int]]:
+    corpus: DataFrame, pre_ingested: bool, id_buckets: int = ID_BUCKETS
+) -> Validation:
     """ONE aggregation pass, grouped by the doc-id bucket: fail-fast
     validation (null keys/content, duplicate keys — the initialize() dry-run
     analog) fused with the order-independent lineage fingerprint (count +
     crc sum) AND the per-bucket counts that doc-id assignment needs — so
-    ingest never re-scans the corpus just to count buckets.
+    ingest never re-scans the corpus just to count buckets. ``id_buckets``
+    must be the bucket count the caller assigns ids with. A pre_ingested
+    corpus also yields its smallest doc_id (the append's disjointness
+    guard).
 
     Grouping by the id bucket keeps every aggregate exact: the bucket is a
     function of the (repo, path, commit) key, so per-bucket distinct-key
     counts sum to the global distinct count."""
     key_cols = ("repo", "path", "commit")
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.when(
+                F.col("content").isNull()
+                | F.col("repo").isNull()
+                | F.col("path").isNull()
+                | F.col("commit").isNull()
+                | F.col("lang").isNull(),  # CORPUS_SCHEMA: non-null
+                1,
+            ).otherwise(0)
+        ).alias("bad"),
+        F.count_distinct(*[F.col(c) for c in key_cols]).alias(
+            "distinct_keys"
+        ),
+        F.sum(F.crc32(F.col("content"))).alias("crc"),
+    ]
+    if pre_ingested:
+        aggs.append(F.min("doc_id").alias("min_id"))
     rows = (
-        corpus.groupBy(id_bucket_expr().alias("_bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(
-                    F.col("content").isNull()
-                    | F.col("repo").isNull()
-                    | F.col("path").isNull()
-                    | F.col("commit").isNull()
-                    | F.col("lang").isNull(),  # CORPUS_SCHEMA: non-null
-                    1,
-                ).otherwise(0)
-            ).alias("bad"),
-            F.count_distinct(*[F.col(c) for c in key_cols]).alias(
-                "distinct_keys"
-            ),
-            F.sum(F.crc32(F.col("content"))).alias("crc"),
-        )
+        corpus.groupBy(id_bucket_expr(id_buckets).alias("_bucket"))
+        .agg(*aggs)
         .collect()
     )
     n = sum(r["n"] for r in rows)
@@ -140,17 +156,22 @@ def validate_and_fingerprint(
     distinct_keys = sum(r["distinct_keys"] for r in rows)
     crc = sum(r["crc"] or 0 for r in rows)
     bucket_counts = {r["_bucket"]: r["n"] for r in rows}
+    min_id = min(
+        (r["min_id"] for r in rows if r["min_id"] is not None), default=None
+    ) if pre_ingested else None
     if bad > 0:
         raise ParserException(f"{bad} rows with null key/content")
     if not pre_ingested and distinct_keys != n:
         raise ParserException(
             f"duplicate (repo,path,commit) keys: {n - distinct_keys}"
         )
-    return (f"v={LAYOUT_VERSION},n={n},crc={crc}", int(n), bucket_counts)
+    return Validation(
+        f"v={LAYOUT_VERSION},n={n},crc={crc}", int(n), bucket_counts, min_id
+    )
 
 
 def corpus_fingerprint(corpus: DataFrame) -> str:
-    return validate_and_fingerprint(corpus, pre_ingested=True)[0]
+    return validate_and_fingerprint(corpus, pre_ingested=True).fingerprint
 
 
 # ---------------------------------------------------------------------------
@@ -296,14 +317,32 @@ def docs_table(ingested: DataFrame, triples: DataFrame) -> DataFrame:
 
 
 def stats_table(
-    spark: SparkSession, cfg: EngineConfig, n_docs: int, total_tf: int,
-    n_terms: int,
-) -> tuple[DataFrame, float]:
-    """(the one-row stats table, its avgdl): every writer commits the
-    same avgdl bits for the same totals."""
+    cfg: EngineConfig, n_docs: int, total_tf: int, n_terms: int
+) -> tuple[pa.Table, float]:
+    """(the one-row stats table, its avgdl), built on the driver with the
+    names and types of STATS_SCHEMA: every writer commits the same avgdl
+    bits for the same totals, and the catalog writes it without a Spark
+    job."""
     avgdl = float(total_tf) / n_docs if n_docs else 0.0
     row = (n_docs, avgdl, n_terms, cfg.k1, cfg.b, cfg.block_size)
-    return spark.createDataFrame([row], schema=STATS_SCHEMA), avgdl
+    table = pa.Table.from_pylist(
+        [dict(zip(STATS_SCHEMA.names, row))],
+        schema=to_arrow_schema(STATS_SCHEMA),
+    )
+    return table, avgdl
+
+
+def stage_observed(
+    store: IndexStore, df: DataFrame, table: str, aggs: dict[str, Any],
+    partition_by: list[str] | None = None,
+) -> tuple[str, dict[str, Any]]:
+    """Stage a table while collecting metrics IN the write job
+    (Observation API) — no separate count/agg jobs. (staged path, the
+    observed values)."""
+    obs = Observation(f"obs_{table}")
+    observed = df.observe(obs, *[v.alias(k) for k, v in aggs.items()])
+    path = store.stage_table(observed, table, partition_by=partition_by)
+    return path, dict(obs.get)
 
 
 class IndexBuilder:
@@ -334,12 +373,11 @@ class IndexBuilder:
         self, df: DataFrame, table: str, aggs: dict[str, Any],
         partition_by: list[str] | None = None,
     ) -> dict[str, Any]:
-        """Write a stage table while collecting metrics IN the write job
-        (Observation API) — no separate count/agg jobs."""
-        obs = Observation(f"obs_{table}")
-        observed = df.observe(obs, *[v.alias(k) for k, v in aggs.items()])
-        self.store.write_table(observed, table, partition_by=partition_by)
-        return dict(obs.get)
+        """Write and commit a stage table, observing ``aggs`` in the write
+        job (:func:`stage_observed`)."""
+        path, got = stage_observed(self.store, df, table, aggs, partition_by)
+        self.store.commit_snapshot([(table, path, "overwrite")])
+        return got
 
     def _table_count(self, table: str) -> int:
         # parquet metadata count — used only on resume when the stage's
@@ -370,7 +408,7 @@ class IndexBuilder:
             corpus = transform(corpus)
         # ---- stage: validate + fingerprint (one scan, fail-fast) ----
         self._emit("verify", 2.0)
-        fp, n_input, bucket_counts = validate_and_fingerprint(
+        fp, _, bucket_counts, _ = validate_and_fingerprint(
             corpus, pre_ingested
         )
         # layout knobs are part of the lineage: a rerun with a different
@@ -533,8 +571,8 @@ class IndexBuilder:
                 )
             n_terms = counts.get("n_terms") or st.get("terms", {}).get("n_terms") \
                 or self._table_count("terms")
-            stats_df, avgdl = stats_table(spark, cfg, n_docs, total_tf, n_terms)
-            store.write_table(stats_df, "stats")
+            stats, avgdl = stats_table(cfg, n_docs, total_tf, n_terms)
+            store.write_table(stats, "stats")
             metrics["stats"] = store.log_metrics(
                 "stats", n_docs=n_docs, avgdl=avgdl, n_terms=n_terms
             )

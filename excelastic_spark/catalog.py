@@ -15,7 +15,10 @@ with Iceberg-equivalent semantics at the call sites:
 * per-stage lineage entries (fingerprint of the input snapshot) so a build
   is checkpoint-resumable: a re-run skips stages whose committed fingerprint
   matches (north rule: "resumable from checkpoint with per-partition
-  lineage").
+  lineage");
+* the Spark read schema of every committed snapshot dir, recorded in the
+  manifest at commit (Iceberg's table-metadata schema analog), so a read
+  of an engine table plans without a footer-inference job.
 
 Swapping in real Iceberg is a config change: replace ``write_table`` /
 ``read_table`` bodies with ``writeTo(...).createOrReplace()`` / catalog reads.
@@ -24,6 +27,7 @@ Swapping in real Iceberg is a config change: replace ``write_table`` /
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import threading
@@ -32,7 +36,17 @@ import uuid
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 try:
     import fcntl
@@ -50,13 +64,20 @@ class Snapshot:
 
     ``version`` is the ``(mtime_ns, size)`` of the manifest file this was
     parsed from (None when no manifest exists): a reader compares it with
-    one ``os.stat`` to decide whether a newer version is out."""
+    one ``os.stat`` to decide whether a newer version is out.
+
+    ``schemas`` maps each committed snapshot dir to the Spark schema
+    (``StructType.jsonValue()``) a read of it yields, recorded at commit.
+    :meth:`read` hands it to Spark so no footer-inference job runs; a dir
+    without one (an index committed before schemas were recorded) is read
+    with inference, as before."""
 
     root: str
     version: tuple[int, int] | None
     tables: dict[str, list[str]]
     stages: dict[str, dict[str, Any]]
     config: dict[str, Any] | None
+    schemas: dict[str, dict[str, Any]]
 
     def paths(self, table: str) -> list[str]:
         loc = self.tables.get(table)
@@ -65,14 +86,58 @@ class Snapshot:
         return loc
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        paths = self.paths(table)
         # one read per snapshot dir, unioned: each dir does its own hive
         # partition discovery (a single multi-root read conflicts);
         # partition pruning pushes into every branch of the union
-        df = spark.read.parquet(paths[0])
-        for p in paths[1:]:
-            df = df.unionByName(spark.read.parquet(p))
-        return df
+        return functools.reduce(DataFrame.unionByName, (
+            read_parquet(spark, p, self.schemas.get(p))
+            for p in self.paths(table)
+        ))
+
+    def stats_row(self) -> dict[str, Any]:
+        """The one-row stats table, read on the driver with pyarrow: no
+        Spark job."""
+        (path,) = self.paths("stats")  # KeyError on an unbuilt index
+        return pq.read_table(path).to_pylist()[0]
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: dict[str, Any] | None = None
+) -> DataFrame:
+    """A parquet dir as a DataFrame: with a known ``schema`` (JSON) Spark
+    plans the scan without inferring it from the files' footers."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+def _nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_schema(
+    df: DataFrame | pa.Table, partition_by: list[str] | None = None
+) -> dict[str, Any]:
+    """The schema a Spark read of ``df``'s written dir yields: partition
+    columns last, every field nullable (file sources read nullable)."""
+    schema = (
+        from_arrow_schema(df.schema) if isinstance(df, pa.Table)
+        else df.schema
+    )
+    part = partition_by or []
+    fields = [f for f in schema.fields if f.name not in part]
+    fields += [schema[c] for c in part]
+    return _nullable(StructType(fields)).jsonValue()
 
 
 class IndexStore:
@@ -91,6 +156,8 @@ class IndexStore:
         self._lock_path = os.path.join(self.root, ".manifest.lock")
         self._writer_tlock = threading.Lock()
         self._writer_lock_path = os.path.join(self.root, ".writer.lock")
+        # staged path -> its read schema, until commit_snapshot records it
+        self._staged: dict[str, dict[str, Any]] = {}
 
     @contextlib.contextmanager
     def writer_lock(self):
@@ -161,6 +228,7 @@ class IndexStore:
             },
             stages=m.get("stages", {}),
             config=m.get("config"),
+            schemas=m.get("schemas", {}),
         )
 
     def _commit_manifest(self, m: dict[str, Any]) -> None:
@@ -179,21 +247,35 @@ class IndexStore:
 
     def stage_table(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         table: str,
         partition_by: list[str] | None = None,
     ) -> str:
         """Write a snapshot dir WITHOUT committing it to the manifest.
         Until :meth:`commit_snapshot` publishes the path, readers cannot see
         it and a crash leaves the index exactly as before (the staged dir is
-        an orphan, removable by :meth:`vacuum`)."""
+        an orphan, removable by :meth:`vacuum`).
+
+        A small driver-side ``pa.Table`` (the one-row stats table) is
+        written with pyarrow, as one file: no Spark job."""
         snap = f"snap-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.root, table, snap)
-        w = df.write.mode("errorifexists")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        if isinstance(df, pa.Table):
+            assert not partition_by, "a driver-side table is one file"
+            os.makedirs(path)
+            pq.write_table(df, os.path.join(path, "part-00000.parquet"))
+        else:
+            w = df.write.mode("errorifexists")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(path)
+        self._staged[path] = _read_schema(df, partition_by)
         return path
+
+    def read_staged(self, spark: SparkSession, path: str) -> DataFrame:
+        """Read back a dir this store staged, with the schema of the
+        DataFrame written there (no inference job)."""
+        return read_parquet(spark, path, self._staged.get(path))
 
     def commit_snapshot(
         self,
@@ -210,9 +292,12 @@ class IndexStore:
 
         ``writes``: ``(table, staged_path, mode)`` with mode ``'overwrite'``
         (Iceberg createOrReplace) or ``'append'`` (adds a snapshot dir that
-        readers union — segment-append, SURVEY.md §2B B3)."""
+        readers union — segment-append, SURVEY.md §2B B3). Each staged
+        dir's read schema is recorded with it; entries of dirs no table
+        names any more are dropped."""
         with self._commit_lock():
             m = self.manifest()
+            schemas = m.get("schemas", {})
             for table, path, mode in writes:
                 if mode == "append" and table in m["tables"]:
                     existing = m["tables"][table]
@@ -226,6 +311,11 @@ class IndexStore:
                     {"table": table, "path": path, "ts": time.time(),
                      "mode": mode}
                 )
+                schema = self._staged.pop(path, None)
+                if schema is not None:
+                    schemas[path] = schema
+            live = _live_paths(m)
+            m["schemas"] = {p: v for p, v in schemas.items() if p in live}
             for stage, entry in (stages or {}).items():
                 m["stages"][stage] = {"ts": time.time(), **entry}
             if config is not None:
@@ -265,9 +355,7 @@ class IndexStore:
         import shutil
 
         m = self.manifest()
-        live: set[str] = set()
-        for loc in m["tables"].values():
-            live.update(loc if isinstance(loc, list) else [loc])
+        live = _live_paths(m)
         replaced = _replaced_at(m["snapshots"])
         now = time.time()
         removed = []
@@ -342,6 +430,13 @@ class IndexStore:
         with open(self.metrics_path, "a") as f:
             f.write(json.dumps(rec, sort_keys=True) + "\n")
         return rec
+
+
+def _live_paths(m: dict[str, Any]) -> set[str]:
+    live: set[str] = set()
+    for loc in m["tables"].values():
+        live.update(loc if isinstance(loc, list) else [loc])
+    return live
 
 
 def _replaced_at(log: list[dict[str, Any]]) -> dict[str, float]:

@@ -211,7 +211,7 @@ def build_heads(
     ``avgdl_ref`` overrides the selection statistic's avgdl (defaults to
     the CURRENT stats avgdl). Selection only ranks postings within a row;
     the exclusion bounds are avgdl-free, so any pin is correct."""
-    st = store.read_table(spark, "stats").collect()[0]
+    st = store.snapshot().stats_row()
     avgdl = float(avgdl_ref) if avgdl_ref is not None else float(st["avgdl"])
     k1, b = float(st["k1"]), float(st["b"])
     seg_paths = store.table_path("postings")

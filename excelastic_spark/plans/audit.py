@@ -4,11 +4,19 @@ pruning on the bucket directory, no row-at-a-time Python in whole-stage
 codegen spans. Used by tests and available interactively:
 
     from excelastic_spark.plans.audit import explain_str, assert_pushed_filters
+
+``count_jobs`` counts the Spark jobs a call launches, for job budgets.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -39,3 +47,21 @@ def assert_no_python_row_udf(df: DataFrame) -> None:
     plans may contain ArrowEval / mapInPandas nodes only."""
     plan = explain_str(df, "extended")
     assert "BatchEvalPython" not in plan, plan
+
+
+def count_jobs(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """(``fn()``, the number of Spark jobs it launched). ``fn`` runs under
+    a job group of its own, read back from the status tracker once the
+    listener bus has delivered every job-start event. Jobs launched from a
+    thread ``fn`` starts are counted only if that thread inherits the
+    caller's local properties (``pyspark.inheritable_thread_target``)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # type: ignore[union-attr]
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -280,7 +280,7 @@ class SnapshotState:
         # persisted config; the caller's cfg supplies execution knobs. A
         # rebuild under another layout is a new state with its own buckets.
         self.cfg = cfg.with_layout(snap.config)
-        st = self._stats_row()
+        st = snap.stats_row()
         self.n_docs = int(st["n_docs"])
         self.avgdl = float(st["avgdl"])
         self.k1 = float(st["k1"])
@@ -301,19 +301,6 @@ class SnapshotState:
             OrderedDict()
         )
         self.cache_bytes = 0
-
-    def _stats_row(self) -> dict:
-        """The single stats row, via a local pyarrow read when possible
-        (no Spark job on engine construction / snapshot refresh)."""
-        paths = self.snap.paths("stats")  # KeyError on an unbuilt index
-        try:
-            import pyarrow.dataset as pads
-
-            return pads.dataset(
-                paths, format="parquet"
-            ).to_table().to_pylist()[0]
-        except Exception:
-            return self.snap.read(self.spark, "stats").collect()[0].asDict()
 
     @property
     def heads_fresh(self) -> bool:

@@ -57,6 +57,7 @@ from excelastic_spark.build import (
     docs_table,
     encode_postings,
     plan_salts,
+    stage_observed,
     stats_table,
     term_stats,
     validate_and_fingerprint,
@@ -71,7 +72,7 @@ def plan_shards(
     corpus: DataFrame, n_shards: int, store: IndexStore, cfg: EngineConfig
 ) -> dict[str, Any]:
     """Validate + fingerprint + bucket offsets -> persisted shard plan."""
-    fp, n_docs, bucket_counts = validate_and_fingerprint(
+    fp, n_docs, bucket_counts, _ = validate_and_fingerprint(
         corpus, pre_ingested=False
     )
     # layout into the plan fingerprint: re-planning with different knobs
@@ -178,12 +179,14 @@ def build_shard(
     writes: list[tuple[str, str, str]] = []
     ing_path = store.stage_table(ingested, "ingested")
     writes.append(("ingested", ing_path, "append"))
-    ingested = spark.read.parquet(ing_path)
+    ingested = store.read_staged(spark, ing_path)
 
-    triples = tokenize_triples(ingested)
-    tri_path = store.stage_table(triples, "triples")
+    tri_path, agg = stage_observed(
+        store, tokenize_triples(ingested), "triples",
+        {"n_triples": F.count(F.lit(1)), "total_tf": F.sum("tf")},
+    )
     writes.append(("triples", tri_path, "append"))
-    triples = spark.read.parquet(tri_path)
+    triples = store.read_staged(spark, tri_path)
 
     # shard-local docs segment (doclen from triples, as the plain build)
     writes.append((
@@ -204,11 +207,7 @@ def build_shard(
         shard_terms, "shard_terms", partition_by=["bucket"]
     )
     writes.append(("shard_terms", terms_path, "append"))
-    shard_terms = spark.read.parquet(terms_path)
-
-    agg = triples.agg(
-        F.count(F.lit(1)).alias("n_triples"), F.sum("tf").alias("total_tf")
-    ).collect()[0]
+    shard_terms = store.read_staged(spark, terms_path)
 
     postings = encode_postings(triples, shard_terms, shard_cfg)
     writes.append((
@@ -289,8 +288,8 @@ def finalize(
             f"doc count mismatch: docs table {actual_docs}, shard stages "
             f"{n_docs}, plan {plan['n_docs']} — duplicate or missing segments"
         )
-    stats_df, avgdl = stats_table(spark, cfg, n_docs, total_tf, n_terms)
-    store.write_table(stats_df, "stats")
+    stats, avgdl = stats_table(cfg, n_docs, total_tf, n_terms)
+    store.write_table(stats, "stats")
     store.commit_stage("finalize", plan["fingerprint"], n_docs=n_docs)
     store.commit_stage(
         "totals", plan["fingerprint"], n_docs=n_docs, total_tf=total_tf,

@@ -15,6 +15,15 @@ Cost model (the 100 TB requirement):
   (vocab-sized, tiny next to the corpus), and collection stats advance from
   running totals kept in the manifest — the triples/docs/postings tables
   are appended to but NEVER re-read.
+* At bench scale an append's cost is mostly Spark's fixed cost per job,
+  so it launches only jobs that move data: one validation pass (which
+  also yields the id-bucket counts and, pre_ingested, min(doc_id)), then
+  the staged writes themselves. Segment totals are Observations on those
+  writes, staged dirs and committed tables are read with their recorded
+  schemas (no inference job), the postings encoder reads the staged terms
+  dir instead of recomputing the merge, and the stats row is written on
+  the driver. 18 jobs per 1k-doc append, the caller's input read
+  included (tests/test_job_budget.py).
 * ``merge_segments`` is **O(postings bytes)**, never O(corpus): appended
   posting rows are DECODED back to (doc_id, term, tf, doclen) rows in
   executors and re-encoded through the shared postings encoder (which also
@@ -51,6 +60,7 @@ from excelastic_spark.build import (
     docs_table,
     encode_postings,
     plan_salts,
+    stage_observed,
     stats_table,
     validate_and_fingerprint,
 )
@@ -105,7 +115,7 @@ class IncrementalIndexer:
             }
         if not self.store.has_table("stats"):
             return {"n_docs": 0, "total_tf": 0, "max_doc_id": -1}
-        srow = self.store.read_table(self.spark, "stats").collect()[0]
+        srow = self.store.snapshot().stats_row()
         n_docs = int(srow["n_docs"])
         total_tf = st.get("triples", {}).get("total_tf")
         if total_tf is None:
@@ -190,46 +200,51 @@ class IncrementalIndexer:
         # via _bulk with auto-generated ids (ElasticWriter.java:180-184), so
         # re-importing a file duplicates rows there too; exact dedup is the
         # dedup_exact operator's job, not the ingest path's.
-        validate_and_fingerprint(increment, pre_ingested=pre_ingested)
+        v = validate_and_fingerprint(
+            increment, pre_ingested, id_buckets=cfg.shuffle_partitions
+        )
         tot = self._totals()
         next_id = tot["max_doc_id"] + 1
         if pre_ingested:
             ingested = increment
-            # disjointness guard BEFORE any segment write (one pass over the
-            # increment only): overlapping doc_ids would silently corrupt
-            # the doc-disjoint segment invariant append/merge/query rely on
-            g = ingested.agg(F.min("doc_id").alias("min_id")).collect()[0]
-            if g["min_id"] is not None and g["min_id"] < next_id:
+            # disjointness guard BEFORE any segment write (min(doc_id) came
+            # with the validation pass): overlapping doc_ids would silently
+            # corrupt the doc-disjoint segment invariant append/merge/query
+            # rely on
+            if v.min_doc_id is not None and v.min_doc_id < next_id:
                 raise ValueError(
-                    f"pre_ingested increment doc_ids start at {g['min_id']} "
+                    f"pre_ingested increment doc_ids start at {v.min_doc_id} "
                     f"but the index already contains ids up to {next_id - 1}"
                 )
         else:
-            with_ids = assign_doc_ids(increment, partitions=cfg.shuffle_partitions)
+            with_ids = assign_doc_ids(
+                increment, partitions=cfg.shuffle_partitions,
+                bucket_counts=v.bucket_counts,
+            )
             ingested = with_ids.withColumn(
                 "doc_id", (F.col("doc_id") + F.lit(next_id)).cast(LongType())
             ).withColumn("sha256", F.sha2(F.col("content"), 256))
+        # every segment total is observed inside the write that stages it
+        # (the build's pattern), and every read-back of a staged dir uses
+        # the schema just written: no count, agg or inference jobs
         writes: list[tuple[str, str, str]] = []
-        seg_path = store.stage_table(ingested, "ingested")
+        seg_path, seg_agg = stage_observed(
+            store, ingested, "ingested",
+            {"n": F.count(F.lit(1)), "max_id": F.max("doc_id")},
+        )
         writes.append(("ingested", seg_path, "append"))
-        seg = spark.read.parquet(seg_path)
+        seg = store.read_staged(spark, seg_path)
 
-        tri_path = store.stage_table(tokenize_triples(seg), "triples")
+        tri_path, tri_agg = stage_observed(
+            store, tokenize_triples(seg), "triples", {"tf": F.sum("tf")}
+        )
         writes.append(("triples", tri_path, "append"))
-        seg_triples = spark.read.parquet(tri_path)
+        seg_triples = store.read_staged(spark, tri_path)
 
-        # segment agg: doc count / min id / total_tf in ONE pass over the
-        # segment triples (plus segment docs without triples via the join)
         docs_out = docs_table(seg, seg_triples)
         writes.append(("docs", store.stage_table(docs_out, "docs"), "append"))
-        seg_agg = seg.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("doc_id").alias("min_id"),
-            F.max("doc_id").alias("max_id"),
-        ).collect()[0]
-        tf_agg = seg_triples.agg(F.sum("tf").alias("tf")).collect()[0]
         inc_docs = int(seg_agg["n"])
-        inc_tf = int(tf_agg["tf"] or 0)
+        inc_tf = int(tri_agg["tf"] or 0)
 
         # ---- terms: merge increment stats into the EXISTING terms table
         # (vocab-sized — the sharded.finalize pattern), never the triples
@@ -243,35 +258,26 @@ class IncrementalIndexer:
             )
         else:
             merged_raw = inc_terms
-        merged = plan_salts(merged_raw, cfg)
-        # n_terms observed INSIDE the staging write (build._write_observed
-        # pattern): a separate .count() would run the vocab-sized old-terms
-        # union + groupBy twice per append
-        from pyspark.sql import Observation
+        terms_path, terms_agg = stage_observed(
+            store,
+            plan_salts(merged_raw, cfg).repartition(cfg.n_buckets, "bucket"),
+            "terms", {"n": F.count(F.lit(1))}, partition_by=["bucket"],
+        )
+        writes.append(("terms", terms_path, "overwrite"))
+        n_terms = int(terms_agg["n"])
 
-        obs = Observation("obs_terms_append")
-        writes.append((
-            "terms",
-            store.stage_table(
-                merged.repartition(cfg.n_buckets, "bucket").observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                ),
-                "terms",
-                partition_by=["bucket"],
-            ),
-            "overwrite",
-        ))
-        n_terms = int(obs.get["n"])
-
-        # ---- stats from running totals (no index scan)
+        # ---- stats from running totals (no index scan, no Spark job)
         n_docs = tot["n_docs"] + inc_docs
         total_tf = tot["total_tf"] + inc_tf
-        stats_df, _ = stats_table(spark, cfg, n_docs, total_tf, n_terms)
-        writes.append(("stats", store.stage_table(stats_df, "stats"), "overwrite"))
+        stats, _ = stats_table(cfg, n_docs, total_tf, n_terms)
+        writes.append(("stats", store.stage_table(stats, "stats"), "overwrite"))
 
         # ---- postings segment: same shared kernel; salting plan from the
-        # MERGED terms (a term that just went hot salts its new segment)
-        seg_postings = encode_postings(seg_triples, merged, cfg)
+        # MERGED terms, read back from their staged dir rather than
+        # recomputed (a term that just went hot salts its new segment)
+        seg_postings = encode_postings(
+            seg_triples, store.read_staged(spark, terms_path), cfg
+        )
         writes.append((
             "postings",
             store.stage_table(seg_postings, "postings", partition_by=["bucket"]),

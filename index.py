@@ -263,12 +263,11 @@ def main(argv: list[str] | None = None) -> int:
         )
         q.awaitTermination()
         if store.has_table("stats"):
-            print(json.dumps(store.read_table(spark, "stats").collect()[0].asDict()))
+            print(json.dumps(store.snapshot().stats_row()))
         else:
             print(json.dumps({"n_docs": 0, "note": "no input files consumed"}))
     elif args.cmd == "stats":
-        st = store.read_table(spark, "stats").collect()[0].asDict()
-        print(json.dumps(st))
+        print(json.dumps(store.snapshot().stats_row()))
     elif args.cmd == "serve":
         from excelastic_spark.web import serve
 
