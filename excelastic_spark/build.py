@@ -10,14 +10,18 @@ rule's checkpoint/resume requirement):
   ingest    doc_id assignment + sha256 -> ingested table (corpus snapshot)
   triples   tokenize ONCE -> (doc_id, term, tf, doclen), persisted (both a
             downstream input and a resume checkpoint)
-  docs      skinny doc-metadata table (doc_id, key, lang, sha256, doclen)
+  docs      skinny doc-metadata table (doc_id, key, lang, sha256, doclen):
+            map-only, one mapInArrow pass over the ingested rows counts
+            each doc's tokens with the tokenizer's own kernel, so no
+            shuffle and no join with the triples
   terms     df/cf per term + salting plan
   postings  salt -> Spark groups the triples by (term, salt)
             (collect_list, map-side partial step) -> one stateless
             vectorized Arrow pass per batch of whole groups (in-group
             doc_id sort + delta+varint) -> one lightweight exchange to
             bucket(term) alignment -> postings table parquet-partitioned
-            by bucket for lookup pruning. Python holds one Arrow batch at
+            by bucket for lookup pruning (one file per bucket dir per
+            write, see by_bucket). Python holds one Arrow batch at
             a time: at most arrow_batch_size groups and
             spark.sql.execution.arrow.maxBytesPerBatch bytes; a group
             holds at most salt_threshold postings (about salt_target once
@@ -42,10 +46,12 @@ reference's progress events (ElasticWriter.java:147-156).
 from __future__ import annotations
 
 import time
+import warnings
 from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -68,7 +74,7 @@ from excelastic_spark.corpus import (
     id_bucket_expr,
     ingest_corpus,
 )
-from excelastic_spark.tokenizer import tokenize_triples
+from excelastic_spark.tokenizer import token_counts, tokenize_triples
 
 # bumped whenever a table layout/semantic changes: stale warehouses then
 # fingerprint-mismatch and rebuild instead of resuming onto the old layout
@@ -102,6 +108,19 @@ def bucket_expr(term_col, n_buckets: int):
     Iceberg bucket(term) partition transform; query.py computes the same
     expression to prune lookups to one directory."""
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast(IntegerType())
+
+
+def by_bucket(df: DataFrame) -> DataFrame:
+    """``df`` hash-partitioned by its ``bucket`` column, for a write
+    partitioned by bucket: every bucket lands in exactly one task, so each
+    bucket dir gets ONE file per write (the lookup reads every file of a
+    bucket dir). Partitioning by column alone (REPARTITION_BY_COL) lets
+    AQE coalesce the shuffle_partitions reducers to as few tasks as the
+    data needs, and AQE never splits such a partition; a fixed count
+    (``repartition(n_buckets, ...)``, REPARTITION_BY_NUM) is never
+    coalesced, so a 1k-doc write paid one task per bucket. The write
+    sorts each task's rows by bucket in either shape."""
+    return df.repartition("bucket")
 
 
 class Validation(NamedTuple):
@@ -248,11 +267,12 @@ def encode_postings(
     and a group holds at most ``salt_threshold`` postings (a hotter term is
     salted into groups of about ``salt_target``).
 
-    The final bucket repartition is a second exchange, but of the COMPRESSED
-    postings bytes (orders of magnitude smaller than the triples the first
-    shuffle moves), and AQE coalesces it to n_buckets small partitions; it
-    buys one term-dense file per bucket dir, which the pyarrow query path
-    prunes with a single footer read. The single-shuffle alternative
+    The final bucket repartition (:func:`by_bucket`) is a second exchange,
+    but of the COMPRESSED postings bytes (orders of magnitude smaller than
+    the triples the first shuffle moves), and AQE coalesces it to as few
+    tasks as those bytes need; it buys one term-dense file per bucket dir,
+    which the pyarrow query path prunes with a single footer read. The
+    single-shuffle alternative
     (repartitionByRange(bucket, term, salt) + direct partitionBy write) was
     measured head-to-head (r3, 300k docs x 3 interleaved reps): build times
     statistically equal (range's sampling pass costs what the dropped
@@ -279,7 +299,7 @@ def encode_postings(
         .agg(F.collect_list(F.struct("doc_id", "tf", "doclen")).alias("postings"))
         .mapInArrow(_encode_groups, schema=POSTINGS_SCHEMA)
         .withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
-        .repartition(cfg.n_buckets, "bucket")
+        .transform(by_bucket)
     )
 
 
@@ -306,14 +326,31 @@ def term_stats(triples: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def docs_table(ingested: DataFrame, triples: DataFrame) -> DataFrame:
-    """The docs table: doc metadata plus doclen = sum(tf) over the doc's
-    triples (0 for a doc without tokens)."""
-    doclens = triples.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
-    return ingested.join(doclens, "doc_id", "left").select(
-        "doc_id", "repo", "path", "commit", "lang", "sha256",
-        F.coalesce("doclen", F.lit(0)).cast(LongType()).alias("doclen"),
+def docs_table(ingested: DataFrame) -> DataFrame:
+    """The docs table: doc metadata plus doclen, the doc's token count (0
+    for a doc without tokens). One map-only ``mapInArrow`` pass over the
+    ingested rows, no shuffle: doclen comes from the tokenizer's own kernel
+    (:func:`tokenizer.token_counts`), so it equals the sum(tf) of the
+    doc's triples bit for bit. Every field is nullable, as a read of the
+    written dir declares it."""
+    meta = ingested.select(
+        "doc_id", "repo", "path", "commit", "lang", "sha256", "content"
     )
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in meta.schema.fields[:-1]]
+        + [StructField("doclen", LongType())]
+    )
+
+    def fn(batches):
+        for batch in batches:
+            if batch.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    batch.columns[:-1]
+                    + [pa.array(token_counts(batch.column("content")))],
+                    names=schema.names,
+                )
+
+    return meta.mapInArrow(fn, schema=schema)
 
 
 def stats_table(
@@ -468,11 +505,11 @@ class IndexBuilder:
 
         triples = store.read_table(spark, "triples")
 
-        # ---- stage: docs (depends only on triples + ingested) ----
+        # ---- stage: docs (depends only on ingested) ----
         def _docs_stage() -> None:
             t0 = time.time()
             got = self._write_observed(
-                docs_table(ingested, triples), "docs", {"n": F.count(F.lit(1))}
+                docs_table(ingested), "docs", {"n": F.count(F.lit(1))}
             )
             dt = time.time() - t0
             counts["n_docs"] = int(got["n"])
@@ -488,6 +525,9 @@ class IndexBuilder:
         # slots). Each stage commits its own lineage entry on success —
         # manifest writes are atomic and serialized under the store lock,
         # and a failed stage simply stays uncommitted for the next resume.
+        # The thread inherits the caller's local properties (job group,
+        # description, scheduler pool), so cancelling the caller's job
+        # group cancels the docs jobs too.
         docs_pool = None
         docs_future = None
         if not (store.stage_done("docs", fp) and store.has_table("docs")):
@@ -497,8 +537,12 @@ class IndexBuilder:
                 _docs_stage()
                 store.commit_stage("docs", fp, n_docs=counts["n_docs"])
 
+            with warnings.catch_warnings():
+                # the engine sets no session tags, only local properties
+                warnings.filterwarnings("ignore", "Spark session is not provided")
+                target = inheritable_thread_target(_docs_and_commit)
             docs_pool = ThreadPoolExecutor(1)
-            docs_future = docs_pool.submit(_docs_and_commit)
+            docs_future = docs_pool.submit(target)
         chain_exc: BaseException | None = None
         try:
             self._build_chain(fp, triples, counts, metrics)
@@ -534,9 +578,8 @@ class IndexBuilder:
 
         def _terms_stage() -> None:
             t0 = time.time()
-            # align tasks with partition dirs: each write task emits ONE
-            # bucket file instead of spraying tasks x buckets tiny files
-            ts = term_stats(triples, cfg).repartition(cfg.n_buckets, "bucket")
+            # one file per bucket dir instead of tasks x buckets tiny files
+            ts = by_bucket(term_stats(triples, cfg))
             got = self._write_observed(
                 ts, "terms", {"n": F.count(F.lit(1))}, partition_by=["bucket"]
             )

@@ -5,7 +5,8 @@ codegen spans. Used by tests and available interactively:
 
     from excelastic_spark.plans.audit import explain_str, assert_pushed_filters
 
-``count_jobs`` counts the Spark jobs a call launches, for job budgets.
+``count_jobs`` counts the Spark jobs and tasks a call launches, for job
+and task budgets.
 """
 
 from __future__ import annotations
@@ -49,10 +50,14 @@ def assert_no_python_row_udf(df: DataFrame) -> None:
     assert "BatchEvalPython" not in plan, plan
 
 
-def count_jobs(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
-    """(``fn()``, the number of Spark jobs it launched). ``fn`` runs under
-    a job group of its own, read back from the status tracker once the
-    listener bus has delivered every job-start event. Jobs launched from a
+def count_jobs(
+    spark: SparkSession, fn: Callable[[], T]
+) -> tuple[T, int, int]:
+    """(``fn()``, the number of Spark jobs it launched, the number of tasks
+    those jobs completed). ``fn`` runs under a job group of its own, read
+    back from the status tracker once the listener bus has delivered every
+    event; the tasks are the completed tasks of the group's stages (a stage
+    skipped for a reused shuffle completes none). Jobs launched from a
     thread ``fn`` starts are counted only if that thread inherits the
     caller's local properties (``pyspark.inheritable_thread_target``)."""
     sc = spark.sparkContext
@@ -64,4 +69,12 @@ def count_jobs(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # type: ignore[union-attr]
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {
+        s for j in jobs for s in getattr(tracker.getJobInfo(j), "stageIds", [])
+    }
+    tasks = sum(
+        getattr(tracker.getStageInfo(s), "numCompletedTasks", 0) for s in stages
+    )
+    return result, len(jobs), tasks

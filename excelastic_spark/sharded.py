@@ -54,6 +54,7 @@ from pyspark.sql import Window
 from pyspark.sql.types import LongType
 
 from excelastic_spark.build import (
+    by_bucket,
     docs_table,
     encode_postings,
     plan_salts,
@@ -188,10 +189,9 @@ def build_shard(
     writes.append(("triples", tri_path, "append"))
     triples = store.read_staged(spark, tri_path)
 
-    # shard-local docs segment (doclen from triples, as the plain build)
+    # shard-local docs segment (map-only, as the plain build)
     writes.append((
-        "docs", store.stage_table(docs_table(ingested, triples), "docs"),
-        "append",
+        "docs", store.stage_table(docs_table(ingested), "docs"), "append",
     ))
 
     # shard-local term stats; salting threshold scaled by shard count
@@ -200,9 +200,7 @@ def build_shard(
         salt_threshold=max(1, cfg.salt_threshold // n_shards),
         salt_target=max(1, cfg.salt_target // n_shards),
     )
-    shard_terms = term_stats(triples, shard_cfg).repartition(
-        cfg.n_buckets, "bucket"
-    )
+    shard_terms = by_bucket(term_stats(triples, shard_cfg))
     terms_path = store.stage_table(
         shard_terms, "shard_terms", partition_by=["bucket"]
     )
@@ -255,12 +253,12 @@ def finalize(
         raise RuntimeError(f"shards not built: {missing}")
 
     shard_terms = store.read_table(spark, "shard_terms")
-    terms = plan_salts(
+    terms = by_bucket(plan_salts(
         shard_terms.groupBy("term").agg(
             F.sum("df").alias("df"), F.sum("cf").alias("cf")
         ),
         cfg,
-    ).repartition(cfg.n_buckets, "bucket")
+    ))
     from pyspark.sql import Observation
 
     # n_terms observed inside the write job (build._write_observed

@@ -22,8 +22,12 @@ Cost model (the 100 TB requirement):
   writes, staged dirs and committed tables are read with their recorded
   schemas (no inference job), the postings encoder reads the staged terms
   dir instead of recomputing the merge, and the stats row is written on
-  the driver. 18 jobs per 1k-doc append, the caller's input read
-  included (tests/test_job_budget.py).
+  the driver. Every task has a fixed cost too (each deserializes its
+  job), so the bucket-partitioned writes let AQE coalesce their exchange
+  (build.by_bucket) and the docs segment is one map-only pass. A 1k-doc
+  append on the bench config runs 16 jobs and 27-31 tasks, the caller's
+  input read included (the input scans' task count follows the input's
+  files; tests/test_job_budget.py holds the tiny-index counts).
 * ``merge_segments`` is **O(postings bytes)**, never O(corpus): appended
   posting rows are DECODED back to (doc_id, term, tf, doclen) rows in
   executors and re-encoded through the shared postings encoder (which also
@@ -57,6 +61,7 @@ from pyspark.sql.types import LongType
 
 from excelastic_spark import codec
 from excelastic_spark.build import (
+    by_bucket,
     docs_table,
     encode_postings,
     plan_salts,
@@ -241,8 +246,8 @@ class IncrementalIndexer:
         writes.append(("triples", tri_path, "append"))
         seg_triples = store.read_staged(spark, tri_path)
 
-        docs_out = docs_table(seg, seg_triples)
-        writes.append(("docs", store.stage_table(docs_out, "docs"), "append"))
+        docs_path = store.stage_table(docs_table(seg), "docs")
+        writes.append(("docs", docs_path, "append"))
         inc_docs = int(seg_agg["n"])
         inc_tf = int(tri_agg["tf"] or 0)
 
@@ -260,7 +265,7 @@ class IncrementalIndexer:
             merged_raw = inc_terms
         terms_path, terms_agg = stage_observed(
             store,
-            plan_salts(merged_raw, cfg).repartition(cfg.n_buckets, "bucket"),
+            by_bucket(plan_salts(merged_raw, cfg)),
             "terms", {"n": F.count(F.lit(1))}, partition_by=["bucket"],
         )
         writes.append(("terms", terms_path, "overwrite"))

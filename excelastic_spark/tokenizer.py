@@ -88,17 +88,31 @@ def tokenize_pandas(pdf: pd.DataFrame, content_col: str = "content") -> pd.DataF
     return tf[["doc_id", "term", "tf", "doclen"]]
 
 
-def tokenize_arrow_batch(ids: pa.Array, content: pa.Array) -> pa.Table:
-    """One Arrow batch -> (doc_id, term, tf, doclen) rows, all C-side:
-    regex split in Arrow, terms dictionary-encoded so the (row, term)
-    grouping hashes two INT columns, never strings."""
+def _tokens(content: pa.Array) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """(every token of the batch, the row each came from, each row's token
+    count): Arrow C++ lower + regex split, empty pieces dropped. The count
+    is the row's doclen, 0 for a row without tokens."""
     low = pc.utf8_lower(content)
     toks = pc.split_pattern_regex(low, SPLIT_PATTERN)
     parent = pc.list_parent_indices(toks)
     flat = pc.list_flatten(toks)
     mask = pc.greater(pc.binary_length(flat), 0)
-    flat = pc.array_filter(flat, mask)
-    parent = pc.array_filter(parent, mask)
+    parent = pc.array_filter(parent, mask).to_numpy()
+    doclen = np.bincount(parent, minlength=len(content)).astype(np.int64)
+    return pc.array_filter(flat, mask), parent, doclen
+
+
+def token_counts(content: pa.Array) -> np.ndarray:
+    """Each row's doclen, as :func:`tokenize_arrow_batch` stamps it on the
+    row's triples: equal to their sum(tf) by construction."""
+    return _tokens(content)[2]
+
+
+def tokenize_arrow_batch(ids: pa.Array, content: pa.Array) -> pa.Table:
+    """One Arrow batch -> (doc_id, term, tf, doclen) rows, all C-side:
+    regex split in Arrow, terms dictionary-encoded so the (row, term)
+    grouping hashes two INT columns, never strings."""
+    flat, parent, doclen = _tokens(content)
     codes = flat.dictionary_encode()
     grouped = pa.TableGroupBy(
         pa.table(
@@ -108,9 +122,6 @@ def tokenize_arrow_batch(ids: pa.Array, content: pa.Array) -> pa.Table:
         use_threads=False,  # parallelism belongs to Spark tasks
     ).aggregate([([], "count_all")])
     p = grouped.column("p").to_numpy()
-    doclen = np.bincount(
-        parent.to_numpy(), minlength=len(content)
-    ).astype(np.int64)
     return pa.table(
         {
             "doc_id": pc.take(ids, grouped.column("p")),

@@ -1,12 +1,16 @@
-"""Job budgets of the index writes, and the manifest's recorded schemas.
+"""Job and task budgets of the index writes, generated-code reuse, and
+the manifest's recorded schemas.
 
 Every Spark job a write launches costs a fixed scheduling and codegen
 overhead whatever its data size, so a write launches only the jobs that
 move index data: reads of engine tables plan from the schema recorded in
 the manifest (no footer-inference job), the stats row is written on the
 driver, and segment totals are observed inside the writes that stage
-them. The budgets below are the job counts of each call on a tiny index;
-a reintroduced inference, count or collect exceeds them."""
+them. Every task costs a fixed deserialization overhead too, so the
+bucket-partitioned writes let AQE coalesce their exchange to as few tasks
+as the data needs. The budgets below are the job and task counts of each
+call on a tiny index; a reintroduced inference, count, collect or
+fixed-count exchange exceeds them."""
 
 from __future__ import annotations
 
@@ -29,7 +33,12 @@ QS = [
     (["import", "sym0100"], "or", 10),
 ]
 # jobs per call, each counting the caller's one parquet read of its input
-BUDGET = {"build": 14, "append": 18, "merge": 4, "pin": 0}
+# (a build's count includes its docs stage, which runs on its own thread)
+BUDGET = {"build": 15, "append": 16, "merge": 4, "pin": 0}
+TASK_BUDGET = {"build": 20, "append": 25, "merge": 18}
+# generated classes a repeat append compiles: its literal doc-id offset
+# differs from the previous append's, everything else is cached
+REPEAT_APPEND_COMPILES = 4
 
 
 @pytest.fixture(scope="module")
@@ -62,25 +71,56 @@ def _rows(spark, store, table):
 
 def test_write_job_budgets(spark, tmp_path, inputs):
     store = IndexStore(str(tmp_path), "budget")
-    _, n = count_jobs(spark, lambda: IndexBuilder(spark, store, CFG).build(
+    _, n, t = count_jobs(spark, lambda: IndexBuilder(spark, store, CFG).build(
         spark.read.parquet(inputs["base"])))
     assert n <= BUDGET["build"], n
+    assert t <= TASK_BUDGET["build"], t
     # engine construction reads the stats row on the driver
-    qe, n = count_jobs(spark, lambda: QueryEngine(spark, store, CFG))
+    qe, n, _ = count_jobs(spark, lambda: QueryEngine(spark, store, CFG))
     assert n == BUDGET["pin"], n
     inc = IncrementalIndexer(spark, store, CFG)
     for name in ("inc1", "inc2"):
-        _, n = count_jobs(spark, lambda: inc.append_increment(
+        _, n, t = count_jobs(spark, lambda: inc.append_increment(
             spark.read.parquet(inputs[name])))
         assert n <= BUDGET["append"], (name, n)
+        assert t <= TASK_BUDGET["append"], (name, t)
         # the first pin after a commit builds the new state job-free
-        _, n = count_jobs(spark, qe.pin)
+        _, n, _ = count_jobs(spark, qe.pin)
         assert n == BUDGET["pin"], n
-    _, n = count_jobs(spark, inc.merge_segments)
+    _, n, t = count_jobs(spark, inc.merge_segments)
     assert n <= BUDGET["merge"], n
-    _, n = count_jobs(spark, qe.pin)
+    assert t <= TASK_BUDGET["merge"], t
+    _, n, _ = count_jobs(spark, qe.pin)
     assert n == BUDGET["pin"], n
     assert qe.pin().n_docs == 160
+
+
+def test_build_jobs_stay_in_callers_job_group(spark, tmp_path, inputs):
+    """The docs stage's thread inherits the caller's job group: no job of
+    a build runs ungrouped, where cancelling the caller's group would miss
+    it."""
+    tracker = spark.sparkContext.statusTracker()
+    store = IndexStore(str(tmp_path), "group")
+    before = set(tracker.getJobIdsForGroup(None))
+    count_jobs(spark, lambda: IndexBuilder(spark, store, CFG).build(
+        spark.read.parquet(inputs["base"])))
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+def _compiles(spark) -> int:
+    """Generated classes Spark has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeat_append_reuses_generated_code(spark, tmp_path, inputs):
+    store = IndexStore(str(tmp_path), "codegen")
+    IndexBuilder(spark, store, CFG).build(spark.read.parquet(inputs["base"]))
+    inc = IncrementalIndexer(spark, store, CFG)
+    inc.append_increment(spark.read.parquet(inputs["inc1"]))
+    before = _compiles(spark)
+    inc.append_increment(spark.read.parquet(inputs["inc2"]))
+    assert _compiles(spark) - before <= REPEAT_APPEND_COMPILES
 
 
 def test_recorded_schemas_equal_inferred(spark, tmp_path, inputs):
