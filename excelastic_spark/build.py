@@ -1,8 +1,11 @@
 """Index build pipeline: corpus -> inverted index (postings/terms/docs/stats).
 
-Stage layout (each stage commits a lineage entry keyed by the input
-fingerprint, so a rerun resumes by skipping committed stages — the north
-rule's checkpoint/resume requirement):
+After one validation pass, the build runs six stages in order on the
+calling thread. Each stage writes one table and publishes it in ONE
+manifest swap together with its lineage entry, which holds the input
+fingerprint and the values observed in the write; a rerun over the same
+input skips every stage whose entry and table are committed (the north
+rule's checkpoint/resume requirement, ``IndexBuilder._stage``):
 
   validate  fail-fast dry-run fused with the lineage fingerprint — ONE scan
             (analog of the reference's initialize() pre-parse,
@@ -15,6 +18,10 @@ rule's checkpoint/resume requirement):
             each doc's tokens with the tokenizer's own kernel, so no
             shuffle and no join with the triples
   terms     df/cf per term + salting plan
+  stats     the one-row collection stats, assembled on the driver from the
+            ingest, triples and terms lineage entries and written with
+            pyarrow: no Spark job. The same swap commits the ``totals``
+            entry (n_docs, total_tf, max_doc_id) that appends advance
   postings  salt -> Spark groups the triples by (term, salt)
             (collect_list, map-side partial step) -> one stateless
             vectorized Arrow pass per batch of whole groups (in-group
@@ -26,9 +33,6 @@ rule's checkpoint/resume requirement):
             spark.sql.execution.arrow.maxBytesPerBatch bytes; a group
             holds at most salt_threshold postings (about salt_target once
             a hot term is salted)
-  stats     the one-row collection stats, assembled on the driver from
-            the stages' Observation metrics and written with pyarrow: no
-            Spark job
 
 Skew handling: terms with df > cfg.salt_threshold are split into
 ceil(df/salt_target) salts by pmod(xxhash64(doc_id), S); ONLY the hot subset
@@ -39,19 +43,18 @@ are disjoint by doc and merged at query time (query.py).
 
 Per-stage metrics (docs/sec, terms/sec, postings/sec, bytes compressed) are
 collected via the Observation API DURING each write (no re-scan jobs) and
-logged to the store's metrics.jsonl — the engine-grade analog of the
-reference's progress events (ElasticWriter.java:147-156).
+logged with each stage's seconds to the store's metrics.jsonl — the
+engine-grade analog of the reference's progress events
+(ElasticWriter.java:147-156).
 """
 
 from __future__ import annotations
 
 import time
-import warnings
 from typing import Any, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -187,10 +190,6 @@ def validate_and_fingerprint(
     return Validation(
         f"v={LAYOUT_VERSION},n={n},crc={crc}", int(n), bucket_counts, min_id
     )
-
-
-def corpus_fingerprint(corpus: DataFrame) -> str:
-    return validate_and_fingerprint(corpus, pre_ingested=True).fingerprint
 
 
 # ---------------------------------------------------------------------------
@@ -404,22 +403,51 @@ class IndexBuilder:
             except Exception:
                 pass  # a broken progress listener must never fail a build
 
-    # ------------------------------------------------------------- helpers
-
-    def _write_observed(
-        self, df: DataFrame, table: str, aggs: dict[str, Any],
-        partition_by: list[str] | None = None,
+    def _stage(
+        self, fp: str, metrics: dict[str, Any], name: str, make,
+        observed: dict[str, Any], *, pct: float, table: str | None = None,
+        metric: str | None = None, rate: str | None = None,
+        partition_by: list[str] | None = None, also: tuple[str, ...] = (),
     ) -> dict[str, Any]:
-        """Write and commit a stage table, observing ``aggs`` in the write
-        job (:func:`stage_observed`)."""
-        path, got = stage_observed(self.store, df, table, aggs, partition_by)
-        self.store.commit_snapshot([(table, path, "overwrite")])
-        return got
+        """Run one resumable stage and return its lineage entry ``name``.
 
-    def _table_count(self, table: str) -> int:
-        # parquet metadata count — used only on resume when the stage's
-        # observation was not collected in this run
-        return self.store.read_table(self.spark, table).count()
+        The stage is skipped when that entry carries ``fp`` and ``table``
+        (``name`` by default) is committed. Otherwise ``make()`` gives the
+        table: a DataFrame is written with ``observed`` (column
+        expressions) aggregated in its write job (:func:`stage_observed`);
+        a driver-side ``pa.Table`` is written as is, ``observed`` holding
+        its values. One manifest swap publishes the table with the
+        observed values as the entry ``name`` (and each of ``also``). The
+        metrics record ``metric`` (``name`` by default, also the progress
+        event sent at ``pct``) holds the observed values, ``sec`` and, when
+        ``rate`` names an observed value, its rate per second."""
+        store = self.store
+        table = table or name
+        snap = store.snapshot()
+        entry = snap.stages.get(name)
+        if entry and entry.get("fingerprint") == fp and table in snap.tables:
+            return entry
+        metric = metric or name
+        self._emit(metric, pct)
+        t0 = time.time()
+        df = make()
+        if isinstance(df, pa.Table):
+            path, got = store.stage_table(df, table), observed
+        else:
+            path, got = stage_observed(store, df, table, observed, partition_by)
+        entry = {"fingerprint": fp, **{k: v or 0 for k, v in got.items()}}
+        store.commit_snapshot(
+            [(table, path, "overwrite")],
+            stages=dict.fromkeys((name, *also), entry),
+        )
+        dt = time.time() - t0
+        rec = {k: v for k, v in entry.items() if k != "fingerprint"}
+        if rate is not None:
+            rec[f"{rate.removeprefix('n_')}_per_sec"] = round(
+                rec[rate] / max(dt, 1e-9), 1
+            )
+        metrics[metric] = store.log_metrics(metric, sec=round(dt, 3), **rec)
+        return entry
 
     # ------------------------------------------------------------------ api
 
@@ -437,227 +465,70 @@ class IndexBuilder:
         ``transform`` is an optional DataFrame -> DataFrame ingest pipeline
         applied before validation — the analog of the reference's ES
         `pipeline=` pass-through (ElasticWriter.java:163-165); it must
-        preserve the corpus schema."""
+        preserve the corpus schema.
+
+        Returns the metrics record of every stage that ran, by stage, plus
+        the lineage fingerprint."""
         cfg, store, spark = self.cfg, self.store, self.spark
         if clear:
             store.drop()
         if transform is not None:
             corpus = transform(corpus)
-        # ---- stage: validate + fingerprint (one scan, fail-fast) ----
         self._emit("verify", 2.0)
-        fp, _, bucket_counts, _ = validate_and_fingerprint(
-            corpus, pre_ingested
-        )
+        v = validate_and_fingerprint(corpus, pre_ingested)
         # layout knobs are part of the lineage: a rerun with a different
         # bucket/salt/block config must rebuild, not resume onto stages
         # committed under the old layout (config.layout_key docstring)
-        fp = f"{fp},{cfg.layout_key()}"
+        fp = f"{v.fingerprint},{cfg.layout_key()}"
         store.save_config(cfg.layout_dict())  # append/merge/query default to it
         metrics: dict[str, Any] = {"fingerprint": fp}
-        counts: dict[str, int] = {}
+        count = F.count(F.lit(1))
 
-        # ---- stage: ingest (ids + sha256 -> corpus snapshot) ----
-        if not (store.stage_done("ingest", fp) and store.has_table("ingested")):
-            self._emit("ingest", 10.0)
-            t0 = time.time()
-            ingested = corpus if pre_ingested else ingest_corpus(
-                corpus, validate=False, bucket_counts=bucket_counts
-            )
-            got = self._write_observed(
-                ingested, "ingested",
-                {"n": F.count(F.lit(1)), "max_id": F.max("doc_id")},
-            )
-            dt = time.time() - t0
-            counts["n_docs"] = int(got["n"])
-            counts["max_doc_id"] = int(got["max_id"])
-            metrics["ingest"] = store.log_metrics(
-                "ingest", n_docs=counts["n_docs"], sec=round(dt, 3),
-                docs_per_sec=round(counts["n_docs"] / max(dt, 1e-9), 1),
-            )
-            store.commit_stage(
-                "ingest", fp, n_docs=counts["n_docs"],
-                max_doc_id=counts["max_doc_id"],
-            )
-
+        ing = self._stage(
+            fp, metrics, "ingest",
+            lambda: corpus if pre_ingested else ingest_corpus(
+                corpus, bucket_counts=v.bucket_counts
+            ),
+            {"n_docs": count,
+             "max_doc_id": F.coalesce(F.max("doc_id"), F.lit(-1))},
+            table="ingested", pct=10.0, rate="n_docs",
+        )
         ingested = store.read_table(spark, "ingested")
-
-        # ---- stage: triples (tokenize ONCE, persisted checkpoint) ----
-        if not (store.stage_done("triples", fp) and store.has_table("triples")):
-            self._emit("tokenize", 30.0)
-            t0 = time.time()
-            got = self._write_observed(
-                tokenize_triples(ingested),
-                "triples",
-                {"n": F.count(F.lit(1)), "total_tf": F.sum("tf")},
-            )
-            dt = time.time() - t0
-            counts["n_triples"] = int(got["n"])
-            counts["total_tf"] = int(got["total_tf"] or 0)
-            metrics["tokenize"] = store.log_metrics(
-                "tokenize", n_triples=counts["n_triples"],
-                total_tokens=counts["total_tf"], sec=round(dt, 3),
-                triples_per_sec=round(counts["n_triples"] / max(dt, 1e-9), 1),
-            )
-            store.commit_stage(
-                "triples", fp, n_triples=counts["n_triples"],
-                total_tf=counts["total_tf"],
-            )
-
+        tri = self._stage(
+            fp, metrics, "triples", lambda: tokenize_triples(ingested),
+            {"n_triples": count, "total_tf": F.sum("tf")},
+            metric="tokenize", pct=30.0, rate="n_triples",
+        )
         triples = store.read_table(spark, "triples")
-
-        # ---- stage: docs (depends only on ingested) ----
-        def _docs_stage() -> None:
-            t0 = time.time()
-            got = self._write_observed(
-                docs_table(ingested), "docs", {"n": F.count(F.lit(1))}
-            )
-            dt = time.time() - t0
-            counts["n_docs"] = int(got["n"])
-            metrics["docs"] = store.log_metrics(
-                "docs", n_docs=counts["n_docs"], sec=round(dt, 3),
-                docs_per_sec=round(counts["n_docs"] / max(dt, 1e-9), 1),
-            )
-
-        # The docs table is pure query-side metadata: nothing in the
-        # terms -> stats -> postings chain reads it, so its write job runs
-        # on a separate driver thread CONCURRENTLY with that whole chain
-        # (Spark schedules jobs from independent threads into idle task
-        # slots). Each stage commits its own lineage entry on success —
-        # manifest writes are atomic and serialized under the store lock,
-        # and a failed stage simply stays uncommitted for the next resume.
-        # The thread inherits the caller's local properties (job group,
-        # description, scheduler pool), so cancelling the caller's job
-        # group cancels the docs jobs too.
-        docs_pool = None
-        docs_future = None
-        if not (store.stage_done("docs", fp) and store.has_table("docs")):
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _docs_and_commit() -> None:
-                _docs_stage()
-                store.commit_stage("docs", fp, n_docs=counts["n_docs"])
-
-            with warnings.catch_warnings():
-                # the engine sets no session tags, only local properties
-                warnings.filterwarnings("ignore", "Spark session is not provided")
-                target = inheritable_thread_target(_docs_and_commit)
-            docs_pool = ThreadPoolExecutor(1)
-            docs_future = docs_pool.submit(target)
-        chain_exc: BaseException | None = None
-        try:
-            self._build_chain(fp, triples, counts, metrics)
-        except BaseException as e:
-            chain_exc = e
-        # always join the docs thread; the chain's exception stays primary —
-        # a concurrent docs failure must not mask it
-        if docs_future is not None:
-            try:
-                docs_future.result()
-            except BaseException as docs_exc:
-                if chain_exc is None:
-                    raise
-                chain_exc.__context__ = docs_exc
-            finally:
-                docs_pool.shutdown(wait=False)
-        if chain_exc is not None:
-            raise chain_exc
-
+        self._stage(
+            fp, metrics, "docs", lambda: docs_table(ingested),
+            {"n_docs": count}, pct=45.0, rate="n_docs",
+        )
+        # one file per bucket dir instead of tasks x buckets tiny files
+        ts = self._stage(
+            fp, metrics, "terms", lambda: by_bucket(term_stats(triples, cfg)),
+            {"n_terms": count}, pct=60.0, rate="n_terms",
+            partition_by=["bucket"],
+        )
+        stats, avgdl = stats_table(
+            cfg, ing["n_docs"], tri["total_tf"], ts["n_terms"]
+        )
+        self._stage(
+            fp, metrics, "stats", lambda: stats,
+            {"n_docs": ing["n_docs"], "avgdl": avgdl,
+             "n_terms": ts["n_terms"], "total_tf": tri["total_tf"],
+             "max_doc_id": ing["max_doc_id"]},
+            pct=70.0, also=("totals",),
+        )
+        terms = store.read_table(spark, "terms")
+        self._stage(
+            fp, metrics, "postings",
+            lambda: encode_postings(triples, terms, cfg),
+            {"postings": F.sum("n"), "rows": count,
+             "bytes_compressed": F.sum(
+                 F.length("doc_ids") + F.length("tfs") + F.length("doclens")
+             )},
+            pct=80.0, rate="postings", partition_by=["bucket"],
+        )
         self._emit("done", 100.0)
         return metrics
-
-    def _build_chain(
-        self,
-        fp: str,
-        triples: DataFrame,
-        counts: dict[str, int],
-        metrics: dict[str, Any],
-    ) -> None:
-        """terms -> stats -> postings (runs concurrently with the docs
-        stage; must not read the docs table)."""
-        cfg, store, spark = self.cfg, self.store, self.spark
-
-        def _terms_stage() -> None:
-            t0 = time.time()
-            # one file per bucket dir instead of tasks x buckets tiny files
-            ts = by_bucket(term_stats(triples, cfg))
-            got = self._write_observed(
-                ts, "terms", {"n": F.count(F.lit(1))}, partition_by=["bucket"]
-            )
-            dt = time.time() - t0
-            counts["n_terms"] = int(got["n"])
-            metrics["terms"] = store.log_metrics(
-                "terms", n_terms=counts["n_terms"], sec=round(dt, 3),
-                terms_per_sec=round(counts["n_terms"] / max(dt, 1e-9), 1),
-            )
-
-        if not (store.stage_done("terms", fp) and store.has_table("terms")):
-            self._emit("terms", 60.0)
-            _terms_stage()
-            store.commit_stage("terms", fp, n_terms=counts["n_terms"])
-
-        terms = store.read_table(spark, "terms")
-
-        # ---- stage: stats (assembled from observations; falls back to
-        # cheap metadata counts when resuming past a stage; must NOT read
-        # the docs table — it may still be building on the other thread) ----
-        if not (store.stage_done("stats", fp) and store.has_table("stats")):
-            st = store.manifest()["stages"]
-            n_docs = counts.get("n_docs") or st.get("ingest", {}).get("n_docs") \
-                or st.get("docs", {}).get("n_docs") \
-                or self._table_count("ingested")
-            total_tf = counts.get("total_tf")
-            if total_tf is None:
-                total_tf = st.get("triples", {}).get("total_tf")
-            if total_tf is None:
-                total_tf = int(
-                    triples.agg(F.sum("tf")).collect()[0][0] or 0
-                )
-            n_terms = counts.get("n_terms") or st.get("terms", {}).get("n_terms") \
-                or self._table_count("terms")
-            stats, avgdl = stats_table(cfg, n_docs, total_tf, n_terms)
-            store.write_table(stats, "stats")
-            metrics["stats"] = store.log_metrics(
-                "stats", n_docs=n_docs, avgdl=avgdl, n_terms=n_terms
-            )
-            # running totals for O(increment) appends (incremental.py reads
-            # these instead of re-aggregating the whole triples table)
-            max_id = counts.get("max_doc_id")
-            if max_id is None:
-                max_id = st.get("ingest", {}).get("max_doc_id", n_docs - 1)
-            store.commit_stage(
-                "totals", fp, n_docs=n_docs, total_tf=total_tf,
-                max_doc_id=int(max_id),
-            )
-            store.commit_stage("stats", fp)
-
-        # ---- stage: postings ----
-        if not (store.stage_done("postings", fp) and store.has_table("postings")):
-            self._emit("postings", 80.0)
-            t0 = time.time()
-            postings = encode_postings(triples, terms, cfg)
-            got = self._write_observed(
-                postings,
-                "postings",
-                {
-                    "rows": F.count(F.lit(1)),
-                    "postings": F.sum("n"),
-                    "bytes": F.sum(
-                        F.length("doc_ids")
-                        + F.length("tfs")
-                        + F.length("doclens")
-                    ),
-                },
-                partition_by=["bucket"],
-            )
-            dt = time.time() - t0
-            metrics["postings"] = store.log_metrics(
-                "postings",
-                rows=int(got["rows"]),
-                postings=int(got["postings"] or 0),
-                bytes_compressed=int(got["bytes"] or 0),
-                sec=round(dt, 3),
-                postings_per_sec=round(
-                    (got["postings"] or 0) / max(dt, 1e-9), 1
-                ),
-            )
-            store.commit_stage("postings", fp, rows=int(got["rows"]))

@@ -148,10 +148,10 @@ class IndexStore:
         os.makedirs(self.root, exist_ok=True)
         self.manifest_path = os.path.join(self.root, "manifest.json")
         self.metrics_path = os.path.join(self.root, "metrics.jsonl")
-        # serializes manifest read-modify-write across concurrent stage
-        # threads (the docs/terms stages commit in parallel); the file lock
-        # below extends this across PROCESSES (concurrent shard writers —
-        # the optimistic-commit role Iceberg's metastore plays)
+        # serializes manifest read-modify-write across threads of one
+        # process (web uploads, concurrent appenders); the file lock below
+        # extends this across PROCESSES (concurrent shard writers — the
+        # optimistic-commit role Iceberg's metastore plays)
         self._mlock = threading.Lock()
         self._lock_path = os.path.join(self.root, ".manifest.lock")
         self._writer_tlock = threading.Lock()

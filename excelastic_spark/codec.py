@@ -243,22 +243,6 @@ def block_metadata(
     return block_last, block_max
 
 
-def f64_to_bytes(arr: np.ndarray) -> bytes:
-    return np.ascontiguousarray(arr, dtype="<f8").tobytes()
-
-
-def f64_from_bytes(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<f8")
-
-
-def u64_to_bytes(arr: np.ndarray) -> bytes:
-    return np.ascontiguousarray(arr, dtype="<u8").tobytes()
-
-
-def u64_from_bytes(buf: bytes) -> np.ndarray:
-    return np.frombuffer(buf, dtype="<u8")
-
-
 # --------------------------------------------------------------- scoring ---
 
 

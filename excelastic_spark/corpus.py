@@ -10,10 +10,11 @@ Ingest assigns a dense deterministic ``doc_id`` WITHOUT a single-partition
 window: data-derived hash buckets + per-bucket offsets + within-bucket
 row_number (scales to 10^12 rows; the offsets table is one tiny collect of
 n_buckets rows; see assign_doc_ids for why the buckets must be data-derived
-and not partition ids). It validates
-fail-fast before any table write — the analog of the reference's
-``initialize()`` dry-run parse (ExcelParser.java:90-102, README.md:15) —
-and stamps per-row ``sha256(content)`` for the ingest invariant.
+and not partition ids), and stamps per-row ``sha256(content)`` for the
+ingest invariant. The fail-fast validation before any table write — the
+analog of the reference's ``initialize()`` dry-run parse
+(ExcelParser.java:90-102, README.md:15) — is
+``build.validate_and_fingerprint``.
 """
 
 from __future__ import annotations
@@ -115,41 +116,8 @@ def synthesize_corpus(
     return base.mapInPandas(gen, schema=CORPUS_SCHEMA)
 
 
-def synthesize_corpus_pandas(n_docs: int, seed: int = 42) -> pd.DataFrame:
-    """Driver-side twin of :func:`synthesize_corpus` for the pandas oracle."""
-    return _synth_batch(np.arange(n_docs), seed)
-
-
 # -------------------------------------------------------------------------
 # ingest
-
-
-def validate_corpus(corpus: DataFrame) -> int:
-    """Fail-fast dry-run over the full input BEFORE any write — the Spark
-    analog of the reference's initialize() full-parse-and-discard
-    (ExcelParser.java:90-102; CSVParser.java:90-104). One aggregate pass:
-    null checks + key-uniqueness, returns row count."""
-    agg = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.when(
-                F.col("content").isNull()
-                | F.col("repo").isNull()
-                | F.col("path").isNull()
-                | F.col("commit").isNull()
-                | F.col("lang").isNull(),  # CORPUS_SCHEMA declares non-null
-                1,
-            ).otherwise(0)
-        ).alias("bad"),
-        F.count_distinct("repo", "path", "commit").alias("distinct_keys"),
-    ).collect()[0]
-    if (agg["bad"] or 0) > 0:
-        raise ParserException(f"{agg['bad']} rows with null key/content")
-    if agg["distinct_keys"] != agg["n"]:
-        raise ParserException(
-            f"duplicate (repo,path,commit) keys: {agg['n'] - agg['distinct_keys']}"
-        )
-    return agg["n"]
 
 
 ID_BUCKETS = 64
@@ -202,17 +170,14 @@ def assign_doc_ids(
 def ingest_corpus(
     corpus: DataFrame,
     id_partitions: int = ID_BUCKETS,
-    validate: bool = True,
     bucket_counts: dict[int, int] | None = None,
 ) -> DataFrame:
-    """Validate + assign doc_id + stamp sha256(content) (the per-row
-    invariant from BASELINE.json:input_hint). Returns docs DataFrame
-    (doc_id, repo, path, commit, lang, content, sha256). ``validate=False``
-    when the caller already ran the fused validate+fingerprint pass
-    (build.validate_and_fingerprint), which also supplies ``bucket_counts``
-    so id assignment re-uses that scan's per-bucket counts."""
-    if validate:
-        validate_corpus(corpus)
+    """Assign doc_id + stamp sha256(content) (the per-row invariant from
+    BASELINE.json:input_hint). Returns docs DataFrame (doc_id, repo, path,
+    commit, lang, content, sha256). Validation is the caller's fused
+    validate+fingerprint pass (build.validate_and_fingerprint), which also
+    supplies ``bucket_counts`` so id assignment re-uses that scan's
+    per-bucket counts."""
     with_ids = assign_doc_ids(
         corpus, partitions=id_partitions, bucket_counts=bucket_counts
     )

@@ -23,9 +23,12 @@ STOPWORDS = {
 
 def tokens_col(text: Column) -> Column:
     """Array of tokens under the engine's analyzer (tokenizer.py), as a
-    Catalyst expression: split on the complement class, drop empties."""
+    Catalyst expression: split on the complement class, drop empties.
+    Spark's ``lower`` maps U+0130 to ``i`` + U+0307, so it is mapped to
+    ``I`` first, as the engine's one-to-one lowercase does."""
     return F.filter(
-        F.split(F.lower(text), SPLIT_PATTERN), lambda x: x != ""
+        F.split(F.lower(F.translate(text, "\u0130", "I")), SPLIT_PATTERN),
+        lambda x: x != "",
     )
 
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from excelastic_spark.codec import bm25_idf, bm25_impact
 from excelastic_spark.tokenizer import TOKEN_PATTERN
@@ -23,11 +25,12 @@ class Bm25Oracle:
         content_col: str = "content",
     ):
         """``docs``: pandas frame with doc_id + content columns."""
-        toks = (
-            docs.set_index("doc_id")[content_col]
-            .str.lower()
-            .str.findall(TOKEN_PATTERN)
-        )
+        # the engine's lowercase (tokenizer.py): Arrow's one-to-one
+        # utf8_lower, not str.lower, which splits U+0130 into two chars
+        low = pc.utf8_lower(pa.array(docs[content_col], pa.string()))
+        toks = pd.Series(
+            low.to_pylist(), index=docs["doc_id"]
+        ).str.findall(TOKEN_PATTERN)
         self.doclen = toks.str.len().astype("int64")
         ex = toks.explode().dropna()
         tf = (

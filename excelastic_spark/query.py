@@ -780,16 +780,6 @@ class QueryEngine:
             return res
         return self.search(terms, mode=mode, k=k)
 
-    def search_df(
-        self, terms: list[str], mode: str = "or", k: int = 10
-    ) -> DataFrame:
-        """Driver-path search surfaced as a Spark DataFrame (entry contract)."""
-        res = self.search(terms, mode=mode, k=k)
-        pdf = res.to_pandas()
-        if pdf.empty:
-            return self.spark.createDataFrame([], schema=RESULT_SCHEMA)
-        return self.spark.createDataFrame(pdf, schema=RESULT_SCHEMA)
-
     # ------------------------------------------------- distributed path ----
 
     def search_distributed(

@@ -50,8 +50,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
-from pyspark.sql.types import LongType
 
 from excelastic_spark.build import (
     by_bucket,
@@ -65,14 +63,15 @@ from excelastic_spark.build import (
 )
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
-from excelastic_spark.corpus import ID_BUCKETS, id_bucket_expr
+from excelastic_spark.corpus import ID_BUCKETS, id_bucket_expr, ingest_corpus
 from excelastic_spark.tokenizer import tokenize_triples
 
 
 def plan_shards(
     corpus: DataFrame, n_shards: int, store: IndexStore, cfg: EngineConfig
 ) -> dict[str, Any]:
-    """Validate + fingerprint + bucket offsets -> persisted shard plan."""
+    """Validate + fingerprint + per-id-bucket counts -> persisted shard
+    plan (the counts fix every bucket's doc_id offset)."""
     fp, n_docs, bucket_counts, _ = validate_and_fingerprint(
         corpus, pre_ingested=False
     )
@@ -80,17 +79,11 @@ def plan_shards(
     # must not let shard_done entries from the old layout satisfy the new
     # plan (same rationale as IndexBuilder.build)
     fp = f"{fp},{cfg.layout_key()}"
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(bucket_counts):
-        offsets[b] = acc
-        acc += bucket_counts[b]
     plan = {
         "fingerprint": fp,
         "n_docs": n_docs,
         "n_shards": n_shards,
         "id_buckets": ID_BUCKETS,
-        "offsets": {str(k): v for k, v in offsets.items()},
         "counts": {str(k): v for k, v in bucket_counts.items()},
     }
     store.save_config(cfg.layout_dict())
@@ -129,7 +122,7 @@ def build_shard(
         # already built for THIS plan: appending again would duplicate
         # segments and silently double query scores
         return {"stage": f"shard_{shard}", "skipped": True}
-    offsets = {int(k): v for k, v in plan["offsets"].items()}
+    counts = {int(b): int(n) for b, n in plan["counts"].items()}
     t0 = time.time()
 
     bucket = id_bucket_expr(int(plan["id_buckets"]))
@@ -147,12 +140,8 @@ def build_shard(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    planned_counts = {
-        int(b): int(n)
-        for b, n in plan.get("counts", {}).items()
-        if int(b) % n_shards == shard
-    }
-    if plan.get("counts") and shard_counts != planned_counts:
+    planned_counts = {b: n for b, n in counts.items() if b % n_shards == shard}
+    if shard_counts != planned_counts:
         drifted = sorted(
             b
             for b in set(shard_counts) | set(planned_counts)
@@ -163,19 +152,12 @@ def build_shard(
             f"{drifted} (counts {shard_counts} vs planned {planned_counts})"
         )
     n_docs_shard = sum(shard_counts.values())
-    # global doc_id: plan offset + within-bucket rank (bucket ⊂ shard, so
-    # the shard-local window computes the GLOBAL rank)
-    offmap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    w = Window.partitionBy("_bucket").orderBy("repo", "path", "commit")
-    ingested = (
-        mine.withColumn(
-            "doc_id",
-            (F.row_number().over(w) - 1 + offmap[F.col("_bucket")]).cast(
-                LongType()
-            ),
-        )
-        .drop("_bucket")
-        .withColumn("sha256", F.sha2(F.col("content"), 256))
+    # the plain build's doc-id assignment over the plan's counts of EVERY
+    # bucket, so the offsets are the global ones (bucket ⊂ shard, so the
+    # shard-local within-bucket rank is the global rank)
+    ingested = ingest_corpus(
+        mine.drop("_bucket"), id_partitions=int(plan["id_buckets"]),
+        bucket_counts=counts,
     )
     writes: list[tuple[str, str, str]] = []
     ing_path = store.stage_table(ingested, "ingested")
@@ -259,27 +241,18 @@ def finalize(
         ),
         cfg,
     ))
-    from pyspark.sql import Observation
-
-    # n_terms observed inside the write job (build._write_observed
-    # pattern) — a separate .count() would run the vocab aggregation twice
-    obs = Observation("obs_terms_finalize")
-    store.write_table(
-        terms.observe(obs, F.count(F.lit(1)).alias("n")),
-        "terms",
+    terms_path, got = stage_observed(
+        store, terms, "terms", {"n": F.count(F.lit(1))},
         partition_by=["bucket"],
     )
-    n_terms = int(obs.get["n"])
+    n_terms = int(got["n"])
 
-    n_docs = sum(
-        st[f"shard_{s}"]["n_docs"] for s in range(int(plan["n_shards"]))
-    )
-    total_tf = sum(
-        st[f"shard_{s}"]["total_tf"] for s in range(int(plan["n_shards"]))
-    )
+    shards = [st[f"shard_{s}"] for s in range(int(plan["n_shards"]))]
+    n_docs = sum(e["n_docs"] for e in shards)
+    total_tf = sum(e["total_tf"] for e in shards)
     # duplicate-segment guard: a crashed-and-retried shard that appended
     # twice passes per-shard fingerprints but doubles the docs table; the
-    # metadata count is cheap and catches it before stats commit
+    # metadata count is cheap and catches it before anything is committed
     actual_docs = store.read_table(spark, "docs").count()
     if actual_docs != plan["n_docs"] or n_docs != plan["n_docs"]:
         raise RuntimeError(
@@ -287,13 +260,20 @@ def finalize(
             f"{n_docs}, plan {plan['n_docs']} — duplicate or missing segments"
         )
     stats, avgdl = stats_table(cfg, n_docs, total_tf, n_terms)
-    store.write_table(stats, "stats")
-    store.commit_stage("finalize", plan["fingerprint"], n_docs=n_docs)
-    store.commit_stage(
-        "totals", plan["fingerprint"], n_docs=n_docs, total_tf=total_tf,
-        max_doc_id=n_docs - 1,
+    # terms, stats and the running totals publish in ONE swap; the plan's
+    # doc_ids are dense, so the largest is n_docs - 1
+    store.commit_snapshot(
+        [("terms", terms_path, "overwrite"),
+         ("stats", store.stage_table(stats, "stats"), "overwrite")],
+        stages={
+            "finalize": {"fingerprint": plan["fingerprint"], "n_docs": n_docs},
+            "totals": {
+                "fingerprint": plan["fingerprint"], "n_docs": n_docs,
+                "total_tf": total_tf, "max_doc_id": n_docs - 1,
+            },
+        },
     )
     return store.log_metrics(
-        "finalize", n_docs=n_docs, n_terms=int(n_terms), avgdl=avgdl,
+        "finalize", n_docs=n_docs, n_terms=n_terms, avgdl=avgdl,
         sec=round(time.time() - t0, 3),
     )

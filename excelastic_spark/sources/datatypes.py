@@ -40,14 +40,3 @@ def parse_numeric(value: float):
 SPARK_INT_RE = "^[0-9]+$"
 SPARK_FLOAT_RE = "^[0-9]+\\.[0-9]+$"
 SPARK_BOOL_RE = "^(true|false)$"
-
-
-def to_iso_instant(col):
-    """Date normalization (A9): the reference renders date-formatted cells
-    as ISO-8601 UTC instant strings via Date.toInstant().toString()
-    (ExcelParser.java:244-246). Spark twin for timestamp columns."""
-    from pyspark.sql import functions as F
-
-    return F.date_format(
-        F.to_utc_timestamp(col, "UTC"), "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    )

@@ -107,43 +107,20 @@ class IncrementalIndexer:
     # ------------------------------------------------------------- totals
 
     def _totals(self) -> dict[str, int]:
-        """Running (n_docs, total_tf, max_doc_id) — manifest first (written
-        by build/finalize/previous appends), falling back to the stats
-        table + stage entries for indexes from older layouts."""
-        st = self.store.manifest()["stages"]
-        tot = st.get("totals")
-        if tot and "n_docs" in tot and "total_tf" in tot:
-            return {
-                "n_docs": int(tot["n_docs"]),
-                "total_tf": int(tot["total_tf"]),
-                "max_doc_id": int(tot.get("max_doc_id", tot["n_docs"] - 1)),
-            }
-        if not self.store.has_table("stats"):
-            return {"n_docs": 0, "total_tf": 0, "max_doc_id": -1}
-        srow = self.store.snapshot().stats_row()
-        n_docs = int(srow["n_docs"])
-        total_tf = st.get("triples", {}).get("total_tf")
-        if total_tf is None:
-            # avgdl was computed as total_tf / n_docs in float64; n_docs is
-            # small enough that the rounding recovers the exact integer
-            total_tf = round(float(srow["avgdl"]) * n_docs)
-        # older-layout fallback: doc_ids need not be dense (a pre_ingested
-        # build can carry gaps), so assuming max = n_docs - 1 could assign
-        # the next append a COLLIDING id — read the true max from the docs
-        # table's doc_id column (one columnar agg, fallback path only)
-        if self.store.has_table("docs"):
-            mrow = (
-                self.store.read_table(self.spark, "docs")
-                .agg(F.max("doc_id").alias("m"))
-                .collect()[0]
-            )
-            max_id = int(mrow["m"]) if mrow["m"] is not None else n_docs - 1
-        else:
-            max_id = n_docs - 1
+        """Running (n_docs, total_tf, max_doc_id) from the manifest's
+        ``totals`` entry, which every commit that changes them carries:
+        the build's stats stage, ``sharded.finalize`` and each append.
+        Zeros (and max_doc_id -1) before the first such commit. An index
+        with stats but no such entry predates the current layout; ids
+        counted from 0 would collide with its own, so it is refused."""
+        m = self.store.manifest()
+        tot = m["stages"].get("totals", {})
+        if not tot and "stats" in m["tables"]:
+            raise ValueError("no running totals: rebuild before appending")
         return {
-            "n_docs": n_docs,
-            "total_tf": int(total_tf),
-            "max_doc_id": max_id,
+            "n_docs": int(tot.get("n_docs", 0)),
+            "total_tf": int(tot.get("total_tf", 0)),
+            "max_doc_id": int(tot.get("max_doc_id", -1)),
         }
 
     def append_increment(

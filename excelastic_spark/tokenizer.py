@@ -7,18 +7,21 @@ analyzer itself is ours, defined deterministically:
     lowercase; terms are maximal runs of [a-z0-9_]
 
 which is a code-aware simple analyzer (underscores kept so identifiers like
-``doc_id`` stay whole). The exact same rule is used by the pandas oracle,
-the DuckDB oracle SQL (regexp_split_to_array on the complement class) and
-the engine, so all three tokenize identically.
+``doc_id`` stay whole). "Lowercase" is Unicode simple case mapping, one
+character to one (Arrow's ``utf8_lower``, DuckDB's ``lower``): ``İ``
+(U+0130) lowers to ``i``, where Python's ``str.lower`` and Java's
+``toLowerCase`` give ``i`` + U+0307 and so split the token. The same rule
+is used by the pandas oracle (oracle/bm25.py, which lowers with
+``utf8_lower``), the DuckDB oracle SQL (regexp_split_to_array on the
+complement class), the Catalyst twin ``functions.text.tokens_col`` (which
+maps U+0130 to ``I`` before Spark's ``lower``) and the engine, so all four
+tokenize identically.
 
 Hot path: ``mapInArrow`` — strings NEVER convert to Python/pandas objects.
 Per batch: Arrow C++ lower + regex-split + flatten + dictionary-encode,
 then one Arrow hash-groupby over (row, term-code) int columns; doclens via
 np.bincount. The per-batch aggregation is map-side, so the shuffle that
-follows carries pre-aggregated (doc, term) counts, not raw tokens. (The
-previous pandas ``str.findall`` kernel survives as ``tokenize_pandas`` for
-the driver-side oracle; the Arrow kernel is ~20% faster at the scaling
-bench's single-core level and byte-identical in output.)
+follows carries pre-aggregated (doc, term) counts, not raw tokens.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -50,42 +52,6 @@ TRIPLES_SCHEMA = StructType(
         StructField("doclen", LongType(), False),
     ]
 )
-
-
-def tokenize_pandas(pdf: pd.DataFrame, content_col: str = "content") -> pd.DataFrame:
-    """One Arrow batch -> (doc_id, term, tf, doclen) rows. Pure pandas/C.
-
-    ``doclen`` (total token count of the doc) is emitted on every triple so
-    the posting builder never needs a doc_id shuffle-join back to the docs
-    table — the doc length rides along with the term row.
-    """
-    toks = (
-        pdf.set_index("doc_id")[content_col]
-        .str.lower()
-        .str.findall(TOKEN_PATTERN)
-    )
-    doclen = toks.str.len().rename("doclen")
-    ex = toks.explode().dropna().rename("term")
-    if ex.empty:
-        return pd.DataFrame(
-            {
-                "doc_id": pd.Series([], dtype="int64"),
-                "term": pd.Series([], dtype="object"),
-                "tf": pd.Series([], dtype="int64"),
-                "doclen": pd.Series([], dtype="int64"),
-            }
-        )
-    tf = (
-        ex.groupby([ex.index, ex.values], sort=False)
-        .size()
-        .rename("tf")
-        .rename_axis(["doc_id", "term"])
-        .reset_index()
-    )
-    tf["doclen"] = tf["doc_id"].map(doclen).astype("int64")
-    tf["doc_id"] = tf["doc_id"].astype("int64")
-    tf["tf"] = tf["tf"].astype("int64")
-    return tf[["doc_id", "term", "tf", "doclen"]]
 
 
 def _tokens(content: pa.Array) -> tuple[pa.Array, np.ndarray, np.ndarray]:

@@ -136,29 +136,42 @@ def test_resume_skips_stages(built, spark):
     assert json.dumps(store.manifest()["tables"], sort_keys=True) == manifest_before
 
 
-def test_resume_completes_partial_build(spark, tmp_path):
-    """Kill-after-stage-N simulation: build a full index, then invalidate
-    the postings stage only; rerun must redo ONLY postings and produce
-    rank-identical results."""
+@pytest.fixture(scope="module")
+def resume_built(spark, tmp_path_factory):
     cfg = EngineConfig().tiny().with_overrides(shuffle_partitions=4)
-    store = IndexStore(str(tmp_path), "resume")
+    store = IndexStore(str(tmp_path_factory.mktemp("resume")), "resume")
     corpus = synthesize_corpus(spark, 120, partitions=2)
     IndexBuilder(spark, store, cfg).build(corpus)
-    qe1 = QueryEngine(spark, store, cfg)
-    before = qe1.search(["import", "return"], "or", 10).to_pandas()
+    return store, cfg, corpus
 
-    # simulate dying before the postings stage committed
+
+@pytest.mark.parametrize("stage", ["docs", "terms", "stats", "postings"])
+def test_resume_completes_partial_build(spark, resume_built, stage):
+    """Kill-after-stage-N simulation: build a full index, then invalidate
+    one stage's lineage entry; the rerun must redo ONLY that stage and
+    serve bit-identical answers."""
+    store, cfg, corpus = resume_built
+    qs = [(["import", "return"], "or"), (["def", "class"], "and")]
+    before = [
+        QueryEngine(spark, store, cfg).search(t, m, 10).to_pandas()
+        for t, m in qs
+    ]
+    # simulate dying before the stage committed
     m = store.manifest()
-    del m["stages"]["postings"]
+    del m["stages"][stage]
     store._commit_manifest(m)
+    tables = dict(m["tables"])
 
     metrics = IndexBuilder(spark, store, cfg).build(corpus)
-    assert "postings" in metrics  # postings re-ran
-    assert "terms" not in metrics  # earlier stages resumed
-    qe2 = QueryEngine(spark, store, cfg)
-    after = qe2.search(["import", "return"], "or", 10).to_pandas()
-    assert list(before["doc_id"]) == list(after["doc_id"])
-    assert np.array_equal(before["score"].to_numpy(), after["score"].to_numpy())
+    assert set(metrics) == {"fingerprint", stage}  # only that stage re-ran
+    now = store.manifest()["tables"]
+    assert {t: p for t, p in now.items() if t != stage} == {
+        t: p for t, p in tables.items() if t != stage
+    }
+    assert now[stage] != tables[stage]
+    qe = QueryEngine(spark, store, cfg)
+    for (t, mode), b in zip(qs, before):
+        assert qe.search(t, mode, 10).to_pandas().equals(b)
 
 
 def test_partition_count_invariance(spark, tmp_path, built):

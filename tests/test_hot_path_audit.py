@@ -10,12 +10,12 @@ import ast
 import pathlib
 import re
 
-ENGINE = pathlib.Path(__file__).resolve().parent.parent / "excelastic_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+ENGINE = ROOT / "excelastic_spark"
 
 HOT_MODULES = [
     "build.py",
     "tokenizer.py",
-    "stats.py",
     "codec.py",
     "corpus.py",
     "query.py",
@@ -88,3 +88,42 @@ def test_query_reads_the_manifest_only_in_pin():
         ):
             offenders.append(f"line {node.lineno}: {ast.unparse(node)}")
     assert offenders == [], offenders
+
+
+def _imported_modules(path: pathlib.Path) -> set[str]:
+    """Dotted names ``path`` imports: ``import a.b`` gives a.b,
+    ``from a import b`` gives a and a.b (b may be a module)."""
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            out.add(node.module)
+            out.update(f"{node.module}.{a.name}" for a in node.names)
+    return out
+
+
+def test_every_engine_module_is_imported_by_non_test_code():
+    """A module that only tests import is dead code: every
+    ``excelastic_spark`` module other than the ``__init__`` files is
+    imported by a non-test file of the repository (the engine itself, the
+    CLI, the entry point, the benchmarks or tools), not by itself. The one
+    exception is the plan and job audit library the tests measure with."""
+    test_support = {"excelastic_spark.plans.audit"}
+    sources = [
+        p for p in ROOT.rglob("*.py")
+        if not p.relative_to(ROOT).parts[0].startswith(".")
+        and "tests" not in p.relative_to(ROOT).parts
+        and not p.name.startswith("test_") and p.name != "conftest.py"
+    ]
+    imports = {p: _imported_modules(p) for p in sources}
+    unused = []
+    for mod in sorted(ENGINE.rglob("*.py")):
+        if mod.name == "__init__.py":
+            continue
+        name = ".".join(mod.relative_to(ROOT).with_suffix("").parts)
+        if name in test_support:
+            continue
+        if not any(name in got for p, got in imports.items() if p != mod):
+            unused.append(name)
+    assert unused == [], unused

@@ -233,6 +233,14 @@ def test_append_pre_ingested_disjointness_guard(spark, tmp_path):
             ingested.filter(F.col("doc_id") < 5), pre_ingested=True
         )
     assert store.read_table(spark, "docs").count() == 60  # nothing appended
+    # an index without running totals (an older layout) refuses appends
+    # rather than assign ids from 0 that collide with its own
+    m = store.manifest()
+    del m["stages"]["totals"]
+    store._commit_manifest(m)
+    with pytest.raises(ValueError, match="running totals"):
+        inc.append_increment(synthesize_corpus(spark, 5, seed=9, partitions=1))
+    assert store.read_table(spark, "docs").count() == 60
 
 
 def test_append_crash_before_commit_is_retryable(spark, tmp_path, monkeypatch):

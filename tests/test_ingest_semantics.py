@@ -5,7 +5,8 @@ from __future__ import annotations
 
 import pytest
 
-from excelastic_spark.corpus import ParserException, validate_corpus
+from excelastic_spark.build import validate_and_fingerprint
+from excelastic_spark.corpus import ParserException
 from excelastic_spark.sources.datatypes import parse_numeric, parse_string_value
 from excelastic_spark.sources.spreadsheet import (
     ColumnsHeadersMismatchException,
@@ -143,13 +144,13 @@ def test_validation_dry_run(spark):
         [("r", "p1", "c", "py", "x"), ("r", "p2", "c", "py", "y")],
         "repo string, path string, commit string, lang string, content string",
     )
-    assert validate_corpus(good) == 2
+    assert validate_and_fingerprint(good, pre_ingested=False).n == 2
     dup = good.withColumn("path", F.lit("same"))
     with pytest.raises(ParserException):
-        validate_corpus(dup)
+        validate_and_fingerprint(dup, pre_ingested=False)
     nulls = spark.createDataFrame(
         [("r", "p", "c", "py", None)],
         "repo string, path string, commit string, lang string, content string",
     )
     with pytest.raises(ParserException):
-        validate_corpus(nulls)
+        validate_and_fingerprint(nulls, pre_ingested=False)

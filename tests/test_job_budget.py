@@ -33,7 +33,6 @@ QS = [
     (["import", "sym0100"], "or", 10),
 ]
 # jobs per call, each counting the caller's one parquet read of its input
-# (a build's count includes its docs stage, which runs on its own thread)
 BUDGET = {"build": 15, "append": 16, "merge": 4, "pin": 0}
 TASK_BUDGET = {"build": 20, "append": 25, "merge": 18}
 # generated classes a repeat append compiles: its literal doc-id offset
@@ -96,9 +95,9 @@ def test_write_job_budgets(spark, tmp_path, inputs):
 
 
 def test_build_jobs_stay_in_callers_job_group(spark, tmp_path, inputs):
-    """The docs stage's thread inherits the caller's job group: no job of
-    a build runs ungrouped, where cancelling the caller's group would miss
-    it."""
+    """Every stage of a build runs on the calling thread, in the caller's
+    job group: no job of a build runs ungrouped, where cancelling the
+    caller's group would miss it."""
     tracker = spark.sparkContext.statusTracker()
     store = IndexStore(str(tmp_path), "group")
     before = set(tracker.getJobIdsForGroup(None))

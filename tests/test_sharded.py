@@ -11,7 +11,10 @@ build's.
 
 from __future__ import annotations
 
+import copy
+
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -189,3 +192,32 @@ def test_replan_with_new_layout_invalidates_shards(spark, tmp_path, corpus):
     plan_b = sharded.plan_shards(corpus, 1, store, cfg_b)
     st = store.manifest()["stages"]["shard_0"]
     assert st["fingerprint"] != plan_b["fingerprint"]  # must rebuild
+
+
+def test_every_stats_commit_carries_its_totals(spark, tmp_path, monkeypatch):
+    """Every manifest a build, or a 2-shard build plus finalize, writes
+    that names a stats table also holds the running totals of the same
+    n_docs: no commit publishes collection stats that an append's totals
+    do not match."""
+    written: list[dict] = []
+    orig = IndexStore._commit_manifest
+
+    def record(self, m):
+        written.append(copy.deepcopy(m))
+        orig(self, m)
+
+    monkeypatch.setattr(IndexStore, "_commit_manifest", record)
+    cfg = EngineConfig().tiny()
+    small = synthesize_corpus(spark, 200, partitions=2)
+    IndexBuilder(spark, IndexStore(str(tmp_path), "plain"), cfg).build(small)
+    shards = IndexStore(str(tmp_path), "shards")
+    sharded.plan_shards(small, 2, shards, cfg)
+    for s in (0, 1):
+        sharded.build_shard(spark, shards, small, s, cfg)
+    sharded.finalize(spark, shards, cfg)
+
+    with_stats = [m for m in written if "stats" in m["tables"]]
+    assert len(with_stats) >= 2
+    for m in with_stats:
+        stats = pq.read_table(m["tables"]["stats"]).to_pylist()[0]
+        assert m["stages"]["totals"]["n_docs"] == stats["n_docs"] == 200
