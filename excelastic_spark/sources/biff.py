@@ -37,13 +37,17 @@ def _sect_off(sect: int, sector_size: int) -> int:
 
 
 def _read_chain(data: bytes, fat: list[int], start: int,
-                sector_size: int) -> bytes:
+                sector_size: int, base: int) -> bytes:
+    """Concatenate the chain of sectors from ``start``; sector #n sits at
+    ``base + n * sector_size`` (base = sector_size for regular sectors,
+    0 for mini sectors inside the mini stream). Sectors past the end of
+    ``data`` come back short or empty: callers check the length."""
     out = []
     sect = start
     seen = 0
     limit = len(fat) + 2
     while sect != _ENDOFCHAIN and sect != _FREE:
-        off = _sect_off(sect, sector_size)
+        off = base + sect * sector_size
         out.append(data[off:off + sector_size])
         if sect >= len(fat) or (seen := seen + 1) > limit:
             raise WorkbookError("corrupt CFB FAT chain")
@@ -53,7 +57,12 @@ def _read_chain(data: bytes, fat: list[int], start: int,
 
 def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     """Extract the first stream whose name matches ``names`` from an OLE2
-    compound file ([MS-CFB] §2)."""
+    compound file ([MS-CFB] §2).
+
+    A stream whose sector chain yields fewer bytes than the directory
+    entry's Stream Size ([MS-CFB] §2.6.1) — a truncated file — is a
+    :class:`WorkbookError`; a short final sector that still covers the
+    declared size is accepted."""
     if data[:8] != _CFB_MAGIC:
         raise WorkbookError("not an OLE2 compound file")
     (sector_shift,) = struct.unpack_from("<H", data, 30)
@@ -86,7 +95,7 @@ def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
         off = _sect_off(fs, sector_size)
         fat.extend(struct.unpack_from(f"<{sector_size // 4}I", data, off))
 
-    directory = _read_chain(data, fat, dir_start, sector_size)
+    directory = _read_chain(data, fat, dir_start, sector_size, sector_size)
     entries = []
     for i in range(len(directory) // 128):
         e = directory[i * 128:(i + 1) * 128]
@@ -104,25 +113,33 @@ def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     if target is None:
         raise WorkbookError(f"no {names} stream in compound file")
     start, size = target
+    if sector_size == 512:
+        # v3 sizes are < 2 GiB; older writers left the high 32 bits
+        # uninitialized, and [MS-CFB] §2.6.1 recommends ignoring them
+        size &= 0xFFFFFFFF
     if size >= mini_cutoff:
-        return _read_chain(data, fat, start, sector_size)[:size]
-    # mini-stream: root entry's chain holds the ministream bytes
-    root = next(e for e in entries if e[1] == 5)
-    ministream = _read_chain(data, fat, root[2], sector_size)
-    minifat: list[int] = []
-    sect = minifat_start
-    for _ in range(n_minifat):
-        off = _sect_off(sect, sector_size)
-        minifat.extend(struct.unpack_from(f"<{sector_size // 4}I", data, off))
-        sect = fat[sect]
-        if sect in (_ENDOFCHAIN, _FREE):
-            break
-    out = []
-    msect = start
-    while msect not in (_ENDOFCHAIN, _FREE):
-        out.append(ministream[msect * mini_size:(msect + 1) * mini_size])
-        msect = minifat[msect]
-    return b"".join(out)[:size]
+        stream = _read_chain(data, fat, start, sector_size, sector_size)
+    else:
+        # mini-stream: root entry's chain holds the ministream bytes
+        root = next(e for e in entries if e[1] == 5)
+        ministream = _read_chain(data, fat, root[2], sector_size, sector_size)
+        minifat: list[int] = []
+        sect = minifat_start
+        for _ in range(n_minifat):
+            off = _sect_off(sect, sector_size)
+            minifat.extend(
+                struct.unpack_from(f"<{sector_size // 4}I", data, off)
+            )
+            sect = fat[sect]
+            if sect in (_ENDOFCHAIN, _FREE):
+                break
+        stream = _read_chain(ministream, minifat, start, mini_size, 0)
+    if len(stream) < size:
+        raise WorkbookError(
+            f"truncated compound file: stream holds {len(stream)} of its "
+            f"declared {size} bytes"
+        )
+    return stream[:size]
 
 
 # --------------------------------------------------------------------------
@@ -250,7 +267,8 @@ def load_xls(data: bytes) -> tuple[Sheet, bool]:
     """Parse the first worksheet of an xls payload -> (Sheet, date1904).
 
     Corrupt/truncated byte streams surface as :class:`WorkbookError` (never
-    raw struct.error/IndexError), so the dispatch layer's documented
+    raw struct.error/IndexError; a stream shorter than its declared size is
+    one, see :func:`cfb_stream`), so the dispatch layer's documented
     invalid-bytes -> ParserException contract (spreadsheet.py
     parse_workbook_bytes; reference TestParser.failParseInvalid) holds for
     every malformed input, not just the explicitly-detected cases."""

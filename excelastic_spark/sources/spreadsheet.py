@@ -121,6 +121,7 @@ def parse_rows(path: str, offset: int = 1) -> tuple[list[str], list[dict]]:
     (ParserFactory.java:38-53)."""
     ext = _extension(path)
     if ext in (".xlsx", ".xls"):
+        # OSError stays unwrapped: a missing file is not an invalid one
         with open(path, "rb") as f:
             data = f.read()
         return parse_workbook_bytes(data, ext, offset)
@@ -274,7 +275,9 @@ def parse_workbook_bytes(
 ) -> tuple[list[str], list[dict]]:
     """Parse workbook bytes with the reference's ExcelParser semantics;
     structural errors surface as ParserException like
-    ExcelParser.setFileData:47-53 wraps POI failures."""
+    ExcelParser.setFileData:47-53 wraps POI failures — damaged zip members
+    and non-XML parts of an .xlsx, and truncated or corrupt .xls compound
+    files, included."""
     from excelastic_spark.sources.workbook import WorkbookError, parse_xlsx_rows
 
     try:

@@ -39,6 +39,7 @@ import datetime as _dt
 import io
 import re
 import zipfile
+import zlib
 from typing import Any
 from xml.etree import ElementTree as ET
 
@@ -168,19 +169,37 @@ class Sheet:
         return self.rows.get(idx, {})
 
 
-def load_xlsx(data: bytes) -> Sheet:
-    """Parse the FIRST worksheet of an xlsx payload (ExcelParser.java:44
-    reads only sheet 0)."""
+def load_xlsx(data: bytes) -> tuple[Sheet, bool]:
+    """Parse the FIRST worksheet of an xlsx payload -> (Sheet, date1904)
+    (ExcelParser.java:44 reads only sheet 0).
+
+    Damaged packages surface as :class:`WorkbookError`, like
+    ``biff.load_xls``: bytes that are not a zip, a truncated archive, a
+    member whose deflate data or CRC-32 is broken, and parts that are not
+    XML (workbook, relationships, shared strings, styles, worksheet)."""
     try:
-        zf = zipfile.ZipFile(io.BytesIO(data))
-    except zipfile.BadZipFile as e:
-        raise WorkbookError(f"not a valid xlsx (zip) file: {e}") from e
-    with zf:
+        return _load_xlsx(data)
+    except WorkbookError:
+        raise
+    except (zipfile.BadZipFile, zlib.error, EOFError, NotImplementedError,
+            ValueError, KeyError, IndexError, ET.ParseError) as e:
+        raise WorkbookError(f"corrupt xlsx package: {e!r}") from e
+
+
+def _load_xlsx(data: bytes) -> tuple[Sheet, bool]:
+    with zipfile.ZipFile(io.BytesIO(data)) as zf:
+        # OPC packages store or deflate their parts, unencrypted (ECMA-376
+        # Part 2); anything else is damage, not a reason to run another
+        # decoder
+        for i in zf.infolist():
+            if (i.compress_type not in (zipfile.ZIP_STORED, zipfile.ZIP_DEFLATED)
+                    or i.flag_bits & 0x1):
+                raise WorkbookError(
+                    f"xlsx part {i.filename!r} is neither stored nor "
+                    "deflated, or is encrypted"
+                )
         names = set(zf.namelist())
-        try:
-            wb = ET.fromstring(zf.read("xl/workbook.xml"))
-        except (KeyError, ET.ParseError) as e:
-            raise WorkbookError(f"missing/invalid xl/workbook.xml: {e}") from e
+        wb = ET.fromstring(zf.read("xl/workbook.xml"))
         date1904 = False
         for el in wb.iter():
             if _tag(el) == "workbookPr":
@@ -216,7 +235,9 @@ def load_xlsx(data: bytes) -> Sheet:
             custom: dict[int, str] = {}
             for el in styles.iter():
                 if _tag(el) == "numFmt":
-                    custom[int(el.get("numFmtId"))] = el.get("formatCode", "")
+                    # numFmtId is required (ECMA-376 §18.8.30); a missing
+                    # one is int("") -> ValueError -> WorkbookError
+                    custom[int(el.get("numFmtId", ""))] = el.get("formatCode", "")
             for el in styles.iter():
                 if _tag(el) == "cellXfs":
                     for xf in el:
@@ -225,10 +246,7 @@ def load_xlsx(data: bytes) -> Sheet:
                         fid = int(xf.get("numFmtId", "0"))
                         date_styles.append(is_date_format(fid, custom.get(fid)))
 
-        try:
-            ws = ET.fromstring(zf.read(target))
-        except ET.ParseError as e:
-            raise WorkbookError(f"invalid worksheet xml: {e}") from e
+        ws = ET.fromstring(zf.read(target))
 
     rows: dict[int, dict[int, Cell]] = {}
     present: set[int] = set()
@@ -251,7 +269,7 @@ def load_xlsx(data: bytes) -> Sheet:
                 cells[cidx] = cell
         if cells:
             rows[ridx] = cells
-    return Sheet(rows, present)
+    return Sheet(rows, present), date1904
 
 
 def _resolve_cell(
@@ -376,18 +394,7 @@ def _cell_value(cell: Cell, date1904: bool) -> Any:
 
 
 def parse_xlsx_rows(data: bytes, offset: int = 1) -> tuple[list[str], list[dict]]:
-    sheet = load_xlsx(data)
-    # date1904 already folded into load via styles; recover the flag cheaply
-    # by re-checking workbookPr (tiny XML)
-    date1904 = False
-    try:
-        with zipfile.ZipFile(io.BytesIO(data)) as zf:
-            wb = ET.fromstring(zf.read("xl/workbook.xml"))
-        for el in wb.iter():
-            if _tag(el) == "workbookPr":
-                date1904 = el.get("date1904") in ("1", "true")
-    except Exception:
-        pass
+    sheet, date1904 = load_xlsx(data)
     return sheet_to_documents(sheet, offset, date1904)
 
 

@@ -7,6 +7,10 @@ exercises implicitly."""
 from __future__ import annotations
 
 import datetime as dt
+import io
+import os
+import struct
+import zipfile
 
 import pytest
 
@@ -32,6 +36,15 @@ from excelastic_spark.sources.workbook import (
 REF = "/root/reference/src/test/resources"
 
 
+def _needs_ref(name):
+    """Skip where the reference checkout (and so its Excel-written fixture
+    ``name``) is absent; the test runs unchanged wherever it exists."""
+    path = f"{REF}/{name}"
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason=f"reference fixture {path} not present"
+    )
+
+
 def _assert_parser_goldens(docs):
     # TestParser.java:148-162
     assert len(docs) == 2
@@ -43,6 +56,7 @@ def _assert_parser_goldens(docs):
         assert d["float"] == pos * 0.5
 
 
+@_needs_ref("test.xlsx")
 def test_xlsx_reference_golden():
     # testParseOOXML (TestParser.java:52-55)
     headers, docs = parse_rows(f"{REF}/test.xlsx", offset=5)
@@ -54,6 +68,7 @@ def test_xlsx_reference_golden():
     assert isinstance(docs[1]["float"], int)
 
 
+@_needs_ref("test.xls")
 def test_xls_reference_fixture():
     # testParse2007 is @Ignore'd upstream; the fixture still parses: a
     # 3-column sheet at offset 5 with two data rows
@@ -65,10 +80,53 @@ def test_xls_reference_fixture():
     ]
 
 
-def test_invalid_workbook_raises():
-    # failParseInvalid (TestParser.java:33-40)
-    with pytest.raises(ParserException):
-        parse_rows(f"{REF}/invalid.xlsx", offset=5)
+def _replace_member(package: bytes, name: str, data: bytes) -> bytes:
+    out = io.BytesIO()
+    with zipfile.ZipFile(io.BytesIO(package)) as src, zipfile.ZipFile(
+        out, "w", zipfile.ZIP_DEFLATED
+    ) as dst:
+        for info in src.infolist():
+            dst.writestr(info, data if info.filename == name else src.read(info))
+    return out.getvalue()
+
+
+def _invert_member_byte(package: bytes, name: str) -> bytes:
+    """Invert the middle byte of member ``name``'s deflate data."""
+    with zipfile.ZipFile(io.BytesIO(package)) as zf:
+        info = zf.getinfo(name)
+    # local file header: 30 fixed bytes, then the name and extra fields
+    n_name, n_extra = struct.unpack_from("<HH", package, info.header_offset + 26)
+    pos = info.header_offset + 30 + n_name + n_extra + info.compress_size // 2
+    return package[:pos] + bytes([package[pos] ^ 0xFF]) + package[pos + 1:]
+
+
+def test_invalid_workbook_raises(tmp_path):
+    # failParseInvalid (TestParser.java:33-40): the reference's invalid.xlsx
+    # wherever that checkout exists, and always damaged packages built from
+    # write_xlsx output
+    good = tmp_path / "good.xlsx"
+    write_xlsx(str(good), ["name", "integer"], [["test_0", 2]], offset=5)
+    assert parse_rows(str(good), offset=5) == (
+        ["name", "integer"], [{"name": "test_0", "integer": 2}]
+    )
+    package = good.read_bytes()
+    damaged = {
+        "not_zip": b"not a zip archive " * 8,
+        "truncated": package[: len(package) // 2],
+        "bad_deflate": _invert_member_byte(package, "xl/worksheets/sheet1.xml"),
+        "styles_not_xml": _replace_member(package, "xl/styles.xml", b"<not xml"),
+        "rels_not_xml": _replace_member(
+            package, "xl/_rels/workbook.xml.rels", b"<not xml"
+        ),
+    }
+    paths = [f"{REF}/invalid.xlsx"] if os.path.exists(f"{REF}/invalid.xlsx") else []
+    for name, data in damaged.items():
+        p = tmp_path / f"{name}.xlsx"
+        p.write_bytes(data)
+        paths.append(str(p))
+    for p in paths:
+        with pytest.raises(ParserException):
+            parse_rows(p, offset=5)
 
 
 def test_write_parse_roundtrip(tmp_path):
@@ -178,6 +236,7 @@ def test_rk_decode_goldens():
     assert _decode_rk((bits >> 32) & 0xFFFFFFFC) == 2.5
 
 
+@_needs_ref("test.xls")
 def test_xls_roundtrip_against_xlsx_semantics(tmp_path):
     # the two readers share sheet_to_documents; spot-check the BIFF cell
     # decode path against the reference fixture re-encoded as xlsx values
@@ -237,25 +296,42 @@ def test_read_workbooks_distributed(spark, tmp_path):
     assert {d["k"] for d in docs} == {f"doc{i}_{j}" for i in range(3) for j in range(4)}
 
 
-def test_xls_corrupt_bytes_raise_parser_exception():
+def test_xls_corrupt_bytes_raise_parser_exception(tmp_path):
     """Arbitrary corrupt/truncated xls byte streams must surface as the
     documented ParserException (failParseInvalid contract), never raw
-    struct.error/IndexError (ADVICE r2)."""
+    struct.error/IndexError (ADVICE r2). The blobs are cut from a BIFF8
+    compound file write_xls writes, and from the reference's test.xls
+    wherever that checkout exists."""
+    from excelastic_spark.sources.biff import write_xls
     from excelastic_spark.sources.spreadsheet import parse_workbook_bytes
 
-    with open(f"{REF}/test.xls", "rb") as f:
-        real = f.read()
-    corrupt = [
-        b"",
-        b"\x00" * 64,
-        b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 40,  # header cut
-        real[: len(real) // 2],  # truncated mid-stream
-        real[:512] + bytes(256) * 4,  # valid header, garbage sectors
-        bytes(range(256)) * 8,
+    # the shape test_xls_reference_fixture documents for test.xls
+    p = tmp_path / "real.xls"
+    write_xls(
+        str(p),
+        [f"Column {j}" for j in range(1, 4)],
+        [[f"cell {i}.{j}" for j in range(1, 4)] for i in (6, 7)],
+        offset=5,
+    )
+    reals = [p.read_bytes()]
+    assert parse_workbook_bytes(reals[0], ".xls", offset=5)[1] == [
+        {f"Column {j}": f"cell {i}.{j}" for j in range(1, 4)} for i in (6, 7)
     ]
-    for blob in corrupt:
-        with pytest.raises(ParserException):
-            parse_workbook_bytes(blob, ".xls", offset=5)
+    if os.path.exists(f"{REF}/test.xls"):
+        with open(f"{REF}/test.xls", "rb") as f:
+            reals.append(f.read())
+    for real in reals:
+        corrupt = [
+            b"",
+            b"\x00" * 64,
+            b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 40,  # header cut
+            real[: len(real) // 2],  # truncated mid-stream
+            real[:512] + bytes(256) * 4,  # valid header, garbage sectors
+            bytes(range(256)) * 8,
+        ]
+        for blob in corrupt:
+            with pytest.raises(ParserException):
+                parse_workbook_bytes(blob, ".xls", offset=5)
 
 
 def test_read_typed_rejects_multi_file_scan(spark, tmp_path):
