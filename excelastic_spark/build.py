@@ -5,7 +5,9 @@ calling thread. Each stage writes one table and publishes it in ONE
 manifest swap together with its lineage entry, which holds the input
 fingerprint and the values observed in the write; a rerun over the same
 input skips every stage whose entry and table are committed (the north
-rule's checkpoint/resume requirement, ``IndexBuilder._stage``):
+rule's checkpoint/resume requirement, ``IndexBuilder._stage``). The first
+five are :func:`write_segment`, the one chain that the append and the
+shard build run too, with their own stage callable:
 
   validate  fail-fast dry-run fused with the lineage fingerprint — ONE scan
             (analog of the reference's initialize() pre-parse,
@@ -18,10 +20,6 @@ rule's checkpoint/resume requirement, ``IndexBuilder._stage``):
             each doc's tokens with the tokenizer's own kernel, so no
             shuffle and no join with the triples
   terms     df/cf per term + salting plan
-  stats     the one-row collection stats, assembled on the driver from the
-            ingest, triples and terms lineage entries and written with
-            pyarrow: no Spark job. The same swap commits the ``totals``
-            entry (n_docs, total_tf, max_doc_id) that appends advance
   postings  salt -> Spark groups the triples by (term, salt)
             (collect_list, map-side partial step) -> one stateless
             vectorized Arrow pass per batch of whole groups (in-group
@@ -33,6 +31,10 @@ rule's checkpoint/resume requirement, ``IndexBuilder._stage``):
             spark.sql.execution.arrow.maxBytesPerBatch bytes; a group
             holds at most salt_threshold postings (about salt_target once
             a hot term is salted)
+  stats     the one-row collection stats, assembled on the driver from the
+            ingest, triples and terms lineage entries and written with
+            pyarrow: no Spark job. The same swap commits the ``totals``
+            entry (n_docs, total_tf, max_doc_id) that appends advance
 
 Skew handling: terms with df > cfg.salt_threshold are split into
 ceil(df/salt_target) salts by pmod(xxhash64(doc_id), S); ONLY the hot subset
@@ -129,7 +131,7 @@ def by_bucket(df: DataFrame) -> DataFrame:
 class Validation(NamedTuple):
     fingerprint: str
     n: int
-    bucket_counts: dict[int, int]  # id bucket -> rows, for assign_doc_ids
+    bucket_counts: dict[int, int]  # id bucket -> rows, for ingest_corpus
     min_doc_id: int | None  # pre_ingested input only
 
 
@@ -315,14 +317,21 @@ def plan_salts(term_counts: DataFrame, cfg: EngineConfig) -> DataFrame:
     ).withColumn("bucket", bucket_expr(F.col("term"), cfg.n_buckets))
 
 
-def term_stats(triples: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """(term, df, cf, n_salts, bucket) from a triples set."""
-    return plan_salts(
-        triples.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-        ),
-        cfg,
+def term_stats(
+    triples: DataFrame, cfg: EngineConfig, base: DataFrame | None = None
+) -> DataFrame:
+    """(term, df, cf, n_salts, bucket) from a triples set, plus the df/cf
+    of ``base`` (an index's existing terms rows, vocab-sized) when given:
+    an append merges its segment's counts into them and re-plans the
+    salts, so a term that just went hot salts its new segment."""
+    counts = triples.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
     )
+    if base is not None:
+        counts = base.select("term", "df", "cf").unionByName(counts).groupBy(
+            "term"
+        ).agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    return plan_salts(counts, cfg)
 
 
 def docs_table(ingested: DataFrame) -> DataFrame:
@@ -374,11 +383,95 @@ def stage_observed(
 ) -> tuple[str, dict[str, Any]]:
     """Stage a table while collecting metrics IN the write job
     (Observation API) — no separate count/agg jobs. (staged path, the
-    observed values)."""
+    observed values, a null aggregate of no rows as 0)."""
     obs = Observation(f"obs_{table}")
     observed = df.observe(obs, *[v.alias(k) for k, v in aggs.items()])
     path = store.stage_table(observed, table, partition_by=partition_by)
-    return path, dict(obs.get)
+    return path, {k: v or 0 for k, v in obs.get.items()}
+
+
+def write_segment(
+    stage, read, make_ingested, cfg: EngineConfig,
+    base_terms: DataFrame | None = None, terms_table: str = "terms",
+) -> dict[str, dict[str, Any]]:
+    """The one chain that writes an index's tables: ingested -> triples
+    -> docs -> terms -> postings. The build, the append and the shard
+    build differ only in what they pass: ``stage(table, make, observed,
+    partition_by)`` writes ``make()`` with the ``observed`` aggregates
+    collected in its write job and returns their values; ``read(table)``
+    reads a written table back, so each stage scans parquet, not the
+    previous stage's lineage. ``make_ingested()`` gives the rows with
+    doc_id and sha256; ``base_terms`` are existing terms rows to merge the
+    counts into (:func:`term_stats`). Returns the observed values by
+    table."""
+    count = F.count(F.lit(1))
+    out = {"ingested": stage(
+        "ingested", make_ingested,
+        {"n_docs": count,
+         "max_doc_id": F.coalesce(F.max("doc_id"), F.lit(-1))}, None,
+    )}
+    ingested = read("ingested")
+    out["triples"] = stage(
+        "triples", lambda: tokenize_triples(ingested),
+        {"n_triples": count, "total_tf": F.sum("tf")}, None,
+    )
+    triples = read("triples")
+    out["docs"] = stage(
+        "docs", lambda: docs_table(ingested), {"n_docs": count}, None
+    )
+    # one file per bucket dir instead of tasks x buckets tiny files
+    out["terms"] = stage(
+        terms_table, lambda: by_bucket(term_stats(triples, cfg, base_terms)),
+        {"n_terms": count}, ["bucket"],
+    )
+    terms = read(terms_table)
+    out["postings"] = stage(
+        "postings", lambda: encode_postings(triples, terms, cfg),
+        {"postings": F.sum("n"), "rows": count,
+         "bytes_compressed": F.sum(
+             F.length("doc_ids") + F.length("tfs") + F.length("doclens")
+         )},
+        ["bucket"],
+    )
+    return out
+
+
+def stage_segment(
+    spark: SparkSession, store: IndexStore, make_ingested, cfg: EngineConfig,
+    **kw: Any,
+) -> tuple[list[tuple[str, str, str]], dict[str, dict[str, Any]]]:
+    """:func:`write_segment` with every table staged, invisible to readers
+    until the caller publishes the returned ``writes`` in ONE
+    ``commit_snapshot``: the terms table as an overwrite, every other table
+    as an appended segment. (writes, the observed values by table)."""
+    writes: list[tuple[str, str, str]] = []
+    paths: dict[str, str] = {}
+
+    def stage(table, make, observed, partition_by):
+        paths[table], got = stage_observed(
+            store, make(), table, observed, partition_by
+        )
+        mode = "overwrite" if table == "terms" else "append"
+        writes.append((table, paths[table], mode))
+        return got
+
+    seg = write_segment(
+        stage, lambda table: store.read_staged(spark, paths[table]),
+        make_ingested, cfg, **kw,
+    )
+    return writes, seg
+
+
+# table -> (lineage entry, metrics record and progress event, progress
+# percent, the observed value reported per second)
+_BUILD_STAGES = {
+    "ingested": ("ingest", "ingest", 10.0, "n_docs"),
+    "triples": ("triples", "tokenize", 30.0, "n_triples"),
+    "docs": ("docs", "docs", 45.0, "n_docs"),
+    "terms": ("terms", "terms", 60.0, "n_terms"),
+    "postings": ("postings", "postings", 75.0, "postings"),
+    "stats": ("stats", "stats", 95.0, None),
+}
 
 
 class IndexBuilder:
@@ -404,30 +497,25 @@ class IndexBuilder:
                 pass  # a broken progress listener must never fail a build
 
     def _stage(
-        self, fp: str, metrics: dict[str, Any], name: str, make,
-        observed: dict[str, Any], *, pct: float, table: str | None = None,
-        metric: str | None = None, rate: str | None = None,
-        partition_by: list[str] | None = None, also: tuple[str, ...] = (),
+        self, fp: str, metrics: dict[str, Any], table: str, make,
+        observed: dict[str, Any], partition_by: list[str] | None = None,
+        also: tuple[str, ...] = (),
     ) -> dict[str, Any]:
-        """Run one resumable stage and return its lineage entry ``name``.
-
-        The stage is skipped when that entry carries ``fp`` and ``table``
-        (``name`` by default) is committed. Otherwise ``make()`` gives the
-        table: a DataFrame is written with ``observed`` (column
-        expressions) aggregated in its write job (:func:`stage_observed`);
-        a driver-side ``pa.Table`` is written as is, ``observed`` holding
-        its values. One manifest swap publishes the table with the
-        observed values as the entry ``name`` (and each of ``also``). The
-        metrics record ``metric`` (``name`` by default, also the progress
-        event sent at ``pct``) holds the observed values, ``sec`` and, when
-        ``rate`` names an observed value, its rate per second."""
+        """Run one resumable stage writing ``table`` and return its lineage
+        entry, named as in ``_BUILD_STAGES``. The stage is skipped when
+        that entry carries ``fp`` and ``table`` is committed. Otherwise
+        ``make()`` gives the table: a DataFrame is written with
+        ``observed`` aggregated in its write job (:func:`stage_observed`),
+        a driver-side ``pa.Table`` as is, ``observed`` holding its values.
+        One manifest swap publishes the table with the observed values as
+        the lineage entry (and each of ``also``); the metrics record adds
+        ``sec`` and a rate per second."""
         store = self.store
-        table = table or name
+        name, metric, pct, rate = _BUILD_STAGES[table]
         snap = store.snapshot()
         entry = snap.stages.get(name)
         if entry and entry.get("fingerprint") == fp and table in snap.tables:
             return entry
-        metric = metric or name
         self._emit(metric, pct)
         t0 = time.time()
         df = make()
@@ -435,13 +523,13 @@ class IndexBuilder:
             path, got = store.stage_table(df, table), observed
         else:
             path, got = stage_observed(store, df, table, observed, partition_by)
-        entry = {"fingerprint": fp, **{k: v or 0 for k, v in got.items()}}
+        entry = {"fingerprint": fp, **got}
         store.commit_snapshot(
             [(table, path, "overwrite")],
             stages=dict.fromkeys((name, *also), entry),
         )
         dt = time.time() - t0
-        rec = {k: v for k, v in entry.items() if k != "fingerprint"}
+        rec = dict(got)
         if rate is not None:
             rec[f"{rate.removeprefix('n_')}_per_sec"] = round(
                 rec[rate] / max(dt, 1e-9), 1
@@ -482,53 +570,22 @@ class IndexBuilder:
         fp = f"{v.fingerprint},{cfg.layout_key()}"
         store.save_config(cfg.layout_dict())  # append/merge/query default to it
         metrics: dict[str, Any] = {"fingerprint": fp}
-        count = F.count(F.lit(1))
-
-        ing = self._stage(
-            fp, metrics, "ingest",
+        seg = write_segment(
+            lambda *a: self._stage(fp, metrics, *a),
+            lambda table: store.read_table(spark, table),
             lambda: corpus if pre_ingested else ingest_corpus(
                 corpus, bucket_counts=v.bucket_counts
             ),
-            {"n_docs": count,
-             "max_doc_id": F.coalesce(F.max("doc_id"), F.lit(-1))},
-            table="ingested", pct=10.0, rate="n_docs",
+            cfg,
         )
-        ingested = store.read_table(spark, "ingested")
-        tri = self._stage(
-            fp, metrics, "triples", lambda: tokenize_triples(ingested),
-            {"n_triples": count, "total_tf": F.sum("tf")},
-            metric="tokenize", pct=30.0, rate="n_triples",
-        )
-        triples = store.read_table(spark, "triples")
-        self._stage(
-            fp, metrics, "docs", lambda: docs_table(ingested),
-            {"n_docs": count}, pct=45.0, rate="n_docs",
-        )
-        # one file per bucket dir instead of tasks x buckets tiny files
-        ts = self._stage(
-            fp, metrics, "terms", lambda: by_bucket(term_stats(triples, cfg)),
-            {"n_terms": count}, pct=60.0, rate="n_terms",
-            partition_by=["bucket"],
-        )
-        stats, avgdl = stats_table(
-            cfg, ing["n_docs"], tri["total_tf"], ts["n_terms"]
-        )
+        ing, tri = seg["ingested"], seg["triples"]
+        n_terms = seg["terms"]["n_terms"]
+        stats, avgdl = stats_table(cfg, ing["n_docs"], tri["total_tf"], n_terms)
         self._stage(
             fp, metrics, "stats", lambda: stats,
-            {"n_docs": ing["n_docs"], "avgdl": avgdl,
-             "n_terms": ts["n_terms"], "total_tf": tri["total_tf"],
-             "max_doc_id": ing["max_doc_id"]},
-            pct=70.0, also=("totals",),
-        )
-        terms = store.read_table(spark, "terms")
-        self._stage(
-            fp, metrics, "postings",
-            lambda: encode_postings(triples, terms, cfg),
-            {"postings": F.sum("n"), "rows": count,
-             "bytes_compressed": F.sum(
-                 F.length("doc_ids") + F.length("tfs") + F.length("doclens")
-             )},
-            pct=80.0, rate="postings", partition_by=["bucket"],
+            {"n_docs": ing["n_docs"], "avgdl": avgdl, "n_terms": n_terms,
+             "total_tf": tri["total_tf"], "max_doc_id": ing["max_doc_id"]},
+            also=("totals",),
         )
         self._emit("done", 100.0)
         return metrics

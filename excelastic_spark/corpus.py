@@ -9,7 +9,7 @@ BASELINE.json:input_hint: (repo, path, commit, lang, content).
 Ingest assigns a dense deterministic ``doc_id`` WITHOUT a single-partition
 window: data-derived hash buckets + per-bucket offsets + within-bucket
 row_number (scales to 10^12 rows; the offsets table is one tiny collect of
-n_buckets rows; see assign_doc_ids for why the buckets must be data-derived
+n_buckets rows; see id_bucket_expr for why the buckets must be data-derived
 and not partition ids), and stamps per-row ``sha256(content)`` for the
 ingest invariant. The fail-fast validation before any table write — the
 analog of the reference's ``initialize()`` dry-run parse
@@ -132,56 +132,35 @@ def id_bucket_expr(partitions: int = ID_BUCKETS):
     )
 
 
-def assign_doc_ids(
-    corpus: DataFrame,
-    partitions: int = ID_BUCKETS,
-    bucket_counts: dict[int, int] | None = None,
-) -> DataFrame:
-    """Dense deterministic int64 doc_id, computed scalably in two passes:
-
-    1. bucket = pmod(xxhash64(repo, path, commit), B) (id_bucket_expr);
-    2. per-bucket counts (B tiny rows to the driver) -> cumulative offsets —
-       callers that already ran a full-scan aggregation (the validation
-       dry-run) pass the counts in so this costs no extra scan;
-    3. doc_id = offset[bucket] + row_number() within bucket ordered by key.
-
-    Dense 0..n-1, globally ordered by (bucket, repo, path, commit). No
-    single-partition global window, so this holds at 10^12 rows; the only
-    shuffles are one hash aggregate and one window shuffle on the uniform
-    bucket key.
-    """
-    with_b = corpus.withColumn("_bucket", id_bucket_expr(partitions))
-    if bucket_counts is None:
-        rows = with_b.groupBy("_bucket").count().collect()
-        bucket_counts = {row["_bucket"]: row["count"] for row in rows}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for b in sorted(bucket_counts):
-        offsets[b] = acc
-        acc += bucket_counts[b]
-    offmap = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-    w = Window.partitionBy("_bucket").orderBy("repo", "path", "commit")
-    return with_b.withColumn(
-        "doc_id",
-        (F.row_number().over(w) - 1 + offmap[F.col("_bucket")]).cast(LongType()),
-    ).drop("_bucket")
-
-
 def ingest_corpus(
     corpus: DataFrame,
     id_partitions: int = ID_BUCKETS,
     bucket_counts: dict[int, int] | None = None,
+    first_id: int = 0,
 ) -> DataFrame:
-    """Assign doc_id + stamp sha256(content) (the per-row invariant from
-    BASELINE.json:input_hint). Returns docs DataFrame (doc_id, repo, path,
-    commit, lang, content, sha256). Validation is the caller's fused
-    validate+fingerprint pass (build.validate_and_fingerprint), which also
-    supplies ``bucket_counts`` so id assignment re-uses that scan's
-    per-bucket counts."""
-    with_ids = assign_doc_ids(
-        corpus, partitions=id_partitions, bucket_counts=bucket_counts
-    )
-    return with_ids.withColumn("sha256", F.sha2(F.col("content"), 256))
+    """Assign a dense deterministic int64 doc_id and stamp sha256(content)
+    (the per-row invariant from BASELINE.json:input_hint).
+
+    doc_id = first_id + offset[bucket] + row_number() within the bucket
+    ordered by key (id_bucket_expr; offsets are cumulative bucket counts,
+    which the caller's validation pass supplies): first_id..first_id+n-1,
+    with no single-partition global window, so this holds at 10^12 rows.
+    The offset map has an entry for every bucket, so an empty corpus does
+    not build an empty map (whose VOID key type Spark rejects)."""
+    with_b = corpus.withColumn("_bucket", id_bucket_expr(id_partitions))
+    if bucket_counts is None:
+        rows = with_b.groupBy("_bucket").count().collect()
+        bucket_counts = {row["_bucket"]: row["count"] for row in rows}
+    offsets, acc = [], first_id
+    for b in range(id_partitions):
+        offsets += [F.lit(b), F.lit(acc).cast(LongType())]
+        acc += bucket_counts.get(b, 0)
+    w = Window.partitionBy("_bucket").orderBy("repo", "path", "commit")
+    return with_b.withColumn(
+        "doc_id",
+        (F.row_number().over(w) - 1 + F.create_map(*offsets)[F.col("_bucket")])
+        .cast(LongType()),
+    ).drop("_bucket").withColumn("sha256", F.sha2(F.col("content"), 256))
 
 
 def documents_as_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

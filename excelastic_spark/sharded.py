@@ -17,10 +17,12 @@ Mechanics
   ``{b : b % n_shards == s}``; buckets are doc-disjoint, so shards are too.
 * ``build_shard``: an INDEPENDENT process (own SparkSession/JVM — on a real
   cluster, its own executor group via ``spark-submit --py-files``) filters
-  its buckets, assigns doc_ids from the plan offsets, and runs the same
-  ingest -> tokenize -> terms -> postings kernels as the single-pass
-  builder, appending each table as a SEGMENT to the shared store (manifest
-  commits are cross-process safe via the catalog file lock).
+  its buckets and runs the single-pass builder's own chain
+  (build.write_segment: ingested -> triples -> docs -> terms -> postings)
+  with doc_ids from the plan offsets. Every table is staged as a SEGMENT
+  (the terms as a ``shard_terms`` segment) and all of them publish to the
+  shared store in one commit (manifest commits are cross-process safe via
+  the catalog file lock).
 
   doc_id determinism: doc_id = bucket_offset + rank-within-bucket, and every
   bucket lives in exactly one shard, so the sharded build assigns the SAME
@@ -53,18 +55,15 @@ from pyspark.sql import functions as F
 
 from excelastic_spark.build import (
     by_bucket,
-    docs_table,
-    encode_postings,
     plan_salts,
     stage_observed,
+    stage_segment,
     stats_table,
-    term_stats,
     validate_and_fingerprint,
 )
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
 from excelastic_spark.corpus import ID_BUCKETS, id_bucket_expr, ingest_corpus
-from excelastic_spark.tokenizer import tokenize_triples
 
 
 def plan_shards(
@@ -152,51 +151,27 @@ def build_shard(
             f"{drifted} (counts {shard_counts} vs planned {planned_counts})"
         )
     n_docs_shard = sum(shard_counts.values())
-    # the plain build's doc-id assignment over the plan's counts of EVERY
-    # bucket, so the offsets are the global ones (bucket ⊂ shard, so the
-    # shard-local within-bucket rank is the global rank)
-    ingested = ingest_corpus(
-        mine.drop("_bucket"), id_partitions=int(plan["id_buckets"]),
-        bucket_counts=counts,
-    )
-    writes: list[tuple[str, str, str]] = []
-    ing_path = store.stage_table(ingested, "ingested")
-    writes.append(("ingested", ing_path, "append"))
-    ingested = store.read_staged(spark, ing_path)
-
-    tri_path, agg = stage_observed(
-        store, tokenize_triples(ingested), "triples",
-        {"n_triples": F.count(F.lit(1)), "total_tf": F.sum("tf")},
-    )
-    writes.append(("triples", tri_path, "append"))
-    triples = store.read_staged(spark, tri_path)
-
-    # shard-local docs segment (map-only, as the plain build)
-    writes.append((
-        "docs", store.stage_table(docs_table(ingested), "docs"), "append",
-    ))
-
     # shard-local term stats; salting threshold scaled by shard count
     # because a term's postings split ~uniformly across doc-hash shards
     shard_cfg = cfg.with_overrides(
         salt_threshold=max(1, cfg.salt_threshold // n_shards),
         salt_target=max(1, cfg.salt_target // n_shards),
     )
-    shard_terms = by_bucket(term_stats(triples, shard_cfg))
-    terms_path = store.stage_table(
-        shard_terms, "shard_terms", partition_by=["bucket"]
+    # the plain build's chain and doc-id assignment over the plan's counts
+    # of EVERY bucket, so the offsets are the global ones (bucket ⊂ shard,
+    # so the shard-local within-bucket rank is the global rank); every
+    # table is a segment, the terms one a shard_terms segment
+    writes, seg = stage_segment(
+        spark, store,
+        lambda: ingest_corpus(
+            mine.drop("_bucket"), id_partitions=int(plan["id_buckets"]),
+            bucket_counts=counts,
+        ),
+        shard_cfg, terms_table="shard_terms",
     )
-    writes.append(("shard_terms", terms_path, "append"))
-    shard_terms = store.read_staged(spark, terms_path)
+    tri = seg["triples"]
 
-    postings = encode_postings(triples, shard_terms, shard_cfg)
-    writes.append((
-        "postings",
-        store.stage_table(postings, "postings", partition_by=["bucket"]),
-        "append",
-    ))
-
-    # ---- single atomic publish: all four segments + the shard's stage
+    # ---- single atomic publish: all five segments + the shard's stage
     # entry become visible together or not at all (a crashed attempt is
     # invisible, so retry can't double-append)
     store.commit_snapshot(
@@ -204,15 +179,15 @@ def build_shard(
         stages={
             f"shard_{shard}": {
                 "fingerprint": plan["fingerprint"],
-                "n_docs": int(n_docs_shard),
-                "total_tf": int(agg["total_tf"] or 0),
+                "n_docs": n_docs_shard,
+                "total_tf": tri["total_tf"],
             }
         },
     )
     dt = time.time() - t0
     return store.log_metrics(
         f"shard_{shard}", n_docs=int(n_docs_shard),
-        n_triples=int(agg["n_triples"]), total_tf=int(agg["total_tf"] or 0),
+        n_triples=tri["n_triples"], total_tf=tri["total_tf"],
         sec=round(dt, 3),
         docs_per_sec=round(n_docs_shard / max(dt, 1e-9), 1),
     )

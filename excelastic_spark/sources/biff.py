@@ -55,6 +55,12 @@ def _read_chain(data: bytes, fat: list[int], start: int,
     return b"".join(out)
 
 
+def _visit(seen: set[int], sect: int) -> None:
+    if sect in seen:
+        raise WorkbookError(f"CFB sector chain revisits sector {sect}")
+    seen.add(sect)
+
+
 def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     """Extract the first stream whose name matches ``names`` from an OLE2
     compound file ([MS-CFB] §2).
@@ -62,11 +68,18 @@ def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     A stream whose sector chain yields fewer bytes than the directory
     entry's Stream Size ([MS-CFB] §2.6.1) — a truncated file — is a
     :class:`WorkbookError`; a short final sector that still covers the
-    declared size is accepted."""
+    declared size is accepted. So are sector shifts [MS-CFB] §2.2 does not
+    allow, DIFAT/miniFAT counts past the file's sectors and a DIFAT or
+    miniFAT chain that revisits a sector: each loop runs at most once per
+    sector the file holds."""
     if data[:8] != _CFB_MAGIC:
         raise WorkbookError("not an OLE2 compound file")
     (sector_shift,) = struct.unpack_from("<H", data, 30)
     (mini_shift,) = struct.unpack_from("<H", data, 32)
+    if sector_shift not in (9, 12) or mini_shift != 6:  # [MS-CFB] §2.2
+        raise WorkbookError(
+            f"bad CFB sector shifts {sector_shift}/{mini_shift}"
+        )
     sector_size = 1 << sector_shift
     mini_size = 1 << mini_shift
     (n_fat,) = struct.unpack_from("<I", data, 44)
@@ -76,12 +89,21 @@ def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     (n_minifat,) = struct.unpack_from("<I", data, 64)
     (difat_start,) = struct.unpack_from("<I", data, 68)
     (n_difat,) = struct.unpack_from("<I", data, 72)
+    # a chain of more sectors than the file holds must revisit one
+    n_sectors = len(data) // sector_size
+    if max(n_difat, n_minifat) > n_sectors:
+        raise WorkbookError(
+            f"CFB header counts {n_difat} DIFAT / {n_minifat} miniFAT "
+            f"sectors exceed the file's {n_sectors}"
+        )
 
     # DIFAT: 109 entries in header + chained DIFAT sectors
     difat = list(struct.unpack_from("<109I", data, 76))
     sect = difat_start
     per = sector_size // 4 - 1
+    seen: set[int] = set()
     for _ in range(n_difat):
+        _visit(seen, sect)
         off = _sect_off(sect, sector_size)
         vals = struct.unpack_from(f"<{per + 1}I", data, off)
         difat.extend(vals[:-1])
@@ -125,7 +147,9 @@ def cfb_stream(data: bytes, names: tuple[str, ...]) -> bytes:
         ministream = _read_chain(data, fat, root[2], sector_size, sector_size)
         minifat: list[int] = []
         sect = minifat_start
+        seen = set()
         for _ in range(n_minifat):
+            _visit(seen, sect)
             off = _sect_off(sect, sector_size)
             minifat.extend(
                 struct.unpack_from(f"<{sector_size // 4}I", data, off)

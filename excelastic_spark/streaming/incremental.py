@@ -10,11 +10,13 @@ as a Spark batch job (SURVEY.md §2B B3/B11).
 Cost model (the 100 TB requirement):
 
 * ``append_increment`` is **O(increment + vocabulary)**, never O(index):
-  the increment is tokenized/encoded through the same kernels as the full
-  build, its term stats are merged into the existing terms table
-  (vocab-sized, tiny next to the corpus), and collection stats advance from
-  running totals kept in the manifest — the triples/docs/postings tables
-  are appended to but NEVER re-read.
+  it runs the full build's own chain (build.write_segment: ingested ->
+  triples -> docs -> terms -> postings) with every table staged for one
+  commit, its doc_ids starting past the running totals' max_doc_id. The
+  increment's term counts merge into the existing terms table
+  (vocab-sized, tiny next to the corpus), and collection stats advance
+  from running totals kept in the manifest — the triples/docs/postings
+  tables are appended to but NEVER re-read.
 * At bench scale an append's cost is mostly Spark's fixed cost per job,
   so it launches only jobs that move data: one validation pass (which
   also yields the id-bucket counts and, pre_ingested, min(doc_id)), then
@@ -56,23 +58,18 @@ from typing import Any
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from excelastic_spark import codec
 from excelastic_spark.build import (
-    by_bucket,
-    docs_table,
     encode_postings,
-    plan_salts,
-    stage_observed,
+    stage_segment,
     stats_table,
     validate_and_fingerprint,
 )
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
-from excelastic_spark.corpus import CORPUS_SCHEMA, assign_doc_ids
-from excelastic_spark.tokenizer import TRIPLES_SCHEMA, tokenize_triples
+from excelastic_spark.corpus import CORPUS_SCHEMA, ingest_corpus
+from excelastic_spark.tokenizer import TRIPLES_SCHEMA
 
 
 def _decode_rows_to_triples(
@@ -187,84 +184,38 @@ class IncrementalIndexer:
         )
         tot = self._totals()
         next_id = tot["max_doc_id"] + 1
-        if pre_ingested:
-            ingested = increment
-            # disjointness guard BEFORE any segment write (min(doc_id) came
-            # with the validation pass): overlapping doc_ids would silently
-            # corrupt the doc-disjoint segment invariant append/merge/query
-            # rely on
-            if v.min_doc_id is not None and v.min_doc_id < next_id:
-                raise ValueError(
-                    f"pre_ingested increment doc_ids start at {v.min_doc_id} "
-                    f"but the index already contains ids up to {next_id - 1}"
-                )
-        else:
-            with_ids = assign_doc_ids(
-                increment, partitions=cfg.shuffle_partitions,
-                bucket_counts=v.bucket_counts,
+        # disjointness guard BEFORE any segment write (min(doc_id) came
+        # with the validation pass): overlapping doc_ids would silently
+        # corrupt the doc-disjoint segment invariant append/merge/query
+        # rely on
+        if pre_ingested and v.min_doc_id is not None and v.min_doc_id < next_id:
+            raise ValueError(
+                f"pre_ingested increment doc_ids start at {v.min_doc_id} "
+                f"but the index already contains ids up to {next_id - 1}"
             )
-            ingested = with_ids.withColumn(
-                "doc_id", (F.col("doc_id") + F.lit(next_id)).cast(LongType())
-            ).withColumn("sha256", F.sha2(F.col("content"), 256))
-        # every segment total is observed inside the write that stages it
-        # (the build's pattern), and every read-back of a staged dir uses
-        # the schema just written: no count, agg or inference jobs
-        writes: list[tuple[str, str, str]] = []
-        seg_path, seg_agg = stage_observed(
-            store, ingested, "ingested",
-            {"n": F.count(F.lit(1)), "max_id": F.max("doc_id")},
+        # the build's chain, every table staged for the one commit below;
+        # the terms merge the increment's counts into the EXISTING terms
+        # table (vocab-sized), never the triples
+        writes, seg = stage_segment(
+            spark, store,
+            lambda: increment if pre_ingested else ingest_corpus(
+                increment, id_partitions=cfg.shuffle_partitions,
+                bucket_counts=v.bucket_counts, first_id=next_id,
+            ),
+            cfg,
+            base_terms=(
+                store.read_table(spark, "terms")
+                if store.has_table("terms") else None
+            ),
         )
-        writes.append(("ingested", seg_path, "append"))
-        seg = store.read_staged(spark, seg_path)
-
-        tri_path, tri_agg = stage_observed(
-            store, tokenize_triples(seg), "triples", {"tf": F.sum("tf")}
-        )
-        writes.append(("triples", tri_path, "append"))
-        seg_triples = store.read_staged(spark, tri_path)
-
-        docs_path = store.stage_table(docs_table(seg), "docs")
-        writes.append(("docs", docs_path, "append"))
-        inc_docs = int(seg_agg["n"])
-        inc_tf = int(tri_agg["tf"] or 0)
-
-        # ---- terms: merge increment stats into the EXISTING terms table
-        # (vocab-sized — the sharded.finalize pattern), never the triples
-        inc_terms = seg_triples.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-        )
-        if store.has_table("terms"):
-            old = store.read_table(spark, "terms").select("term", "df", "cf")
-            merged_raw = old.unionByName(inc_terms).groupBy("term").agg(
-                F.sum("df").alias("df"), F.sum("cf").alias("cf")
-            )
-        else:
-            merged_raw = inc_terms
-        terms_path, terms_agg = stage_observed(
-            store,
-            by_bucket(plan_salts(merged_raw, cfg)),
-            "terms", {"n": F.count(F.lit(1))}, partition_by=["bucket"],
-        )
-        writes.append(("terms", terms_path, "overwrite"))
-        n_terms = int(terms_agg["n"])
+        inc_docs = seg["ingested"]["n_docs"]
+        inc_tf = seg["triples"]["total_tf"]
 
         # ---- stats from running totals (no index scan, no Spark job)
         n_docs = tot["n_docs"] + inc_docs
         total_tf = tot["total_tf"] + inc_tf
-        stats, _ = stats_table(cfg, n_docs, total_tf, n_terms)
+        stats, _ = stats_table(cfg, n_docs, total_tf, seg["terms"]["n_terms"])
         writes.append(("stats", store.stage_table(stats, "stats"), "overwrite"))
-
-        # ---- postings segment: same shared kernel; salting plan from the
-        # MERGED terms, read back from their staged dir rather than
-        # recomputed (a term that just went hot salts its new segment)
-        seg_postings = encode_postings(
-            seg_triples, store.read_staged(spark, terms_path), cfg
-        )
-        writes.append((
-            "postings",
-            store.stage_table(seg_postings, "postings", partition_by=["bucket"]),
-            "append",
-        ))
 
         # ---- single atomic publish: segments + terms + stats + totals
         # (+ layout config when this increment CREATES the index — e.g.
@@ -275,8 +226,8 @@ class IncrementalIndexer:
                 "fingerprint": "append",
                 "n_docs": n_docs,
                 "total_tf": total_tf,
-                "max_doc_id": (
-                    int(seg_agg["max_id"]) if inc_docs else tot["max_doc_id"]
+                "max_doc_id": max(
+                    tot["max_doc_id"], seg["ingested"]["max_doc_id"]
                 ),
             }
         }

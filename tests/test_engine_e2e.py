@@ -272,3 +272,20 @@ def test_rebuild_with_changed_layout_does_not_resume(spark, tmp_path):
     assert np.array_equal(
         before["score"].to_numpy(), after["score"].to_numpy()
     )
+
+
+def test_empty_corpus_builds(spark, tmp_path):
+    """An empty corpus builds an empty index: every stage commits, the
+    stats row counts no docs and every query answers with no rows."""
+    from excelastic_spark.corpus import CORPUS_SCHEMA
+
+    cfg = EngineConfig().tiny().with_overrides(shuffle_partitions=4)
+    store = IndexStore(str(tmp_path), "empty")
+    IndexBuilder(spark, store, cfg).build(
+        spark.createDataFrame([], CORPUS_SCHEMA)
+    )
+    assert store.snapshot().stats_row()["n_docs"] == 0
+    assert store.manifest()["stages"]["totals"]["max_doc_id"] == -1
+    qe = QueryEngine(spark, store, cfg)
+    for q in QUERY_SET[:4]:
+        assert len(qe.search(q["terms"], q["mode"], q["k"]).doc_ids) == 0

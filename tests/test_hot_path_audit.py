@@ -127,3 +127,36 @@ def test_every_engine_module_is_imported_by_non_test_code():
         if not any(name in got for p, got in imports.items() if p != mod):
             unused.append(name)
     assert unused == [], unused
+
+
+def test_one_chain_writes_every_index():
+    """The build, the append and the shard build write their tables
+    through one chain, ``build.write_segment``: outside the tests, no
+    other code calls ``tokenize_triples`` or ``docs_table``, so no second
+    hand-written ingested -> triples -> docs -> terms -> postings chain
+    can drift from it."""
+    chained = {"tokenize_triples", "docs_table"}
+    offenders = []
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = path.relative_to(ROOT)
+        if rel.parts[0].startswith(".") or "tests" in rel.parts:
+            continue
+        tree = ast.parse(path.read_text())
+        inside = set()
+        if rel == pathlib.Path("excelastic_spark/build.py"):
+            (chain,) = [
+                fn for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef)
+                and fn.name == "write_segment"
+            ]
+            inside = {id(n) for n in ast.walk(chain)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in inside:
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(
+                fn, "id", None
+            )
+            if name in chained:
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+    assert offenders == [], offenders

@@ -399,3 +399,32 @@ def test_concurrent_appends_serialize_without_id_collision(spark, tmp_path):
     tot = store.manifest()["stages"]["totals"]
     assert int(tot["n_docs"]) == total
     assert int(tot["max_doc_id"]) == total - 1
+
+
+def test_empty_append_changes_no_answer(spark, tmp_path):
+    """An empty increment appends empty segments: the running totals and
+    the stats row stay as they were, and every answer is bit-identical."""
+    from excelastic_spark.corpus import CORPUS_SCHEMA
+
+    store = IndexStore(str(tmp_path), "idx")
+    IndexBuilder(spark, store, CFG).build(
+        synthesize_corpus(spark, 80, partitions=2)
+    )
+
+    def state():
+        qe = QueryEngine(spark, store, CFG)
+        answers = []
+        for terms, mode, k in QS:
+            res = qe.search(terms, mode, k)
+            answers.append((list(res.doc_ids), res.scores.tolist()))
+        tot = store.manifest()["stages"]["totals"]
+        return ({k: tot[k] for k in ("n_docs", "total_tf", "max_doc_id")},
+                store.snapshot().stats_row(), answers)
+
+    before = state()
+    IncrementalIndexer(spark, store, CFG).append_increment(
+        spark.createDataFrame([], CORPUS_SCHEMA)
+    )
+    assert state() == before
+    assert before[0]["n_docs"] == 80
+    _assert_matches_oracle(spark, store)

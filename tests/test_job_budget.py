@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from excelastic_spark import sharded
 from excelastic_spark.build import IndexBuilder
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
@@ -35,6 +36,10 @@ QS = [
 # jobs per call, each counting the caller's one parquet read of its input
 BUDGET = {"build": 15, "append": 16, "merge": 4, "pin": 0}
 TASK_BUDGET = {"build": 20, "append": 25, "merge": 18}
+# the shard-parallel writer on the same 100-doc base, as 2 shards: jobs and
+# tasks per shard build (its input read included) and for the finalize
+SHARD_BUDGET = {"build_shard": 14, "finalize": 5}
+SHARD_TASK_BUDGET = {"build_shard": 19, "finalize": 13}
 # generated classes a repeat append compiles: its literal doc-id offset
 # differs from the previous append's, everything else is cached
 REPEAT_APPEND_COMPILES = 4
@@ -92,6 +97,20 @@ def test_write_job_budgets(spark, tmp_path, inputs):
     _, n, _ = count_jobs(spark, qe.pin)
     assert n == BUDGET["pin"], n
     assert qe.pin().n_docs == 160
+
+
+def test_shard_build_job_budgets(spark, tmp_path, inputs):
+    store = IndexStore(str(tmp_path), "shards")
+    sharded.plan_shards(spark.read.parquet(inputs["base"]), 2, store, CFG)
+    for shard in (0, 1):
+        _, n, t = count_jobs(spark, lambda: sharded.build_shard(
+            spark, store, spark.read.parquet(inputs["base"]), shard, CFG))
+        assert n <= SHARD_BUDGET["build_shard"], (shard, n)
+        assert t <= SHARD_TASK_BUDGET["build_shard"], (shard, t)
+    _, n, t = count_jobs(spark, lambda: sharded.finalize(spark, store, CFG))
+    assert n <= SHARD_BUDGET["finalize"], n
+    assert t <= SHARD_TASK_BUDGET["finalize"], t
+    assert QueryEngine(spark, store, CFG).pin().n_docs == 100
 
 
 def test_build_jobs_stay_in_callers_job_group(spark, tmp_path, inputs):

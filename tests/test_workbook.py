@@ -334,6 +334,54 @@ def test_xls_corrupt_bytes_raise_parser_exception(tmp_path):
                 parse_workbook_bytes(blob, ".xls", offset=5)
 
 
+def _patched_xls(tmp_path, patches=()) -> bytes:
+    """A one-sector-stream ``write_xls`` file with ``(offset, struct
+    format, value)`` patches applied."""
+    from excelastic_spark.sources.biff import write_xls
+
+    p = tmp_path / "w.xls"
+    write_xls(str(p), ["a"], [["x"]])
+    blob = bytearray(p.read_bytes())
+    for off, fmt, value in patches:
+        struct.pack_into(fmt, blob, off, value)
+    return bytes(blob)
+
+
+@pytest.mark.parametrize("chain", ["difat", "minifat"])
+@pytest.mark.parametrize("count", [2**32 - 1, None])
+def test_xls_sector_chains_are_bounded(tmp_path, chain, count):
+    """[MS-CFB] DIFAT and miniFAT chains run at most once per sector the
+    file holds: a header count past the file's sectors (up to 2**32-1),
+    or a count of exactly the file's sectors (None) over a chain whose
+    sector names itself, raises ParserException at once instead of
+    looping on the count."""
+    from excelastic_spark.sources.spreadsheet import parse_workbook_bytes
+
+    n_sectors = len(_patched_xls(tmp_path)) // 512
+    last = n_sectors - 2  # the stream's last sector (the header is -1)
+    start, n = {"difat": (68, 72), "minifat": (60, 64)}[chain]
+    blob = _patched_xls(tmp_path, [
+        (56, "<I", 2**32 - 1),  # mini-stream cutoff: the stream is mini
+        (512 + 4 * last, "<I", last),  # FAT entry: last -> last
+        ((last + 1) * 512 + 508, "<I", last),  # DIFAT next: last -> last
+        (start, "<I", last),
+        (n, "<I", n_sectors if count is None else count),
+    ])
+    with pytest.raises(ParserException, match="CFB"):
+        parse_workbook_bytes(blob, ".xls", offset=1)
+
+
+@pytest.mark.parametrize("off,shift", [(30, 10), (30, 16), (32, 7)])
+def test_xls_bad_sector_shift_raises(tmp_path, off, shift):
+    """Only sector shifts 9 and 12 and mini-sector shift 6 are valid
+    ([MS-CFB] §2.2)."""
+    from excelastic_spark.sources.spreadsheet import parse_workbook_bytes
+
+    blob = _patched_xls(tmp_path, [(off, "<H", shift)])
+    with pytest.raises(ParserException, match="sector shift"):
+        parse_workbook_bytes(blob, ".xls", offset=1)
+
+
 def test_read_typed_rejects_multi_file_scan(spark, tmp_path):
     """Line-number recovery is file-relative: a directory scan must be
     rejected loudly, not silently misnumbered (ADVICE r2)."""
