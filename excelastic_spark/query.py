@@ -14,8 +14,10 @@ Two execution paths:
   (``SnapshotState.fetch``); the fetched rows come back as one Arrow
   table and decode in three vectorized varint passes per query, read
   straight from the Arrow buffers (``decode_postings``). Salted
-  sub-lists are merged (they partition docs disjointly). Scoring: numpy
-  AND-intersection / block-max WAND. This is how a search head node
+  sub-lists are merged (they partition docs disjointly). Scoring is
+  vectorized numpy: a dense doc-id accumulator when the postings fill
+  the id space, else a sorted AND-intersection or OR-union; block-max
+  WAND runs only when forced. This is how a search head node
   serves low-latency queries off a 10^12-doc index: it reads only the
   query terms' postings, never the corpus.
 * ``search_distributed`` (cluster path): for analytics-style queries whose
@@ -66,19 +68,7 @@ from excelastic_spark.wand import (
 )
 from excelastic_spark.xxh import term_bucket
 
-# Cost model for the disjunctive path. Exhaustive scoring is one vectorized
-# numpy pass over all postings (~1e8 postings/sec); WAND's pivot loop is
-# ~1e5 pivots/sec in Python but can skip almost everything when a rare
-# high-weight term dominates (theta rises past the weak lists' bounds after
-# k hits, so pivoting jumps the long lists via searchsorted). WAND therefore
-# pays off ONLY on big + heterogeneous queries: a dominant term whose list
-# is small relative to the union. Homogeneous hot-term queries (every list
-# long, similar weights — no pruning possible) must stay vectorized: on a
-# 600k-doc corpus the pivot loop was ~100x slower than the numpy pass.
-WAND_MIN_POSTINGS = 2_000_000
-WAND_DOMINANT_FRACTION = 0.05
-
-# Dense-scatter scorer eligibility (the monster-df path; see lookup()):
+# Dense-scatter scorer eligibility (the monster-df path; see search()):
 # scoring via a doc_id-indexed accumulator costs O(span) zero-fill plus one
 # random scatter per posting and NO sorts, vs the sorted path's O(n log n)
 # salt-merge argsort + O(union log union) np.unique. Worth it when the
@@ -86,21 +76,6 @@ WAND_DOMINANT_FRACTION = 0.05
 # accumulator fits head-node memory.
 DENSE_MAX_SPAN = 64_000_000  # 512 MB float64 accumulator ceiling
 DENSE_MIN_FILL = 8  # use dense when total postings >= span/8
-
-
-def _wand_promising(
-    ns: list[int], ubs: list[float], k: int, total: int
-) -> bool:
-    if total < WAND_MIN_POSTINGS or len(ns) < 2:
-        return False
-    order = sorted(range(len(ns)), key=lambda i: -ubs[i])
-    top = order[0]
-    rest_ub = sum(ubs[i] for i in order[1:])
-    return (
-        ubs[top] > rest_ub
-        and ns[top] <= WAND_DOMINANT_FRACTION * total
-        and k <= ns[top]
-    )
 
 
 class TermRun(NamedTuple):
@@ -180,6 +155,13 @@ class _ParquetPart:
 def _check_mode(mode: str) -> None:
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
+
+
+def _check_algo(algo: str) -> None:
+    if algo not in ("auto", "dense", "exhaustive", "wand"):
+        raise ValueError(
+            f"algo must be 'auto', 'dense', 'exhaustive' or 'wand', got {algo!r}"
+        )
 
 
 RESULT_SCHEMA = StructType(
@@ -524,13 +506,16 @@ class QueryEngine:
     def search(
         self, terms: list[str], mode: str = "or", k: int = 10, algo: str = "auto"
     ) -> QueryResult:
-        """``algo``: 'auto' picks the scorer by the cost models above —
-        WAND for big heterogeneous disjunctions, the dense scatter for
-        stopword-grade terms that fill the doc-id space, the sorted
-        vectorized path otherwise; 'wand'/'exhaustive'/'dense' force a
-        path. All paths produce bit-identical results
+        """``algo``: 'auto' runs the dense scatter when the postings fill
+        the doc-id space and the sorted scorer otherwise (the galloping
+        intersection for AND, the exhaustive union for OR); 'dense' and
+        'exhaustive' force one of them, and 'wand' forces block-max WAND
+        for OR (AND takes the sorted intersection). 'auto' never picks WAND:
+        its Python pivot loop lost many-fold to the vectorized scorers on
+        most measured disjunctions. All paths produce bit-identical results
         (test_wand_equals_exhaustive, test_dense_equals_sorted)."""
         _check_mode(mode)
+        _check_algo(algo)
         t0 = time.time()
         st = self.pin()
         uniq = sorted(set(terms))
@@ -545,32 +530,25 @@ class QueryEngine:
             )
         total = sum(r.n for r in present)
         span = int(max(int(r.doc_ids.max()) for r in present)) + 1
-        dense_ok = (
-            span <= DENSE_MAX_SPAN
+        dense = algo == "dense" or (
+            algo == "auto"
+            and span <= DENSE_MAX_SPAN
             and total >= span // DENSE_MIN_FILL
             and len(present) <= 255  # uint8 match counter
         )
+        wstats = None
         if mode == "and":
-            if algo == "dense" or (algo != "exhaustive" and dense_ok):
+            if dense:
                 ids, scores = _dense_topk(present, k, conjunctive=True)
             else:
                 ids, scores = _and_score(
                     [st.sorted_postings(r) for r in present], k
                 )
-            return QueryResult(
-                ids, scores, lookup_sec=t1 - t0, score_sec=time.time() - t1
-            )
-        ubs = [r.idf * float(r.impacts.max()) for r in present]
-        use_wand = algo == "wand" or (
-            algo == "auto"
-            and _wand_promising([r.n for r in present], ubs, k, total)
-        )
-        wstats = None
-        if use_wand:
+        elif algo == "wand":
             ids, scores, wstats = wand_topk(
                 [st.sorted_postings(r) for r in present], k
             )
-        elif algo == "dense" or (algo == "auto" and dense_ok):
+        elif dense:
             ids, scores = _dense_topk(present, k, conjunctive=False)
         else:
             ids, scores = exhaustive_or(

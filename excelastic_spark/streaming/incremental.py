@@ -131,6 +131,8 @@ class IncrementalIndexer:
         only the new segment parquet (written then read back, so downstream
         stages scan parquet not the increment's lineage) and the terms
         table are ever scanned — never the existing triples/docs/postings.
+        An empty increment stops after its validation pass and commits
+        nothing.
 
         ``pre_ingested``: increment already carries doc_id + sha256; its
         doc_ids must all exceed the index's current max (doc-disjoint
@@ -182,6 +184,11 @@ class IncrementalIndexer:
         v = validate_and_fingerprint(
             increment, pre_ingested, id_buckets=cfg.shuffle_partitions
         )
+        if v.n == 0:  # an empty segment would still grow the manifest
+            return store.log_metrics(
+                "append", n_new_docs=0, new_tokens=0,
+                sec=round(time.time() - t0, 3),
+            )
         tot = self._totals()
         next_id = tot["max_doc_id"] + 1
         # disjointness guard BEFORE any segment write (min(doc_id) came
@@ -299,8 +306,6 @@ class IncrementalIndexer:
         ckpt = os.path.abspath(checkpoint_dir)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             if self.stream_batch_applied(ckpt, batch_id):
                 return  # replay of a batch whose append already committed
             self.append_increment(batch_df, stream_batch=(ckpt, int(batch_id)))

@@ -75,9 +75,11 @@ def wand_topk(
     def cur_doc(i: int) -> int:
         return int(lists[i].doc_ids[cursors[i]])
 
+    # np.uint64 targets: a Python int promotes the uint64 list to float64,
+    # a copy per call that misplaces cursors on doc_ids >= 2**53
     def advance_to(i: int, target: int) -> None:
         p = lists[i]
-        newpos = int(np.searchsorted(p.doc_ids, target, side="left"))
+        newpos = int(np.searchsorted(p.doc_ids, np.uint64(target)))
         if newpos > cursors[i]:
             stats.docs_skipped += newpos - cursors[i]
             cursors[i] = newpos
@@ -116,7 +118,7 @@ def wand_topk(
         boundary = None  # min over prefix of current-block end + 1
         for i in prefix:
             p = lists[i]
-            b = int(np.searchsorted(p.block_last, pivot_doc, side="left"))
+            b = int(np.searchsorted(p.block_last, np.uint64(pivot_doc)))
             if b < p.block_ub.size:
                 block_ub_sum += float(p.block_ub[b])
                 end = int(p.block_last[b]) + 1

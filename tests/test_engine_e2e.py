@@ -207,7 +207,8 @@ def test_distributed_path_parity(built):
 
 def test_distributed_empty_terms_and_bad_mode(built):
     """No terms gives an empty (doc_id, score) frame, as search([]) gives
-    an empty result; an unknown mode is refused as search refuses it."""
+    an empty result; an unknown mode is refused as search refuses it, and
+    search refuses an unknown scorer."""
     from excelastic_spark.query import RESULT_SCHEMA
 
     _, _, qe, _, _ = built
@@ -217,6 +218,8 @@ def test_distributed_empty_terms_and_bad_mode(built):
         assert df.collect() == []
     with pytest.raises(ValueError, match="mode"):
         qe.search_distributed(["import"], "xor", 10)
+    with pytest.raises(ValueError, match="algo"):
+        qe.search(["import"], "or", 10, algo="wnd")
 
 
 def test_wand_prunes_on_real_corpus(built):
@@ -224,6 +227,44 @@ def test_wand_prunes_on_real_corpus(built):
     res = qe.search(["import", "return", "def"], "or", 5, algo="wand")
     assert res.wand is not None
     assert res.wand.docs_skipped + res.wand.blocks_skipped > 0
+
+
+def test_auto_never_runs_wand(built, monkeypatch):
+    """A disjunction shaped for pruning (a 2M-posting list, a 50k list and
+    a rare high-weight term over 5M doc ids) still runs a vectorized
+    scorer under algo='auto', with the exhaustive scorer's answer bit for
+    bit; block-max WAND runs only when forced."""
+    from excelastic_spark import codec, query
+    from excelastic_spark.query import RawPostings, SnapshotState
+    from excelastic_spark.wand import exhaustive_or
+
+    _, _, qe, _, _ = built
+    rng = np.random.default_rng(11)
+    n_ids = 5_000_000
+    raws = {}
+    for term, df in (("big", 2_000_000), ("mid", 50_000), ("rare", 100)):
+        ids = np.sort(rng.choice(n_ids, df, replace=False)).astype(np.uint64)
+        raws[term] = RawPostings(
+            term, ids, rng.uniform(0.5, 2.0, df),
+            float(codec.bm25_idf(n_ids, df)), presorted=True,
+        )
+
+    def no_wand(*args, **kwargs):
+        raise AssertionError("algo='auto' ran block-max WAND")
+
+    monkeypatch.setattr(
+        SnapshotState, "lookup_raw",
+        lambda self, uniq: {t: raws[t] for t in uniq},
+    )
+    monkeypatch.setattr(query, "wand_topk", no_wand)
+    res = qe.search(list(raws), "or", 10)
+    assert res.wand is None
+    st = qe.pin()
+    ids, scores = exhaustive_or(
+        [st.sorted_postings(r) for r in raws.values()], 10
+    )
+    assert res.doc_ids.tobytes() == ids.tobytes()
+    assert res.scores.tobytes() == scores.tobytes()
 
 
 def test_dense_equals_sorted_on_real_corpus(built):

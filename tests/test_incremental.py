@@ -402,8 +402,9 @@ def test_concurrent_appends_serialize_without_id_collision(spark, tmp_path):
 
 
 def test_empty_append_changes_no_answer(spark, tmp_path):
-    """An empty increment appends empty segments: the running totals and
-    the stats row stay as they were, and every answer is bit-identical."""
+    """An empty increment commits nothing: the manifest (segment lists,
+    running totals, the stats row) stays as it was, and every answer is
+    bit-identical."""
     from excelastic_spark.corpus import CORPUS_SCHEMA
 
     store = IndexStore(str(tmp_path), "idx")
@@ -422,9 +423,12 @@ def test_empty_append_changes_no_answer(spark, tmp_path):
                 store.snapshot().stats_row(), answers)
 
     before = state()
-    IncrementalIndexer(spark, store, CFG).append_increment(
+    manifest = store.manifest()
+    rec = IncrementalIndexer(spark, store, CFG).append_increment(
         spark.createDataFrame([], CORPUS_SCHEMA)
     )
+    assert (rec["n_new_docs"], rec["new_tokens"]) == (0, 0)
+    assert store.manifest() == manifest
     assert state() == before
     assert before[0]["n_docs"] == 80
     _assert_matches_oracle(spark, store)

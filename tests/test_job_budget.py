@@ -22,7 +22,7 @@ from excelastic_spark import sharded
 from excelastic_spark.build import IndexBuilder
 from excelastic_spark.catalog import IndexStore
 from excelastic_spark.config import EngineConfig
-from excelastic_spark.corpus import synthesize_corpus
+from excelastic_spark.corpus import CORPUS_SCHEMA, synthesize_corpus
 from excelastic_spark.plans.audit import count_jobs
 from excelastic_spark.query import QueryEngine
 from excelastic_spark.streaming.incremental import IncrementalIndexer
@@ -33,9 +33,10 @@ QS = [
     (["def", "class"], "and", 10),
     (["import", "sym0100"], "or", 10),
 ]
-# jobs per call, each counting the caller's one parquet read of its input
-BUDGET = {"build": 15, "append": 16, "merge": 4, "pin": 0}
-TASK_BUDGET = {"build": 20, "append": 25, "merge": 18}
+# jobs per call, each counting the caller's one parquet read of its input;
+# an empty append runs only its validation pass
+BUDGET = {"build": 15, "append": 16, "empty_append": 3, "merge": 4, "pin": 0}
+TASK_BUDGET = {"build": 20, "append": 25, "empty_append": 3, "merge": 18}
 # the shard-parallel writer on the same 100-doc base, as 2 shards: jobs and
 # tasks per shard build (its input read included) and for the finalize
 SHARD_BUDGET = {"build_shard": 14, "finalize": 5}
@@ -47,7 +48,8 @@ REPEAT_APPEND_COMPILES = 4
 
 @pytest.fixture(scope="module")
 def inputs(spark, tmp_path_factory):
-    """Parquet inputs: a 100-doc base and two 30-doc increments."""
+    """Parquet inputs: a 100-doc base, two 30-doc increments and an empty
+    one."""
     root = tmp_path_factory.mktemp("inputs")
     paths = {}
     for name, n, seed in (("base", 100, 42), ("inc1", 30, 7), ("inc2", 30, 8)):
@@ -55,6 +57,8 @@ def inputs(spark, tmp_path_factory):
         synthesize_corpus(spark, n, seed=seed, partitions=2).withColumn(
             "path", F.concat(F.lit(f"{name}/"), F.col("path"))
         ).write.parquet(paths[name])
+    paths["empty"] = str(root / "empty")
+    spark.createDataFrame([], CORPUS_SCHEMA).write.parquet(paths["empty"])
     return paths
 
 
@@ -91,6 +95,10 @@ def test_write_job_budgets(spark, tmp_path, inputs):
         # the first pin after a commit builds the new state job-free
         _, n, _ = count_jobs(spark, qe.pin)
         assert n == BUDGET["pin"], n
+    _, n, t = count_jobs(spark, lambda: inc.append_increment(
+        spark.read.parquet(inputs["empty"])))
+    assert n <= BUDGET["empty_append"], n
+    assert t <= TASK_BUDGET["empty_append"], t
     _, n, t = count_jobs(spark, inc.merge_segments)
     assert n <= BUDGET["merge"], n
     assert t <= TASK_BUDGET["merge"], t
